@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -71,7 +73,7 @@ object Bench {
     // it here rebinds every subsequent non-AQE plan.
     if (!sys.env.contains("SPARK_GRAFT_SHUFFLE")) {
       val factRows = try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-        catch { case _: Throwable => 0L }
+        catch { case NonFatal(_) => 0L }
       val derived = graft.ops.Skew.suggestedShufflePartitions(
         factRows, avgRowBytes = 128L, cores = cpus.toInt)
       spark.conf.set("spark.sql.shuffle.partitions", derived.toString)
@@ -99,7 +101,7 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
       graft.dedup.Dedup.minHashSignatures(docsW, "text", "doc_id")
         .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
     // optional args: substrings of query names to run (dev profiling);
     // no args = full suite (the driver's mode)
@@ -115,7 +117,7 @@ object Bench {
       // measured plan. The noop write evaluates every output column and
       // discards the rows, which is the honest per-operator cost.
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         failed += name
         System.err.println(s"[bench] $name FAILED: $e")
       }
@@ -191,7 +193,7 @@ object Bench {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
       System.err.println(s"[bench] wrote $outPath")
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $outPath: $e")
     }
     // the canonical one-line JSON, last on stdout (see contract fix note)

@@ -132,7 +132,8 @@ object Dedup {
     * re-shingles and re-hashes the full reference every run, untenable
     * when the reference is 100 TB and the batch is a day's crawl).
     * Band rows ride partitioned by `band_idx` (16 independent
-    * band-parallel sub-indexes). */
+    * band-parallel sub-indexes), one file per band whatever the input
+    * partitioning ([[graft.sim.IvfIndex.writeByKey]]). */
   def saveLshIndex(docs: DataFrame, textCol: String, idCol: String,
       path: String, numPerm: Int = 64, bands: Int = 16, rows: Int = 4): Unit = {
     requireBandGeometry(numPerm, bands, rows)
@@ -142,9 +143,10 @@ object Dedup {
     // band from the WRITTEN signatures: one signature computation total,
     // and the two files are guaranteed consistent
     val persisted = spark.read.parquet(s"$path/sigs")
-    bandKeys(persisted, idCol, bands, rows)
-      .select(col(idCol), col("band_idx"), col("band_hash"))
-      .write.partitionBy("band_idx").mode("overwrite").parquet(s"$path/bands")
+    graft.sim.IvfIndex.writeByKey(
+      bandKeys(persisted, idCol, bands, rows)
+        .select(col(idCol), col("band_idx"), col("band_hash")),
+      "band_idx", s"$path/bands", org.apache.spark.sql.SaveMode.Overwrite)
     // hash-family parameters ride WITH the index: probing with different
     // ones computes band hashes over different signature slices and
     // silently finds (almost) nothing — a total dedup miss, not an error
@@ -170,9 +172,10 @@ object Dedup {
         minHashSignatures(newDocs, textCol, idCol, numPerm))
       .localCheckpoint() // one signature pass feeds both files
     sigs.write.mode("append").parquet(s"$path/sigs")
-    bandKeys(sigs, idCol, bands, rows)
-      .select(col(idCol), col("band_idx"), col("band_hash"))
-      .write.partitionBy("band_idx").mode("append").parquet(s"$path/bands")
+    graft.sim.IvfIndex.writeByKey(
+      bandKeys(sigs, idCol, bands, rows)
+        .select(col(idCol), col("band_idx"), col("band_hash")),
+      "band_idx", s"$path/bands", org.apache.spark.sql.SaveMode.Append)
   }
 
   /** Probe a [[saveLshIndex]] index with a new batch: candidates are
@@ -451,17 +454,6 @@ object Dedup {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager = true)
     else df.localCheckpoint(eager = true)
-  }
-
-  /** q119's per-process index paths, each registered once for
-    * delete-on-exit (a fresh JVM per bench/verify run would otherwise
-    * leak one index copy per invocation into the temp dir). */
-  private val q119CleanupPaths = scala.collection.mutable.HashSet.empty[String]
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRecursively)
-    f.delete(); ()
   }
 
   /** SimHash as a table: explode tokens → 64 codegen'd ±1 sums with
@@ -1238,6 +1230,16 @@ object Dedup {
   // Connected components — pair list → dedup clusters
   // ---------------------------------------------------------------------
 
+  // Per-round shape of [[connectedComponents]], at the measured knees
+  // (see the in-loop notes): pointer jumps and neighbor-min edge-hops per
+  // materialized generation, and the vertex count up to which the label
+  // table is broadcast ((long, long) rows, ~25 B each → ~100 MB). Hops
+  // must stay >= 1: zero hops would converge on the pointer-jump fixpoint
+  // without ever propagating labels across an edge.
+  private val CcJumpsPerRound = 2
+  private val CcHopsPerRound = 1
+  private val CcBroadcastMaxVertices = 4000000L
+
   /** Connected components over a near-dup pair list: the step every real
     * dedup pipeline runs AFTER pair generation — duplicates are
     * transitive in practice (A≈B, B≈C ⇒ drop two of three), so pairs
@@ -1278,21 +1280,6 @@ object Dedup {
     // when the session has a checkpoint dir (production clusters —
     // survives executor loss), local otherwise.
     def materialize(df: DataFrame): DataFrame = checkpointLeaf(df)
-    // jumps and edge-hops per materialized generation — dev-tunable for
-    // round-count experiments (GRAFT_CC_JUMPS / GRAFT_CC_HOPS),
-    // defaulting to the measured knees (see the in-loop notes)
-    val ccJumpsPerRound =
-      sys.env.get("GRAFT_CC_JUMPS").map(_.toInt).getOrElse(2)
-    val ccHopsPerRound =
-      sys.env.get("GRAFT_CC_HOPS").map(_.toInt).getOrElse(1)
-    // hops = 0 would be a SILENT corruption, not a slowdown: the loop
-    // would converge on the pointer-jump fixpoint without ever
-    // propagating labels across an edge — separate components reported
-    // for connected vertices, converged=true, no warning. (jumps = 0
-    // by contrast is merely slower.)
-    require(ccHopsPerRound >= 1,
-      s"GRAFT_CC_HOPS=$ccHopsPerRound must be >= 1 — zero hops never " +
-        "propagates labels across edges and converges on wrong components")
     // Per-generation checkpoints are EAGER, and their captured origin
     // stats are DROPPED. Two distinct per-round compounding traps live
     // here, both invisible at sf0.1's 5 rounds and fatal at sf10's 12:
@@ -1351,7 +1338,6 @@ object Dedup {
     // union branch that used to carry it re-evaluated the whole jumped
     // subtree a second time every round; |V| extra edge rows buy its
     // removal once.
-    val tE0 = System.nanoTime()
     val edges = materialize(
       pairs.select(explode(array(
         struct(col(idACol).cast("long").as("src"), col(idBCol).cast("long").as("dst")),
@@ -1361,16 +1347,13 @@ object Dedup {
         .as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
         .distinct())
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(f"[cc] edges: ${(System.nanoTime() - tE0) / 1e9}%.2fs")
-    val tI0 = System.nanoTime()
     var (labels, prevSum, nVertices) = materializeGenWithSum(
       edges.groupBy("src").agg(min(col("dst")).as("_mn"))
         .select(col("src").as("id"), least(col("src"), col("_mn")).as("label")))
     // every id persists through every generation, so the vertex count —
     // free as an observe metric on the init job — is CONSTANT and the
     // broadcast decision below is made once. (long, long) label rows are
-    // ~25 B broadcast-serialized; the 4M default caps the broadcast at
+    // ~25 B broadcast-serialized; the 4M cap bounds the broadcast at
     // ~100 MB. At 100 TB vertex counts the loop falls back to the
     // shuffle-join form — same plans as before, just bigger.
     // On the RELIABLE checkpoint path Dataset.checkpoint(eager = true)
@@ -1382,15 +1365,10 @@ object Dedup {
     // over a (long, long) table, never repeated per round.
     if (labels.sparkSession.sparkContext.getCheckpointDir.isDefined)
       nVertices = labels.count()
-    val ccBroadcastLabels = nVertices <=
-      sys.env.get("GRAFT_CC_BCAST_MAX").map(_.toLong).getOrElse(4000000L)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(f"[cc] init: ${(System.nanoTime() - tI0) / 1e9}%.2fs" +
-        s" vertices=$nVertices bcast=$ccBroadcastLabels")
+    val ccBroadcastLabels = nVertices <= CcBroadcastMaxVertices
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      val tR0 = System.nanoTime()
       // POINTER JUMPS first: label(v) ← label^(J+1)(v). A label is
       // always itself a vertex id of the same component, so each
       // self-join against the generation leaf resolves one level of
@@ -1413,7 +1391,7 @@ object Dedup {
       // table (measured ~0.65 s/round at sf10 1:100, BASELINE r12)
       def maybeBcast(df: DataFrame): DataFrame =
         if (ccBroadcastLabels) broadcast(df) else df
-      val jumped = (1 to ccJumpsPerRound).foldLeft(labels) { (acc, j) =>
+      val jumped = (1 to CcJumpsPerRound).foldLeft(labels) { (acc, j) =>
         val lookup = labels.select(col("id").as("label"),
           col("label").as(s"_l$j"))
         acc.join(maybeBcast(lookup), Seq("label"))
@@ -1426,8 +1404,7 @@ object Dedup {
       // rounds (standing 12→8, recompute 12→8) but each fused round
       // cost ~1.7× a single-hop one, a wash or worse once the
       // self-loop + broadcast forms below made single-hop rounds
-      // cheap — so the default is 1 and the knob stays for graphs
-      // whose wave depth dominates. The convergence sum rides the
+      // cheap — so H is 1. The convergence sum rides the
       // SAME job as an observe() metric — one Spark job per round,
       // nothing else. Sum-unchanged still detects the fixpoint
       // exactly: labels only ever decrease, so an unchanged sum
@@ -1436,15 +1413,12 @@ object Dedup {
       // join, so the hop is join→groupBy alone — no union branch, the
       // jumped subtree evaluates exactly once (as the broadcast input
       // below the gate)
-      val hopped = (1 to ccHopsPerRound).foldLeft(jumped) { (acc, _) =>
+      val hopped = (1 to CcHopsPerRound).foldLeft(jumped) { (acc, _) =>
         edges.join(maybeBcast(acc), edges("dst") === acc("id"))
           .select(edges("src").as("id"), col("label"))
           .groupBy("id").agg(min("label").as("label"))
       }
       val (next, nextSum, _) = materializeGenWithSum(hopped)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] round $iter%d:" +
-          f" build+sum ${(System.nanoTime() - tR0) / 1e9}%.2fs")
       labels = next
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
@@ -1741,21 +1715,7 @@ object Dedup {
     // replays candidates as slice equality over both sides' signatures
     "q119_lsh_index_probe" -> { (s, d) =>
       val docs = Tables(s, d, "documents")
-      // deterministic per-sf AND per-process path, overwritten on each
-      // run within a JVM — a fresh temp dir per invocation would
-      // accumulate a full index copy per bench/verify loop, while a
-      // path keyed on the sf dir alone let two concurrent JVMs (bench +
-      // verify on the same sf — the documented bench-contention
-      // environment) overwrite each other's sigs/bands mid-query
-      val path = s"${sys.props("java.io.tmpdir")}/graft_q119_idx_" +
-        java.lang.Integer.toHexString(d.hashCode) + "_" +
-        java.lang.ProcessHandle.current().pid()
-      // per-process paths would otherwise leak one index copy per JVM
-      // (every bench/verify invocation is a fresh pid) — delete on exit
-      q119CleanupPaths.synchronized {
-        if (q119CleanupPaths.add(path)) Runtime.getRuntime.addShutdownHook(
-          new Thread(() => deleteRecursively(new java.io.File(path))))
-      }
+      val path = graft.FsUtil.indexScratchDir("q119", d)
       saveLshIndex(docs.filter(col("doc_id") % 10 =!= 0), "text", "doc_id", path)
       probeLshIndex(s, path, docs.filter(col("doc_id") % 10 === 0),
           "text", "doc_id", threshold = 0.3)

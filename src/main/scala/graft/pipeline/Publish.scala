@@ -123,13 +123,7 @@ object Publish {
     val keepSet = listVersions(root, table).sorted(Ordering[String].reverse)
       .take(keep).toSet ++ currentVersion(root, table).toSet
     val drop = listVersions(root, table).filterNot(keepSet.contains)
-    drop.foreach { v =>
-      def rm(p: Path): Unit = {
-        if (Files.isDirectory(p)) Files.list(p).iterator.asScala.toSeq.foreach(rm)
-        Files.deleteIfExists(p)
-      }
-      rm(Paths.get(snapshotDir(root, table, v)))
-    }
+    drop.foreach(v => graft.FsUtil.deleteRecursively(Paths.get(snapshotDir(root, table, v))))
     drop.sorted
   }
 
@@ -143,11 +137,7 @@ object Publish {
     val tmp = dir.resolve("tmp_data")
     val fin = dir.resolve("data")
     df.write.mode("overwrite").parquet(tmp.toString)
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p)) Files.list(p).iterator.asScala.toSeq.foreach(rm)
-      Files.deleteIfExists(p)
-    }
-    rm(fin)
+    graft.FsUtil.deleteRecursively(fin)
     Files.move(tmp, fin, StandardCopyOption.ATOMIC_MOVE)
   }
 }

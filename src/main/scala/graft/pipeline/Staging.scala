@@ -79,13 +79,5 @@ object Staging {
     spark.read.parquet(dataPath(dir))
 
   /** E7 staging cleanup. */
-  def cleanup(dir: String): Unit = {
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p))
-        Files.list(p).forEach(rm)
-      Files.deleteIfExists(p)
-    }
-    val p = Paths.get(dir)
-    if (Files.exists(p)) rm(p)
-  }
+  def cleanup(dir: String): Unit = graft.FsUtil.deleteRecursively(Paths.get(dir))
 }

@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorFunctions.vec_dot
@@ -142,9 +142,8 @@ object IvfIndex {
 
   /** The persisted float centroid relation as the double matrix the
     * assignment expression wants — index == cell (rows are dense
-    * 0..nlist-1 by construction). Shared by both append paths so the
-    * IVF and IVF∘PQ layouts can never drift on assignment discipline. */
-  private[sim] def centroidMatrix(centroids: DataFrame): Array[Array[Double]] =
+    * 0..nlist-1 by construction). */
+  private def centroidMatrix(centroids: DataFrame): Array[Array[Double]] =
     centroids.orderBy("cell").collect()
       .map(r => r.getSeq[Float](r.fieldIndex("centroid")).map(_.toDouble).toArray)
 
@@ -179,74 +178,130 @@ object IvfIndex {
       .filter(col("probe_rank") <= nprobe)
       .select("query_id", "q_vec", "cell")
 
+  /** Top-k cosine over the probed cells; `cells` carries the corpus id
+    * already renamed to `neighbor_id` (the [[probeCells]] output shape). */
   private def topKInProbedCells(cells: DataFrame, probes: DataFrame,
-      idCol: String, vecCol: String, k: Int): DataFrame = {
-    val wTop = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    broadcast(probes)
-      .join(cells.withColumnRenamed(idCol, "neighbor_id"), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", Similarity.cosine(col("q_vec"), col(vecCol)))
-      .withColumn("rnk", row_number().over(wTop).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "cos")
-  }
+      vecCol: String, k: Int): DataFrame =
+    PqIndex.topKByCos(
+      broadcast(probes).join(cells, Seq("cell"))
+        .filter(col("query_id") =!= col("neighbor_id"))
+        .withColumn("cos", Similarity.cosine(col("q_vec"), col(vecCol))), k)
 
   /** Top-k cosine neighbors per query, probing `nprobe` cells. */
   def search(model: Model, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int): DataFrame =
-    topKInProbedCells(model.cells, probesFor(model.centroids, queries, idCol, vecCol, nprobe),
-      idCol, vecCol, k)
+    topKInProbedCells(model.cells.withColumnRenamed(idCol, "neighbor_id"),
+      probesFor(model.centroids, queries, idCol, vecCol, nprobe), vecCol, k)
 
-  /** Persist the index as parquet PARTITIONED BY cell: at scale the
-    * "index" is just a directory layout, and a probe becomes a
-    * partition-pruned scan that never opens the other cells' files.
-    *
-    * See [[writeByCell]] for the file-per-cell discipline every
-    * cell-partitioned write in this package shares. */
-  def save(model: Model, path: String): Unit = {
-    writeByCell(model.cells, s"$path/cells", org.apache.spark.sql.SaveMode.Overwrite)
-    model.centroids.write.mode("overwrite").parquet(s"$path/centroids")
+  // ------------------------------------------------ persisted cell layout
+  //
+  // ONE on-disk layout serves IVF, IVF∘PQ and IVF∘SQ8: `$path/cells`
+  // holds (id, payload) rows parquet-PARTITIONED BY cell, `$path/centroids`
+  // the float coarse quantizer, and each codec adds its own params table
+  // next to them (PQ `codebook`, SQ8 `ranges`). The payload is the only
+  // codec-specific part: the raw vector, `PqIndex.codesExpr` or
+  // `SqIndex.clampedCodesExpr` — a row expression over `vecCol`. The three
+  // functions below are the whole layout: write, frozen-centroid append,
+  // and the probe-collect + static-IN pruned scan.
+
+  /** Persist the index: `payload` rows partitioned by cell plus the
+    * centroids. At scale the "index" is just a directory layout, and a
+    * probe becomes a partition-pruned scan that never opens the other
+    * cells' files. */
+  private[sim] def saveCells(ivf: Model, idCol: String, vecCol: String,
+      payload: Column, path: String): Unit = {
+    writeByKey(
+      ivf.cells.filter(col(vecCol).isNotNull)
+        .select(col(idCol), payload, col("cell")),
+      "cell", s"$path/cells", SaveMode.Overwrite)
+    ivf.centroids.write.mode("overwrite").parquet(s"$path/centroids")
   }
 
-  /** THE cell-partitioned write, shared by every IVF/IVF∘PQ layout
-    * writer so none can lose the discipline independently: the
-    * `repartition(cell)` before `partitionBy` is load-bearing at scale —
-    * cell assignment is a map stage over corpus splits, so every write
-    * task holds rows of ~every cell and a bare `partitionBy` would emit
-    * one file PER TASK PER CELL, tasks × nlist files (measured: 45,248
-    * files for 2M vectors / nlist=1414 / 32 tasks; at 10k tasks × 65k
-    * cells a dead filesystem). One shuffle keyed on `cell` lands each
-    * cell wholly inside one task → exactly one file per cell
-    * (spec-pinned in IvfIndexSpec). */
-  private[sim] def writeByCell(df: DataFrame, path: String,
-      mode: org.apache.spark.sql.SaveMode): Unit =
-    df.repartition(col("cell"))
-      .write.partitionBy("cell").mode(mode).parquet(path)
+  /** Incremental maintenance: assign NEW vectors to their nearest cell
+    * under the STORED centroids and append their payload to the layout —
+    * no retraining, no rewrite of the standing corpus (FAISS's `add` in
+    * directory form). A vector whose length differs from the stored dim
+    * fails the write: [[graft.functions.NearestCell]] would otherwise
+    * score a prefix and file it under a meaningless cell. The check rides
+    * the write's own projection, so it costs no Spark job. */
+  private[sim] def appendCells(spark: SparkSession, path: String,
+      newVectors: DataFrame, idCol: String, vecCol: String,
+      payload: Column): Unit = {
+    val centroids = centroidMatrix(spark.read.parquet(s"$path/centroids"))
+    val dim = centroids.head.length
+    val checked = newVectors.filter(col(vecCol).isNotNull)
+      .withColumn(vecCol, when(size(col(vecCol)) === dim, col(vecCol))
+        .otherwise(raise_error(concat(
+          lit(s"appended vector length does not match the index dim $dim: "),
+          size(col(vecCol)).cast("string")))))
+    writeByKey(
+      checked.select(col(idCol), payload,
+        assignExpr(col(vecCol), centroids).as("cell")),
+      "cell", s"$path/cells", SaveMode.Append)
+  }
+
+  /** Probe a persisted index with STATIC partition pruning: the union of
+    * all queries' probe cells (≤ nlist values, independent of query
+    * count) is collected ONCE and pushed as a literal IN filter, so the
+    * parquet scan lists only the probed cell directories — the 100 TB
+    * path where nprobe/nlist of the corpus is read, verifiable as
+    * `PartitionFilters` in the plan. Returns the probe rows
+    * (query_id, q_vec, cell) as a local relation — bounded by
+    * |queries| × nprobe, it feeds both the IN filter and the broadcast
+    * join, and a local list avoids the persist-without-unpersist leak a
+    * cached two-consumer plan would carry — and the pruned cell scan
+    * with the corpus id renamed to `neighbor_id`. */
+  private[sim] def probeCells(spark: SparkSession, path: String,
+      queries: DataFrame, idCol: String, vecCol: String,
+      nprobe: Int): (DataFrame, DataFrame) = {
+    val probesPlan = probesFor(spark.read.parquet(s"$path/centroids"),
+      queries, idCol, vecCol, nprobe)
+    val probeRows = probesPlan.collect()
+    val probedCells = probeRows.map(_.getAs[Int]("cell")).distinct.toSeq
+    val probes = spark.createDataFrame(
+      java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
+    val pruned = spark.read.parquet(s"$path/cells")
+      .filter(col("cell").isin(probedCells.map(Int.box): _*))
+      .withColumnRenamed(idCol, "neighbor_id")
+    (probes, pruned)
+  }
+
+  /** THE partitioned write, shared by every cell layout and the LSH
+    * index's band rows so none can lose the discipline independently:
+    * the `repartition(key)` before `partitionBy` is load-bearing at
+    * scale — the key is computed by a map stage over corpus splits, so
+    * every write task holds rows of ~every key and a bare `partitionBy`
+    * would emit one file PER TASK PER KEY, tasks × nlist files
+    * (measured: 45,248 files for 2M vectors / nlist=1414 / 32 tasks; at
+    * 10k tasks × 65k cells a dead filesystem). One shuffle on the key
+    * lands each key wholly inside one task → exactly one file per key
+    * (spec-pinned in IvfIndexSpec and OperatorsSpec). */
+  private[graft] def writeByKey(df: DataFrame, key: String, path: String,
+      mode: SaveMode): Unit =
+    df.repartition(col(key))
+      .write.partitionBy(key).mode(mode).parquet(path)
+
+  /** Persist a raw-vector IVF index ([[saveCells]] with the vector itself
+    * as payload). `model.cells` is (id, vector, cell), as [[build]] and
+    * [[load]] produce it. */
+  def save(model: Model, path: String): Unit = {
+    val idCol = model.cells.columns.head
+    val vecCol = model.cells.columns(1)
+    saveCells(model, idCol, vecCol, col(vecCol), path)
+  }
 
   def load(spark: SparkSession, path: String): Model = {
     val centroids = spark.read.parquet(s"$path/centroids")
     Model(spark.read.parquet(s"$path/cells"), centroids, centroids.count().toInt)
   }
 
-  /** Incremental index maintenance: assign NEW vectors to their nearest
-    * cell under the EXISTING centroids and append them to the
-    * cell-partitioned layout — no retraining, no rewrite of the standing
-    * corpus (at a 100 TB embedding store, rebuilding the index per
-    * arriving batch is a non-starter; this is FAISS's `add` in directory
-    * form). Appended vectors are immediately visible to
-    * [[searchIndexed]] through the same partition-pruned scans. The
-    * quantizer slowly staleness-drifts as the distribution moves — the
-    * standard IVF trade; retrain with [[build]] when recall decays. */
+  /** Append new raw vectors under the frozen centroids ([[appendCells]]);
+    * immediately visible to [[searchIndexed]]. The quantizer slowly
+    * staleness-drifts as the distribution moves — the standard IVF
+    * trade; retrain with [[build]] when recall decays. */
   def append(spark: SparkSession, path: String, newVectors: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val model = load(spark, path)
-    val centroids = centroidMatrix(model.centroids)
-    writeByCell(
-      newVectors.filter(col(vecCol).isNotNull)
-        .select(col(idCol), col(vecCol),
-          assignExpr(col(vecCol), centroids).as("cell")),
-      s"$path/cells", org.apache.spark.sql.SaveMode.Append)
-  }
+      idCol: String, vecCol: String): Unit =
+    appendCells(spark, path, newVectors, idCol, vecCol, col(vecCol))
 
   /** Cell-occupancy statistics of a PERSISTED index — the maintenance
     * advisor's input ([[append]] adds vectors under frozen centroids
@@ -304,26 +359,10 @@ object IvfIndex {
     occupancyStats(spark, path).head().getAs[Double]("imbalance") >
       imbalanceThreshold
 
-  /** Search a persisted index with STATIC partition pruning: the union of
-    * all queries' probe cells (≤ nlist values, independent of query
-    * count) is collected and pushed as a literal IN filter, so the
-    * parquet scan lists only the probed cell directories — the
-    * 100 TB path where nprobe/nlist of the corpus is read, verifiable as
-    * `PartitionFilters` in the plan. */
+  /** Search a persisted index through the pruned [[probeCells]] scan. */
   def searchIndexed(spark: SparkSession, path: String, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
-    val model = load(spark, path)
-    val probesPlan = probesFor(model.centroids, queries, idCol, vecCol, nprobe)
-    // materialize the probe set driver-side ONCE — it is bounded by
-    // |queries| × nprobe (the probe side is broadcast anyway, so queries
-    // are small by contract) and feeds both the static IN filter and the
-    // broadcast join input; a local list avoids the persist-without-
-    // unpersist leak a cached two-consumer plan would carry
-    val probeRows = probesPlan.collect()
-    val probedCells = probeRows.map(_.getAs[Int]("cell")).distinct.toSeq
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
-    val pruned = model.cells.filter(col("cell").isin(probedCells.map(Int.box): _*))
-    topKInProbedCells(pruned, probes, idCol, vecCol, k)
+    val (probes, cells) = probeCells(spark, path, queries, idCol, vecCol, nprobe)
+    topKInProbedCells(cells, probes, vecCol, k)
   }
 }

@@ -193,6 +193,16 @@ object PqIndex {
         (col("adist_fp").cast("double") / lit(1e9)).as("adist"))
   }
 
+  /** Per-query top-k over `(query_id, neighbor_id, cos)` rows by
+    * descending cosine, ties by lowest neighbor id — THE ranking every
+    * exact-cosine search path ends in. */
+  private[sim] def topKByCos(cand: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
+    cand.withColumn("rnk", row_number().over(w).cast("long"))
+      .filter(col("rnk") <= k)
+      .select("query_id", "rnk", "neighbor_id", "cos")
+  }
+
   /** ADC top-k: broadcast the queries (each carrying its distance-table
     * literal plan), stream the CODE column of the corpus once — per
     * pair, `m` array lookups and an exact long sum; the only shuffle is
@@ -277,19 +287,12 @@ object PqIndex {
     * everything the ADC pass emitted, recall 1.0 by construction. */
   def suggestedShortlist(cb: Codebook, codes: DataFrame, corpus: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      ladder: Seq[Int], targetRecall: Double): Int = {
-    require(targetRecall > 0.0 && targetRecall <= 1.0,
-      s"targetRecall=$targetRecall must be in (0, 1]")
-    val qualifying = shortlistRecallCurve(cb, codes, corpus, queries, idCol,
-        vecCol, k, ladder)
-      .collect()
-      .filter(_.getAs[Double]("recall") >= targetRecall)
-      .map(_.getAs[Int]("shortlist"))
-    require(qualifying.nonEmpty,
-      s"no ladder step reaches recall $targetRecall — the rule is only " +
-        "total when the ladder ends at the candidate count (shortlistLadder)")
-    qualifying.min
-  }
+      ladder: Seq[Int], targetRecall: Double): Int =
+    Similarity.smallestStepReaching(shortlistRecallCurve(cb, codes, corpus,
+        queries, idCol, vecCol, k, ladder), "shortlist", targetRecall)
+      .getOrElse(throw new IllegalArgumentException(
+        s"no ladder step reaches recall $targetRecall — the rule is only " +
+          "total when the ladder ends at the candidate count (shortlistLadder)"))
 
   /** Two-stage serve: ADC shortlist of `shortlist` candidates per
     * query, then EXACT cosine re-rank of only those rows — the standard
@@ -314,12 +317,9 @@ object PqIndex {
       queries: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
     val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
     val nv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"))
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    nv.join(broadcast(short.join(qv, Seq("query_id"))), Seq("neighbor_id"))
-      .withColumn("cos", Similarity.cosine(col("q_vec"), col("n_vec")))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "cos")
+    topKByCos(
+      nv.join(broadcast(short.join(qv, Seq("query_id"))), Seq("neighbor_id"))
+        .withColumn("cos", Similarity.cosine(col("q_vec"), col("n_vec"))), k)
   }
 
   /** OPQ-style seeded orthogonal rotation (FAISS `OPQMatrix`'s random-
@@ -666,19 +666,16 @@ object PqIndex {
       IvfIndex.probesFor(ivf.centroids, queries, idCol, vecCol, nprobe), k)
   }
 
-  /** Persist the composed index: PQ codes partitioned by IVF cell (the
-    * 100 TB layout — a probe is a partition-pruned scan over files
-    * 16-32× smaller than the vectors they stand for), plus the coarse
-    * centroids and the codebook (both KiB). */
+  /** Persist the composed index: PQ codes in the shared cell layout
+    * ([[IvfIndex.saveCells]] — a probe is a partition-pruned scan over
+    * files 16-32× smaller than the vectors they stand for), plus the
+    * codebook (KiB). */
   def saveIvfPq(ivf: IvfIndex.Model, cb: Codebook, idCol: String,
       vecCol: String, path: String): Unit = {
     val spark = ivf.cells.sparkSession
     import spark.implicits._
-    IvfIndex.writeByCell(
-      ivf.cells.filter(col(vecCol).isNotNull)
-        .select(col(idCol), codesExpr(cb, col(vecCol)).as("codes"), col("cell")),
-      s"$path/codes", org.apache.spark.sql.SaveMode.Overwrite)
-    ivf.centroids.write.mode("overwrite").parquet(s"$path/centroids")
+    IvfIndex.saveCells(ivf, idCol, vecCol,
+      codesExpr(cb, col(vecCol)).as("codes"), path)
     (for (j <- 0 until cb.m; c <- 0 until cb.ksub)
       yield (j, c, cb.centroids(j)(c).toSeq, cb.dim))
       .toDF("sub", "cell", "c", "dim")
@@ -699,42 +696,26 @@ object PqIndex {
   }
 
   /** Incremental maintenance of the persisted composed index: arriving
-    * vectors are cell-assigned under the EXISTING coarse centroids and
-    * PQ-encoded under the EXISTING codebook, then appended to the
-    * cell-partitioned code layout — no retraining, no rewrite of the
-    * standing codes (the [[IvfIndex.append]] discipline; at a 100 TB
-    * embedding store, re-encoding the corpus per arriving batch is a
-    * non-starter). Both quantizers staleness-drift as the distribution
-    * moves — retrain when recall decays. */
+    * vectors are cell-assigned under the STORED coarse centroids
+    * ([[IvfIndex.appendCells]]) and PQ-encoded under the STORED codebook
+    * — no retraining, no rewrite of the standing codes. Both quantizers
+    * staleness-drift as the distribution moves — retrain when recall
+    * decays. */
   def appendIvfPq(spark: org.apache.spark.sql.SparkSession, path: String,
-      newVectors: DataFrame, idCol: String, vecCol: String): Unit = {
-    val cb = loadCodebook(spark, path)
-    val centroids = IvfIndex.centroidMatrix(spark.read.parquet(s"$path/centroids"))
-    IvfIndex.writeByCell(
-      newVectors.filter(col(vecCol).isNotNull)
-        .select(col(idCol), codesExpr(cb, col(vecCol)).as("codes"),
-          nearest_cell(col(vecCol), centroids).as("cell")),
-      s"$path/codes", org.apache.spark.sql.SaveMode.Append)
-  }
+      newVectors: DataFrame, idCol: String, vecCol: String): Unit =
+    IvfIndex.appendCells(spark, path, newVectors, idCol, vecCol,
+      codesExpr(loadCodebook(spark, path), col(vecCol)).as("codes"))
 
-  /** Search a persisted IVF∘PQ index with STATIC partition pruning: the
-    * union of probe cells becomes a literal IN filter (the
-    * [[IvfIndex.searchIndexed]] discipline), so the parquet scan lists
-    * only the probed cell directories AND reads only the code column —
-    * the full memory-and-I/O path of a production ANN serve. */
+  /** Search a persisted IVF∘PQ index through the statically pruned
+    * [[IvfIndex.probeCells]] scan: only the probed cell directories are
+    * listed and only the code column is read — the full memory-and-I/O
+    * path of a production ANN serve. */
   def searchIndexedIvfAdc(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       nprobe: Int): DataFrame = {
-    val centroids = spark.read.parquet(s"$path/centroids")
     val cb = loadCodebook(spark, path)
-    val probesPlan = IvfIndex.probesFor(centroids, queries, idCol, vecCol, nprobe)
-    val probeRows = probesPlan.collect()
-    val probedCells = probeRows.map(_.getAs[Int]("cell")).distinct.toSeq
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
-    val cellCodes = spark.read.parquet(s"$path/codes")
-      .filter(col("cell").isin(probedCells.map(Int.box): _*))
-      .withColumnRenamed(idCol, "neighbor_id")
+    val (probes, cellCodes) =
+      IvfIndex.probeCells(spark, path, queries, idCol, vecCol, nprobe)
     adcOverCells(cellCodes, cb, probes, k)
   }
 }

@@ -18,16 +18,6 @@ import graft.sources.Tables
   */
 object Similarity {
 
-  /** Per-process index paths for queries that exercise the persisted
-    * layouts (q180), each registered once for delete-on-exit — a fresh
-    * JVM per bench/verify run would otherwise leak one index copy per
-    * invocation into the temp dir (the q119 discipline). */
-  private val indexCleanupPaths = scala.collection.mutable.HashSet.empty[String]
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRecursively)
-    f.delete(); ()
-  }
   type Q = (SparkSession, String) => DataFrame
 
   /** Run two INDEPENDENT eager model fits as concurrent Spark jobs
@@ -78,12 +68,8 @@ object Similarity {
       vecCol: String, k: Int): DataFrame = {
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec")))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("q_vec"), col("c_vec")))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "cos")
+    PqIndex.topKByCos(q.join(c, col("query_id") =!= col("neighbor_id"))
+      .withColumn("cos", cosine(col("q_vec"), col("c_vec"))), k)
   }
 
   /** Unit-normalize an embedding column (x / ‖x‖, re-cast to float) —
@@ -212,6 +198,20 @@ object Similarity {
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), curve.schema)
   }
 
+  /** THE ladder sizing rule every `suggested*` shares: the smallest step
+    * of `curve` (a materialized `*RecallCurve`) whose pooled recall@k
+    * reaches `targetRecall`, or None when no step does. The target is
+    * checked before the curve is computed. */
+  private[sim] def smallestStepReaching(curve: => DataFrame, stepCol: String,
+      targetRecall: Double): Option[Int] = {
+    require(targetRecall > 0.0 && targetRecall <= 1.0,
+      s"targetRecall=$targetRecall must be in (0, 1]")
+    val qualifying = curve.collect()
+      .filter(_.getAs[Double]("recall") >= targetRecall)
+      .map(_.getAs[Int](stepCol))
+    if (qualifying.isEmpty) None else Some(qualifying.min)
+  }
+
   /** Pooled recall@k of the IVF probe at each ladder step — the
     * RECALL-side companion of the cost-side sizing rules
     * ([[IvfIndex.suggestedNlist]], [[suggestedLshBits]],
@@ -278,24 +278,16 @@ object Similarity {
     * cross-engine). */
   def suggestedNprobe(model: IvfIndex.Model, queries: DataFrame,
       corpus: DataFrame, idCol: String, vecCol: String, k: Int,
-      targetRecall: Double): Int = {
-    require(targetRecall > 0.0 && targetRecall <= 1.0,
-      s"targetRecall=$targetRecall must be in (0, 1]")
-    val qualifying = ivfRecallCurve(model, queries, corpus, idCol, vecCol, k,
-        nprobeLadder(model.nlist))
-      .collect()
-      .filter(_.getAs[Double]("recall") >= targetRecall)
-      .map(_.getAs[Int]("nprobe"))
-    // totality holds only when pooled recall is well-defined: an EMPTY
-    // query set (or a corpus with no eligible neighbors) yields an
-    // empty curve — no step qualifies and a bare .min would throw an
-    // opaque UnsupportedOperationException. Name the misconfiguration.
-    require(qualifying.nonEmpty,
-      "no nprobe step qualifies — the query set is empty or has no " +
-        "eligible neighbors (pooled recall undefined); the rule is only " +
-        "total over a non-empty calibration query set")
-    qualifying.min
-  }
+      targetRecall: Double): Int =
+    smallestStepReaching(ivfRecallCurve(model, queries, corpus, idCol,
+        vecCol, k, nprobeLadder(model.nlist)), "nprobe", targetRecall)
+      // totality holds only when pooled recall is well-defined: an EMPTY
+      // query set (or a corpus with no eligible neighbors) yields an
+      // empty curve and no step qualifies. Name the misconfiguration.
+      .getOrElse(throw new IllegalArgumentException(
+        "no nprobe step qualifies — the query set is empty or has no " +
+          "eligible neighbors (pooled recall undefined); the rule is only " +
+          "total over a non-empty calibration query set"))
 
   /** Pooled recall@k of the multi-table LSH stack at each table count
     * 1..maxTables — [[ivfRecallCurve]]'s sibling for the OR-amplified
@@ -349,16 +341,9 @@ object Similarity {
     * ladder table, ≤ maxTables ≤ 16 rows. */
   def suggestedLshTables(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, k: Int, dim: Int, bits: Int, maxTables: Int,
-      targetRecall: Double): Option[Int] = {
-    require(targetRecall > 0.0 && targetRecall <= 1.0,
-      s"targetRecall=$targetRecall must be in (0, 1]")
-    val qualifying = lshRecallCurve(queries, corpus, idCol, vecCol, k, dim,
-        bits, maxTables)
-      .collect()
-      .filter(_.getAs[Double]("recall") >= targetRecall)
-      .map(_.getAs[Int]("tables"))
-    if (qualifying.isEmpty) None else Some(qualifying.min)
-  }
+      targetRecall: Double): Option[Int] =
+    smallestStepReaching(lshRecallCurve(queries, corpus, idCol, vecCol, k,
+      dim, bits, maxTables), "tables", targetRecall)
 
   /** Metadata-filtered vector search — the production serve shape ("top-k
     * among documents matching this tenant / language / date range").
@@ -398,12 +383,8 @@ object Similarity {
     // single-table candidates are duplicate-free by construction (a
     // neighbor lives in exactly one bucket per table and multiprobe
     // buckets are distinct XORs), so no dedup stage before the ranking
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    lshCandidateScan(queries, corpus, idCol, vecCol, dim, bits,
-        tables = 1, multiprobe = multiprobe)
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "cos")
+    PqIndex.topKByCos(lshCandidateScan(queries, corpus, idCol, vecCol, dim,
+      bits, tables = 1, multiprobe = multiprobe), k)
   }
 
   /** THE LSH candidate generation, shared by [[lshTopK]] (tables = 1),
@@ -496,15 +477,12 @@ object Similarity {
   def lshTopKTables(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, k: Int, dim: Int, bits: Int = 4, tables: Int = 2,
       multiprobe: Boolean = true): DataFrame = {
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    lshCandidateScan(queries, corpus, idCol, vecCol, dim, bits, tables, multiprobe)
-      // dedup across tables/probes BEFORE ranking: a pair's cosine is
-      // the same wherever it surfaced, so max() is pure dedup
-      .groupBy("query_id", "neighbor_id")
-      .agg(max(col("cos")).as("cos"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "cos")
+    PqIndex.topKByCos(
+      lshCandidateScan(queries, corpus, idCol, vecCol, dim, bits, tables, multiprobe)
+        // dedup across tables/probes BEFORE ranking: a pair's cosine is
+        // the same wherever it surfaced, so max() is pure dedup
+        .groupBy("query_id", "neighbor_id")
+        .agg(max(col("cos")).as("cos")), k)
   }
 
   /** `bits` sizing for the LSH pair scans: per-bucket population is
@@ -625,11 +603,7 @@ object Similarity {
       .unionByName(dups.select(col("id_b").as("query_id"), col("id_a").as("neighbor_id")))
     val fetched = bruteForceTopK(queries, corpus, idCol, vecCol, k + overFetch)
       .join(mask, Seq("query_id", "neighbor_id"), "left_anti")
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    fetched
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select("query_id", "rnk", "neighbor_id", "cos")
+    PqIndex.topKByCos(fetched, k)
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup at
@@ -972,12 +946,7 @@ object Similarity {
     "q180_ann_occupancy_skew" -> { (s, d) =>
       val emb = Tables(s, d, "embeddings")
       val model = IvfIndex.build(emb, "vec_id", "embedding", nlist = 8)
-      val path = java.nio.file.Files.createTempDirectory("graft_q180")
-        .toString
-      indexCleanupPaths.synchronized {
-        if (indexCleanupPaths.add(path)) Runtime.getRuntime.addShutdownHook(
-          new Thread(() => deleteRecursively(new java.io.File(path))))
-      }
+      val path = graft.FsUtil.indexScratchDir("q180", d)
       IvfIndex.save(model, path)
       IvfIndex.append(s, path,
         emb.select((col("vec_id") + 1000000L).as("vec_id"),

@@ -135,27 +135,29 @@ object SqIndex {
     val cellCodes = ivf.cells.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("neighbor_id"), col("cell"),
         codesExpr(m, col(vecCol)).as("codes"))
-    val probes = IvfIndex.probesFor(ivf.centroids, queries, idCol, vecCol, nprobe)
+    sqOverCells(cellCodes, m,
+      IvfIndex.probesFor(ivf.centroids, queries, idCol, vecCol, nprobe), k)
+  }
+
+  /** The shared IVF∘SQ8 scan: probe rows (query_id, q_vec, cell) join
+    * the (neighbor_id, cell, codes) rows of their probed cells. */
+  private def sqOverCells(cellCodes: DataFrame, m: Model, probes: DataFrame,
+      k: Int): DataFrame =
     PqIndex.topKByAdc(
       cellCodes.join(broadcast(probes), Seq("cell"))
         .filter(col("query_id") =!= col("neighbor_id"))
         .withColumn("adist_fp", sqDistCol(m)), k)
-  }
 
-  /** Persist the composed index: SQ8 byte codes PARTITIONED BY IVF cell
-    * (the [[IvfIndex.writeByCell]] one-file-per-cell discipline), the
-    * coarse centroids, and the 2·dim range model — the 100 TB layout: a
+  /** Persist the composed index: SQ8 byte codes in the shared cell
+    * layout ([[IvfIndex.saveCells]]) plus the 2·dim range model — a
     * probe is a statically partition-pruned scan over files 4× smaller
     * than the vectors they stand for, reading only the code column. */
   def saveIvfSq(ivf: IvfIndex.Model, m: Model, idCol: String,
       vecCol: String, path: String): Unit = {
     val spark = ivf.cells.sparkSession
     import spark.implicits._
-    IvfIndex.writeByCell(
-      ivf.cells.filter(col(vecCol).isNotNull)
-        .select(col(idCol), codesExpr(m, col(vecCol)).as("codes"), col("cell")),
-      s"$path/codes", org.apache.spark.sql.SaveMode.Overwrite)
-    ivf.centroids.write.mode("overwrite").parquet(s"$path/centroids")
+    IvfIndex.saveCells(ivf, idCol, vecCol,
+      codesExpr(m, col(vecCol)).as("codes"), path)
     (0 until m.dim).map(d => (d, m.vmin(d), m.vdiff(d)))
       .toDF("d", "vmin", "vdiff")
       .write.mode("overwrite").parquet(s"$path/ranges")
@@ -173,49 +175,29 @@ object SqIndex {
     Model(dim, vmin, vdiff)
   }
 
-  /** Incremental maintenance: cell-assign + SQ-encode arriving vectors
-    * under the EXISTING centroids and ranges, append to the
-    * cell-partitioned layout — no retrain, standing codes untouched
-    * (the [[IvfIndex.append]] / [[PqIndex.appendIvfPq]] discipline; the
-    * same staleness trade, watched by the same
-    * [[IvfIndex.occupancyStats]] advisor). A new vector OUTSIDE a
-    * trained range still encodes total — the affine map just saturates
-    * below 0 / above 255 — so the clamp here is correctness, not
-    * cosmetics (the closed-over-training-corpus argument in
-    * [[codesExpr]] stops holding on appended data). */
+  /** Incremental maintenance: cell-assign ([[IvfIndex.appendCells]]) and
+    * SQ-encode arriving vectors under the STORED centroids and ranges —
+    * no retrain, standing codes untouched; the same staleness trade,
+    * watched by the same [[IvfIndex.occupancyStats]] advisor. A new
+    * vector OUTSIDE a trained range still encodes total — the affine map
+    * just saturates below 0 / above 255 — so the clamp here is
+    * correctness, not cosmetics (the closed-over-training-corpus
+    * argument in [[codesExpr]] stops holding on appended data). */
   def appendIvfSq(spark: org.apache.spark.sql.SparkSession, path: String,
-      newVectors: DataFrame, idCol: String, vecCol: String): Unit = {
-    val m = loadSqModel(spark, path)
-    val centroids = IvfIndex.centroidMatrix(spark.read.parquet(s"$path/centroids"))
-    IvfIndex.writeByCell(
-      newVectors.filter(col(vecCol).isNotNull)
-        .select(col(idCol), clampedCodesExpr(m, col(vecCol)).as("codes"),
-          graft.functions.VectorFunctions.nearest_cell(col(vecCol), centroids)
-            .as("cell")),
-      s"$path/codes", org.apache.spark.sql.SaveMode.Append)
-  }
+      newVectors: DataFrame, idCol: String, vecCol: String): Unit =
+    IvfIndex.appendCells(spark, path, newVectors, idCol, vecCol,
+      clampedCodesExpr(loadSqModel(spark, path), col(vecCol)).as("codes"))
 
-  /** Search a persisted IVF∘SQ8 index with STATIC partition pruning:
-    * the probe-cell union becomes a literal IN filter (the
-    * [[IvfIndex.searchIndexed]] discipline), so the scan lists only the
-    * probed cell directories and reads only the byte-code column. */
+  /** Search a persisted IVF∘SQ8 index through the statically pruned
+    * [[IvfIndex.probeCells]] scan: only the probed cell directories are
+    * listed and only the byte-code column is read. */
   def searchIndexedIvfSq(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int): DataFrame = {
-    val centroids = spark.read.parquet(s"$path/centroids")
     val m = loadSqModel(spark, path)
-    val probesPlan = IvfIndex.probesFor(centroids, queries, idCol, vecCol, nprobe)
-    val probeRows = probesPlan.collect()
-    val probedCells = probeRows.map(_.getAs[Int]("cell")).distinct.toSeq
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
-    val cellCodes = spark.read.parquet(s"$path/codes")
-      .filter(col("cell").isin(probedCells.map(Int.box): _*))
-      .withColumnRenamed(idCol, "neighbor_id")
-    PqIndex.topKByAdc(
-      cellCodes.join(broadcast(probes), Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .withColumn("adist_fp", sqDistCol(m)), k)
+    val (probes, cellCodes) =
+      IvfIndex.probeCells(spark, path, queries, idCol, vecCol, nprobe)
+    sqOverCells(cellCodes, m, probes, k)
   }
 
   // ---------------------------------------------------------------- binary
@@ -330,25 +312,5 @@ object SqIndex {
         .join(broadcast(firstStep), Seq("query_id", "neighbor_id"),
           "left_outer"),
       ladder, "shortlist"), exact)
-  }
-
-  /** The binary shortlist sizing rule: smallest ladder shortlist whose
-    * pooled recall@k reaches `targetRecall` — TOTAL when the ladder
-    * ends at the corpus count (the [[PqIndex.suggestedShortlist]]
-    * contract, same failure message discipline). */
-  def suggestedBinaryShortlist(means: Array[Double], bcodes: DataFrame,
-      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, ladder: Seq[Int], targetRecall: Double): Int = {
-    require(targetRecall > 0.0 && targetRecall <= 1.0,
-      s"targetRecall=$targetRecall must be in (0, 1]")
-    val qualifying = binaryRecallCurve(means, bcodes, corpus, queries,
-        idCol, vecCol, k, ladder)
-      .collect()
-      .filter(_.getAs[Double]("recall") >= targetRecall)
-      .map(_.getAs[Int]("shortlist"))
-    require(qualifying.nonEmpty,
-      s"no ladder step reaches recall $targetRecall — the rule is only " +
-        "total when the ladder ends at the corpus count (shortlistLadder)")
-    qualifying.min
   }
 }

@@ -5,10 +5,10 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev utility: write the formatted physical plan of several named
-  * queries to files in one JVM (PlanDump per query pays a full Spark
-  * startup each). Usage: PlanDumpAll <outDir> <suffix> <query...>
-  * — writes `<outDir>/<query>_<suffix>.txt`. */
+/** Dev utility: write the formatted physical plan of one or more named
+  * queries to files, in one JVM. Usage: PlanDumpAll <outDir> <suffix>
+  * <query...> — writes `<outDir>/<query>_<suffix>.txt`; the corpus is
+  * `SPARK_GRAFT_SF_DIR` (default sf0.001). */
 object PlanDumpAll {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDumpAll <outDir> <suffix> <query...>")

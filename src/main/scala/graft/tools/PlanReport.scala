@@ -3,6 +3,8 @@ package graft.tools
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Generates PLANS.md: one row of physical-plan metrics per query —
@@ -67,7 +69,7 @@ object PlanReport {
           s"${if (m.pushedFilters) "yes" else "—"} | " +
           s"${if (m.prunedSchema) "yes" else "—"} |"
       } catch {
-        case e: Throwable => s"| $name | — | — | err | ${e.getClass.getSimpleName} |"
+        case NonFatal(e) => s"| $name | — | — | err | ${e.getClass.getSimpleName} |"
       }
     }
 

@@ -15,12 +15,7 @@ object ToolWork {
   def pidScopedDir(name: String): String = {
     val dir = s"${sys.props.getOrElse("user.dir", ".")}/$name/" +
       java.lang.ProcessHandle.current().pid()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }))
+    graft.FsUtil.deleteOnExit(dir)
     dir
   }
 

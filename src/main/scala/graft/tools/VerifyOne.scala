@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Selective correctness dump: like [[graft.Verify]] but only for the
@@ -27,7 +29,7 @@ object VerifyOne {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           println(s"[verify-one] dumped $name")
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[verify-one] $name failed: ${e.getMessage}")
         }
       }

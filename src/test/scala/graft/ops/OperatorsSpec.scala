@@ -1052,6 +1052,36 @@ class DedupSpec extends SparkSpec {
       n == 1100001L && rf == 100001L && e == 1.0 }, s"hits2=${hits2.toSeq}")
   }
 
+  test("LSH index: save and append write one file per band, whatever the input partitioning") {
+    // 200 shuffle partitions with no AQE coalescing and one read split
+    // per file: without the repartition on band_idx every write task
+    // emits a file for each band it holds (tasks × bands files)
+    val dir = java.nio.file.Files.createTempDirectory("graft_lshidx_files").toString
+    val confs = Seq("spark.sql.shuffle.partitions" -> "200",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.files.maxPartitionBytes" -> "1024")
+    val saved = confs.map { case (key, _) => key -> spark.conf.getOption(key) }
+    def bandFiles(): Seq[Int] =
+      new java.io.File(s"$dir/bands").listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("band_idx="))
+        .map(_.listFiles().count(_.getName.endsWith(".parquet"))).toSeq
+    try {
+      confs.foreach { case (key, value) => spark.conf.set(key, value) }
+      val ref = docs.filter(col("doc_id") < 100000L).repartition(200)
+      Dedup.saveLshIndex(ref, "text", "doc_id", dir, bands = 16)
+      assert(spark.read.parquet(s"$dir/sigs").inputFiles.length > 16)
+      val saveFiles = bandFiles()
+      assert(saveFiles.length == 16 && saveFiles.sum <= 16, s"band files $saveFiles")
+      Dedup.appendToLshIndex(spark, dir,
+        docs.filter(col("doc_id") >= 100000L).repartition(200), "text", "doc_id")
+      val appendFiles = bandFiles()
+      assert(appendFiles.forall(_ <= 2), s"band files after append $appendFiles")
+    } finally saved.foreach {
+      case (key, Some(value)) => spark.conf.set(key, value)
+      case (key, None) => spark.conf.unset(key)
+    }
+  }
+
   test("maxBucket skew cap is observable: oversized buckets + dropped volume reported") {
     // crafted degenerate bucket: 40 documents with IDENTICAL text share
     // one signature, so every band's bucket holds all 40 of them

@@ -7,6 +7,18 @@ import graft.sources.Tables
 class IvfIndexSpec extends SparkSpec {
   private lazy val emb = Tables(spark, sf("sf0.01"), "embeddings")
   private lazy val model = IvfIndex.build(emb, "vec_id", "embedding", nlist = 8)
+  private lazy val cb = PqIndex.train(emb, "vec_id", "embedding", m = 4, ksub = 8)
+  private lazy val sq = SqIndex.train(emb, "vec_id", "embedding")
+
+  /** The three codecs over the shared cell layout: (name, save, append). */
+  private def layouts: Seq[(String, (IvfIndex.Model, String) => Unit,
+      (org.apache.spark.sql.DataFrame, String) => Unit)] = Seq(
+    ("ivf", IvfIndex.save(_, _),
+      (df, dir) => IvfIndex.append(spark, dir, df, "vec_id", "embedding")),
+    ("ivfpq", (m, dir) => PqIndex.saveIvfPq(m, cb, "vec_id", "embedding", dir),
+      (df, dir) => PqIndex.appendIvfPq(spark, dir, df, "vec_id", "embedding")),
+    ("ivfsq", (m, dir) => SqIndex.saveIvfSq(m, sq, "vec_id", "embedding", dir),
+      (df, dir) => SqIndex.appendIvfSq(spark, dir, df, "vec_id", "embedding")))
 
   test("build assigns every vector to exactly one of nlist cells") {
     assert(model.cells.count() == emb.count())
@@ -73,15 +85,36 @@ class IvfIndexSpec extends SparkSpec {
     // holds → tasks × nlist files; with it each cell is wholly inside
     // one task. Repartition the source 8 ways first so the failure mode
     // (8 tasks × cells files) is actually reachable in this spec.
-    val dir = java.nio.file.Files.createTempDirectory("ivf_files").toString
+    // The layout is shared, so every codec's save is checked.
     val spread = IvfIndex.build(emb.repartition(8), "vec_id", "embedding", nlist = 8)
-    IvfIndex.save(spread, dir)
-    val cellDirs = new java.io.File(s"$dir/cells").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-    assert(cellDirs.nonEmpty)
-    cellDirs.foreach { d =>
-      val parts = d.listFiles().count(_.getName.endsWith(".parquet"))
-      assert(parts == 1, s"${d.getName}: $parts data files, want exactly 1")
+    layouts.foreach { case (name, save, _) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"${name}_files").toString
+      save(spread, dir)
+      val cellDirs = new java.io.File(s"$dir/cells").listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("cell="))
+      assert(cellDirs.nonEmpty, name)
+      cellDirs.foreach { d =>
+        val parts = d.listFiles().count(_.getName.endsWith(".parquet"))
+        assert(parts == 1, s"$name ${d.getName}: $parts data files, want exactly 1")
+      }
+    }
+  }
+
+  test("append rejects vectors whose length differs from the stored dim, in every layout") {
+    // NearestCell scores over the shorter of the two lengths, so a
+    // 32-dim batch would otherwise land in cells chosen by a prefix
+    val short = emb.filter(col("vec_id") < 10)
+      .select((col("vec_id") + 500000L).as("vec_id"),
+        slice(col("embedding"), 1, 32).as("embedding"))
+    layouts.foreach { case (name, save, append) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"${name}_dim").toString
+      save(model, dir)
+      val e = intercept[Exception](append(short, dir))
+      val messages = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(String.valueOf(_)).mkString(" | ")
+      assert(messages.contains("does not match the index dim 64: 32"), s"$name: $messages")
+      // the failed append left the standing index as it was
+      assert(spark.read.parquet(s"$dir/cells").count() == emb.count(), name)
     }
   }
 

@@ -87,7 +87,7 @@ class PqIndexSpec extends SparkSpec {
     PqIndex.saveIvfPq(IvfIndex.build(firstHalf, "vec_id", "embedding", nlist = 8),
       cb, "vec_id", "embedding", dir)
     PqIndex.appendIvfPq(spark, dir, secondHalf, "vec_id", "embedding")
-    assert(spark.read.parquet(s"$dir/codes").count() == emb.count())
+    assert(spark.read.parquet(s"$dir/cells").count() == emb.count())
     // appended codes are assigned/encoded under the EXISTING quantizers:
     // at full probe the persisted search reproduces the flat ADC scan
     // over the UNION — proof the new rows are really in the index

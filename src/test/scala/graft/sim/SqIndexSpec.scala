@@ -92,7 +92,7 @@ class SqIndexSpec extends SparkSpec {
     SqIndex.saveIvfSq(IvfIndex.build(firstHalf, "vec_id", "embedding", nlist = 8),
       mH, "vec_id", "embedding", dir)
     SqIndex.appendIvfSq(spark, dir, secondHalf, "vec_id", "embedding")
-    val codes = spark.read.parquet(s"$dir/codes")
+    val codes = spark.read.parquet(s"$dir/cells")
     assert(codes.count() == emb.count())
     // every appended code saturated into [0, 255] — no negative or
     // overflowed byte anywhere in the layout
