@@ -79,8 +79,6 @@ object ConfigBridge {
           .getOrElse(s"$targetRoot/_state")),
       trigger = parsed.trigger.map(tr => CopyJob.TriggerSpec(tr.table, tr.column)),
       switchOnly = switchOnly,
-      noSwitch = noSwitch,
-      tableParallelism =
-        props.get("graft.table.parallelism").flatMap(_.toIntOption).getOrElse(1))
+      noSwitch = noSwitch)
   }
 }

@@ -1,6 +1,9 @@
 package graft.pipeline
 
 import java.nio.file.Paths
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import scala.util.control.NonFatal
+import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.Tables
 
@@ -10,8 +13,8 @@ import graft.sources.Tables
   * Phase ordering is the reference's downtime-minimizing fleet order
   * (`CopyTool.java:202-299`): ALL tables extract, then ALL load, then ALL
   * publish, then GC — so a multi-table publish is consistent and the
-  * publish window is as small as possible. Unlike the single-threaded
-  * reference, each phase step is a distributed Spark job.
+  * publish window is as small as possible. Within a phase the tables run
+  * concurrently, each step a distributed Spark job.
   *
   * Results mirror the reference's exit codes
   * (`CopyTool.java:66-68,95-106`): Copied=0, NoNewData=2, Failed=1.
@@ -73,13 +76,7 @@ object CopyJob {
       noSwitch: Boolean = false,      // E6 --no-switch
       /** resume from durable staging after a crash between phases 1 and 2
         * (the reference's staging-triplet recovery, SURVEY §3.1). */
-      resumeFromStaging: Boolean = false,
-      /** tables processed concurrently WITHIN each phase (the phase
-        * barriers of H3 are preserved: all extracts complete before any
-        * load starts). The reference is strictly sequential; on a
-        * cluster, independent tables' Spark jobs pipeline through the
-        * scheduler and hide each other's stragglers. 1 = sequential. */
-      tableParallelism: Int = 1) {
+      resumeFromStaging: Boolean = false) {
     /** Config identity for watermark-state scoping (G3). */
     def hash: String = Watermark.configHash(this.toString)
   }
@@ -89,6 +86,11 @@ object CopyJob {
   case object NoNewData extends JobResult { val exitCode = 2 }
   final case class Failed(reason: String, cause: Option[Throwable] = None)
     extends JobResult { val exitCode = 1 }
+
+  /** A per-table step that failed: its phase (probe/extract/load), the
+    * table id and the original exception. */
+  private final case class TableFailure(phase: String, id: String, cause: Throwable)
+    extends Exception(s"$phase $id: ${cause.getMessage}", cause)
 
   /** Resolve a FromSpec to a DataFrame (the A1-A3 scan surface). */
   def resolveSource(spark: SparkSession, cfg: JobConfig, from: FromSpec): DataFrame =
@@ -101,26 +103,36 @@ object CopyJob {
         from.columns.map(cs => df.select(cs.map(df.col): _*)).getOrElse(df)
     }
 
-  /** Run `f` over tables with bounded concurrency; sequential when
-    * par ≤ 1. Failures propagate unwrapped so JobResult.Failed carries
-    * the real cause. Safe because per-table work touches disjoint
-    * staging/target dirs and Spark schedules concurrent jobs. */
-  private def parForeach[A](xs: Seq[A], par: Int)(f: A => Unit): Unit =
-    if (par <= 1 || xs.size <= 1) xs.foreach(f)
+  /** Run one phase's per-table step over every table, concurrently up to
+    * the cluster's default parallelism, and return the results in table
+    * order. Every submitted table finishes before this returns, so a
+    * failure never leaves a sibling still writing staging or targets;
+    * then the first failure in table order is rethrown as a
+    * [[TableFailure]]. The pool is made on each call, from the calling
+    * thread: Spark's job group and other local properties reach its
+    * threads only by inheritance at thread creation. Safe because
+    * per-table work touches disjoint staging/target dirs and Spark
+    * schedules concurrent jobs. */
+  private def perTable[A, B](spark: SparkSession, phase: String, work: Seq[(TableSpec, A)])
+      (f: (TableSpec, A) => B): Seq[B] = {
+    def one(t: TableSpec, a: A): B =
+      try f(t, a) catch { case NonFatal(e) => throw TableFailure(phase, t.id, e) }
+    val par = math.min(work.size, spark.sparkContext.defaultParallelism)
+    if (par <= 1) work.map { case (t, a) => one(t, a) }
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(par, xs.size))
+      val pool = Executors.newFixedThreadPool(par)
       try {
-        val futures = xs.map { x =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = f(x)
-          })
+        val futures = work.toVector.map { case (t, a) =>
+          pool.submit(new Callable[B] { def call(): B = one(t, a) })
         }
-        futures.foreach { fut =>
-          try fut.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        futures.map(fut => Try(fut.get())).map {
+          case Success(b) => b
+          case Failure(e: ExecutionException) => throw e.getCause
+          case Failure(e) => throw e
         }
       } finally pool.shutdown()
     }
+  }
 
   /** C7 truncate + C3 distributed batched INSERT, in one overwrite. */
   private def jdbcLoad(staged: DataFrame, j: JdbcLoad, table: String): Unit =
@@ -202,50 +214,56 @@ object CopyJob {
       val version = Publish.newVersion()
 
       // shared phase-2 body (normal and resume paths must never diverge):
-      // F3 validate, B4 zero-row short-circuit, then load per publish mode
-      def loadOne(t: TableSpec): Unit = {
-        val m = Staging.validate(spark, stagingDir(cfg, t))   // F3
-        if (m.count > 0 || t.allowEmpty) {                    // B4 short-circuit
-          val staged = Staging.read(spark, stagingDir(cfg, t))
+      // F3-validated staging, B4 zero-row short-circuit, then load per
+      // publish mode from the data validate already read
+      def loadOne(t: TableSpec, s: Staging.Staged): Unit =
+        if (s.manifest.count > 0 || t.allowEmpty) {             // B4 short-circuit
           t.publishMode match {
-            case ViewSwitch => Publish.writeSnapshot(staged, cfg.targetRoot, t.to, version)
-            case TempSwap   => Publish.tempSwapPublish(staged, cfg.targetRoot, t.to)
-            case j: JdbcLoad => jdbcLoad(staged, j, t.to)
-            case ml: MonetLoad => monetLoad(staged, ml, t.to, m.count)
+            case ViewSwitch => Publish.writeSnapshot(s.data, cfg.targetRoot, t.to, version)
+            case TempSwap   => Publish.tempSwapPublish(s.data, cfg.targetRoot, t.to)
+            case j: JdbcLoad => jdbcLoad(s.data, j, t.to)
+            case ml: MonetLoad => monetLoad(s.data, ml, t.to, s.manifest.count)
           }
         }
-      }
 
       if (cfg.resumeFromStaging) {
         // crash-between-phases resumption (§3.1): phase 1 already ran and
-        // its durable staging survived — validate it (F3) and continue
-        // from phase 2 without re-extracting. The F1 guard's resume
-        // equivalent runs on the MANIFESTS (the sources may have changed
-        // since the crash — staging is the truth being resumed): without
-        // it, a zero-row staging for an allowEmpty=false table would
-        // skip its snapshot while phase 3 still repoints CURRENT at the
-        // never-written version dir, wedging every reader.
-        val empties = cfg.tables.filterNot(_.allowEmpty).filter { t =>
-          Staging.validate(spark, stagingDir(cfg, t)).count == 0
+        // its durable staging survived — validate it (F3), once per
+        // table, and continue from phase 2 without re-extracting. The F1
+        // guard's resume equivalent runs on the MANIFESTS (the sources
+        // may have changed since the crash — staging is the truth being
+        // resumed): without it, a zero-row staging for an allowEmpty=false
+        // table would skip its snapshot while phase 3 still repoints
+        // CURRENT at the never-written version dir, wedging every reader.
+        val staged = perTable(spark, "probe", cfg.tables.map(t => t -> stagingDir(cfg, t))) {
+          (_, dir) => Staging.validate(spark, dir)
+        }
+        val empties = cfg.tables.zip(staged).collect {
+          case (t, s) if !t.allowEmpty && s.manifest.count == 0 => t.id
         }
         if (empties.nonEmpty)
-          return Failed(s"empty staged tables: ${empties.map(_.id).mkString(", ")}")
-        parForeach(cfg.tables, cfg.tableParallelism)(loadOne)
+          return Failed(s"empty staged tables: ${empties.mkString(", ")}")
+        perTable(spark, "load", cfg.tables.zip(staged))(loadOne)
       } else if (!cfg.switchOnly) {
-        // ---- F1 empty-source guard: ALL tables checked before ANY copy
-        val empties = cfg.tables.filterNot(_.allowEmpty).filter { t =>
-          resolveSource(spark, cfg, t.from).isEmpty   // limit-1 probe, not count
+        // ---- F1 empty-source guard: ALL tables checked before ANY copy.
+        // Each source is resolved once; the extract reuses its DataFrame.
+        val probed = perTable(spark, "probe", cfg.tables.map(t => t -> t.from)) { (t, from) =>
+          val df = resolveSource(spark, cfg, from)
+          (df, !t.allowEmpty && df.isEmpty)   // limit-1 probe, not count
         }
+        val empties = cfg.tables.zip(probed).collect { case (t, (_, true)) => t.id }
         if (empties.nonEmpty)
-          return Failed(s"empty source tables: ${empties.map(_.id).mkString(", ")}")
+          return Failed(s"empty source tables: ${empties.mkString(", ")}")
 
         // ---- PHASE 1: extract ALL tables to durable staging
-        parForeach(cfg.tables, cfg.tableParallelism) { t =>
-          Staging.stage(resolveSource(spark, cfg, t.from), stagingDir(cfg, t), t.autoTrim)
+        perTable(spark, "extract", cfg.tables.zip(probed.map(_._1))) { (t, df) =>
+          Staging.stage(df, stagingDir(cfg, t), t.autoTrim)
         }
 
         // ---- PHASE 2: load ALL tables (staging → snapshot)
-        parForeach(cfg.tables, cfg.tableParallelism)(loadOne)
+        perTable(spark, "load", cfg.tables.map(t => t -> stagingDir(cfg, t))) { (t, dir) =>
+          loadOne(t, Staging.validate(spark, dir))                  // F3
+        }
       }
 
       // ---- PHASE 3: publish ALL tables (pointer/view switch)
@@ -274,6 +292,7 @@ object CopyJob {
       }
       Copied
     } catch {
+      case f: TableFailure => Failed(f.getMessage, Some(f.cause))
       case e: Exception => Failed(e.getMessage, Some(e))
     }
   }

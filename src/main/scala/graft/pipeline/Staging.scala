@@ -1,8 +1,8 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, trim}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, trim}
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
 /** Durable staging between extract and load (SURVEY.md §2.B, §2.F3).
@@ -31,18 +31,23 @@ object Staging {
   private def manifestPath(dir: String): Path = Paths.get(dir, "_manifest.json")
   private def dataPath(dir: String): String = s"$dir/data"
 
+  /** A validated staging dir: its manifest and its data, read once. */
+  final case class Staged(manifest: Manifest, data: DataFrame)
+
   /** Stage an extract. Writes parquet (schema even for 0 rows — the B4
     * zero-row short-circuit is the loader skipping, not schema loss) and
-    * the manifest. Returns the staged row count. */
+    * the manifest. The row count is an observed metric of the write
+    * itself, so staging is one Spark job with no read-back. Returns the
+    * staged row count. */
   def stage(df: DataFrame, dir: String, autoTrim: Boolean = true): Long = {
     val out = if (autoTrim) applyAutoTrim(df) else df
-    out.write.mode("overwrite").parquet(dataPath(dir))
-    // parquet-footer count: metadata-only scan, no data read
-    val count = out.sparkSession.read.parquet(dataPath(dir)).count()
-    val json = s"""{"count":$count,"schema":${out.schema.json}}"""
+    val rows = Observation()
+    out.observe(rows, count(lit(1)).as("n")).write.mode("overwrite").parquet(dataPath(dir))
+    val n = rows.get("n").asInstanceOf[Long]
+    val json = s"""{"count":$n,"schema":${out.schema.json}}"""
     Files.createDirectories(Paths.get(dir))
     Files.writeString(manifestPath(dir), json)
-    count
+    n
   }
 
   def readManifest(dir: String): Option[Manifest] = {
@@ -59,19 +64,20 @@ object Staging {
   }
 
   /** F3 staged-files validation: manifest present, data readable, schema
-    * matches the snapshot. Throws with a precise reason on failure. */
-  def validate(spark: SparkSession, dir: String): Manifest = {
+    * matches the snapshot. Throws with a precise reason on failure.
+    * Returns the data it checked, so the load reads the staging once. */
+  def validate(spark: SparkSession, dir: String): Staged = {
     val m = readManifest(dir).getOrElse(
       throw new IllegalStateException(s"staging dir '$dir' has no manifest"))
+    val actual = read(spark, dir)
     if (m.count > 0) {
-      val actual = spark.read.parquet(dataPath(dir))
       // compare name+type only: parquet read-back is always nullable, so
       // nullability is not schema drift
       def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
       require(shape(actual.schema) == shape(m.schema),
         s"staged schema drift in '$dir': ${actual.schema.simpleString} vs manifest ${m.schema.simpleString}")
     }
-    m
+    Staged(m, actual)
   }
 
   /** Read the staged dataset back (load-phase input). */

@@ -140,7 +140,7 @@ class StagingSpec extends SparkSpec {
     val df = Tables(spark, sf(), "nation")
     val n = Staging.stage(df, dir)
     assert(n == 25)
-    val m = Staging.validate(spark, dir)
+    val m = Staging.validate(spark, dir).manifest
     assert(m.count == 25)
     assert(m.schema == df.schema)
     assert(Staging.read(spark, dir).count() == 25)
@@ -170,8 +170,30 @@ class StagingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("stg3").toString
     val df = Tables(spark, sf(), "nation").filter("n_nationkey < 0")
     assert(Staging.stage(df, dir) == 0)
-    assert(Staging.validate(spark, dir).count == 0)
+    assert(Staging.validate(spark, dir).manifest.count == 0)
     Staging.cleanup(dir)
+  }
+
+  test("stage of a plain parquet table is one Spark job: the write itself") {
+    // 4 when stage read its output back: + 1 inference and 2 count jobs
+    val df = Tables(spark, sf(), "nation")   // schema inference happens here
+    val dir = Files.createTempDirectory("stg5").toString
+    val (n, jobs) = JobCount(spark, "staging-one-job")(Staging.stage(df, dir))
+    assert(n == 25)
+    assert(jobs == 1, s"stage ran $jobs Spark jobs")
+    Staging.cleanup(dir)
+  }
+
+  test("staged count (returned and manifest) equals a read-back count: 7 partitions, 0 rows") {
+    val nation = Tables(spark, sf(), "nation")
+    Seq(nation.repartition(7), nation.filter("n_nationkey < 0")).foreach { df =>
+      val dir = Files.createTempDirectory("stg6").toString
+      val n = Staging.stage(df, dir)
+      val back = Staging.read(spark, dir).count()
+      assert(n == back && Staging.readManifest(dir).map(_.count).contains(back),
+        s"returned $n, manifest ${Staging.readManifest(dir)}, read back $back")
+      Staging.cleanup(dir)
+    }
   }
 
   test("validation fails on missing manifest (F3)") {
@@ -247,13 +269,63 @@ class PublishSpec extends SparkSpec {
   }
 }
 
+/** `body`'s result and the Spark jobs started under the job group `group`
+  * while it runs on this thread or on threads it creates (they inherit
+  * the group). Suites share the session and run concurrently, so other
+  * jobs do not count. */
+object JobCount {
+  def apply[T](spark: org.apache.spark.sql.SparkSession, group: String)(body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = s"$group-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+          if (g == group) jobs.incrementAndGet()
+          else if (g == marker) markerSeen.countDown()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      val result = body
+      // listener events arrive in order: once a marker job started after
+      // `body` is seen, every job `body` started has been counted
+      sc.setJobGroup(marker, marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(10, java.util.concurrent.TimeUnit.SECONDS), "marker job not seen")
+      (result, jobs.get())
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+}
+
 class CopyJobSpec extends SparkSpec {
   import CopyJob._
+  import java.nio.file.{Path, Paths}
+  import scala.jdk.CollectionConverters._
 
   private def freshCfg(tables: Seq[TableSpec], trigger: Option[TriggerSpec] = None) = {
     val base = Files.createTempDirectory("job")
     JobConfig(tables, sf(), s"$base/staging", s"$base/target", s"$base/state",
       trigger = trigger)
+  }
+
+  /** Every file and dir under the staging and target roots, with size
+    * and modification time. */
+  private def tree(cfg: JobConfig): Set[(String, Long, Long)] =
+    Seq(cfg.stagingRoot, cfg.targetRoot).map(Paths.get(_)).filter(Files.exists(_))
+      .flatMap(root => Files.walk(root).iterator.asScala.toSeq)
+      .map(p => (p.toString, Files.size(p), Files.getLastModifiedTime(p).toMillis)).toSet
+
+  /** A regular file where the table's staging dir goes: its extract fails. */
+  private def blockStaging(cfg: JobConfig, from: String, to: String): Path = {
+    Files.createDirectories(Paths.get(cfg.stagingRoot))
+    Files.writeString(Paths.get(cfg.stagingRoot, s"table_${from}_$to"), "not a dir")
   }
 
   test("full 4-phase run: extract → load → publish → GC, result Copied") {
@@ -273,7 +345,7 @@ class CopyJobSpec extends SparkSpec {
       TableSpec("nation", FromSpec("nation"), "nation_p"),
       TableSpec("region", FromSpec("region"), "region_p"),
       TableSpec("supplier", FromSpec("supplier"), "supplier_p"))
-    val cfg = freshCfg(tables).copy(tableParallelism = 3)
+    val cfg = freshCfg(tables)
     assert(CopyJob.run(spark, cfg) == Copied)
     assert(Publish.readCurrent(spark, cfg.targetRoot, "nation_p").count() == 25)
     assert(Publish.readCurrent(spark, cfg.targetRoot, "region_p").count() == 5)
@@ -284,11 +356,85 @@ class CopyJobSpec extends SparkSpec {
     val cfg = freshCfg(Seq(
       TableSpec("nation", FromSpec("nation"), "n_ok"),
       TableSpec("bad", FromSpec("no_such_table"), "n_bad")))
-      .copy(tableParallelism = 2)
     CopyJob.run(spark, cfg) match {
-      case Failed(reason, _) => assert(reason != null)
+      case Failed(reason, cause) =>
+        assert(reason.startsWith("probe bad: "), reason)
+        assert(cause.exists(_.isInstanceOf[org.apache.spark.sql.AnalysisException]), cause)
       case other => fail(s"expected Failed, got $other")
     }
+  }
+
+  test("a failed phase leaves no sibling table running after run returns") {
+    // the failing table comes first: its extract fails at once while the
+    // slow one (5 rows × 600 ms) is still writing its staging
+    val cfg = freshCfg(Seq(
+      TableSpec("bad", FromSpec("nation"), "n_bad"),
+      TableSpec("slow", FromSpec("slow", query = Some(
+        "SELECT r_regionkey, reflect('java.lang.Thread', 'sleep', CAST(600 AS BIGINT)) AS z " +
+          "FROM region")), "slow_out")))
+    blockStaging(cfg, "nation", "n_bad")
+    val r = CopyJob.run(spark, cfg)
+    val after = tree(cfg)
+    Thread.sleep(4000)
+    assert(tree(cfg) == after, "staging or target changed after run returned")
+    r match {
+      case Failed(reason, _) => assert(reason.startsWith("extract bad: "), reason)
+      case other => fail(s"expected Failed, got $other")
+    }
+  }
+
+  test("a failed extract under default concurrency: no load, publish or state advance") {
+    val url = "jdbc:derby:memory:barrierdb;create=true"
+    def derby[T](f: java.sql.Statement => T): T = {
+      val c = java.sql.DriverManager.getConnection(url)
+      try { val st = c.createStatement(); try f(st) finally st.close() } finally c.close()
+    }
+    def derbyRows(): Long = derby { st =>
+      val rs = st.executeQuery("SELECT COUNT(*) FROM region_live"); rs.next(); rs.getLong(1)
+    }
+    derby(_.executeUpdate(
+      "CREATE TABLE region_live (r_regionkey BIGINT, r_name VARCHAR(64), r_comment VARCHAR(256))"))
+    val cfg = freshCfg(Seq(
+      TableSpec("nation", FromSpec("nation"), "n_snap"),
+      TableSpec("region", FromSpec("region"), "region_live", publishMode = JdbcLoad(url)),
+      TableSpec("supplier", FromSpec("supplier"), "s_snap")),
+      trigger = Some(TriggerSpec("events", "ts")))
+    assert(CopyJob.run(spark, cfg) == Copied)
+    // an older stored watermark, so the next run's trigger copies; a
+    // sentinel row a JdbcLoad's truncate would remove
+    val statePath = Files.list(Paths.get(cfg.stateDir)).iterator.asScala.toSeq.head
+    val Some(Watermark.State(Watermark.TimestampV(ts), h)) = Watermark.readState(statePath)
+    Watermark.writeState(statePath,
+      Watermark.State(Watermark.TimestampV(new Timestamp(ts.getTime - 86400000L)), h))
+    derby(_.executeUpdate("INSERT INTO region_live VALUES (99, 'sentinel', '')"))
+    val state0 = Files.readString(statePath)
+    val snaps = Seq("n_snap", "s_snap")
+    val versions0 = snaps.map(Publish.listVersions(cfg.targetRoot, _).sorted)
+    val current0 = snaps.map(Publish.currentVersion(cfg.targetRoot, _))
+
+    blockStaging(cfg, "supplier", "s_snap")
+    CopyJob.run(spark, cfg) match {
+      case Failed(reason, _) => assert(reason.startsWith("extract supplier: "), reason)
+      case other => fail(s"expected Failed, got $other")
+    }
+    assert(snaps.map(Publish.listVersions(cfg.targetRoot, _).sorted) == versions0)
+    assert(snaps.map(Publish.currentVersion(cfg.targetRoot, _)) == current0)
+    assert(derbyRows() == 6, "the JDBC target was loaded after a failed extract")
+    assert(Files.readString(statePath) == state0)
+  }
+
+  test("a two-table run's Spark jobs: no re-resolve, read-back count or second staged read") {
+    // measured 20 jobs before sources were resolved once and the staged
+    // count rode the write, 10 after. Per table 5 went: the extract's
+    // source re-resolve (1 inference job), the staged read-back
+    // (1 inference + 2 count jobs) and the load's second staged read
+    // (1 inference job)
+    val cfg = freshCfg(Seq(
+      TableSpec("nation", FromSpec("nation"), "n_jobs"),
+      TableSpec("region", FromSpec("region"), "r_jobs")))
+    val (r, jobs) = JobCount(spark, "copyjob-two-tables")(CopyJob.run(spark, cfg))
+    assert(r == Copied)
+    assert(jobs <= 20 - 2 * 5, s"two-table run took $jobs Spark jobs")
   }
 
   test("end-to-end copy into a live JDBC database (C3/C7 via graft-jdbc)") {
