@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import java.nio.file.Paths
-import java.util.concurrent.{Callable, ExecutionException, Executors}
+import java.util.concurrent.{Callable, ConcurrentHashMap, ExecutionException, Executors}
 import scala.util.control.NonFatal
 import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,7 +14,11 @@ import graft.sources.Tables
   * (`CopyTool.java:202-299`): ALL tables extract, then ALL load, then ALL
   * publish, then GC — so a multi-table publish is consistent and the
   * publish window is as small as possible. Within a phase the tables run
-  * concurrently, each step a distributed Spark job.
+  * concurrently, each step a distributed Spark job. Phase 2 of a
+  * `ViewSwitch` or `TempSwap` table copies the staged parquet files as
+  * they are (the reference's `COPY INTO` loads the file it staged,
+  * `CopyTool.java:756-870`), so its only Spark job is F3's read of the
+  * staging. Each source table is resolved at most once per run.
   *
   * Results mirror the reference's exit codes
   * (`CopyTool.java:66-68,95-106`): Copied=0, NoNewData=2, Failed=1.
@@ -92,16 +96,28 @@ object CopyJob {
   private final case class TableFailure(phase: String, id: String, cause: Throwable)
     extends Exception(s"$phase $id: ${cause.getMessage}", cause)
 
-  /** Resolve a FromSpec to a DataFrame (the A1-A3 scan surface). */
-  def resolveSource(spark: SparkSession, cfg: JobConfig, from: FromSpec): DataFrame =
-    from.query match {
+  /** The source tables of one copying run, each resolved at most once and
+    * only when first asked for; safe to share between the probe step's
+    * threads. `seed` holds tables already resolved (the trigger's). */
+  private final class Sources(spark: SparkSession, dir: String, seed: Map[String, DataFrame]) {
+    private final class Once(resolve: => DataFrame) { lazy val df: DataFrame = resolve }
+    private val memo = new ConcurrentHashMap[String, Once]()
+    seed.foreach { case (name, df) => memo.put(name, new Once(df)) }
+
+    def table(name: String): DataFrame =
+      memo.computeIfAbsent(name, n => new Once(Tables(spark, dir, n))).df
+
+    /** A FromSpec as a DataFrame (the A1-A3 scan surface): a table, its
+      * projection, or a query over views of every harness table. */
+    def apply(from: FromSpec): DataFrame = from.query match {
       case Some(q) =>
-        Tables.registerAll(spark, cfg.sourceDir)
+        Tables.names.foreach(n => table(n).createOrReplaceTempView(n))
         spark.sql(q)
       case None =>
-        val df = Tables(spark, cfg.sourceDir, from.name)
+        val df = table(from.name)
         from.columns.map(cs => df.select(cs.map(df.col): _*)).getOrElse(df)
     }
+  }
 
   /** Run one phase's per-table step over every table, concurrently up to
     * the cluster's default parallelism, and return the results in table
@@ -204,23 +220,25 @@ object CopyJob {
   def run(spark: SparkSession, cfg: JobConfig): JobResult = {
     try {
       // ---- trigger check (G1-G4): skip everything when certain no new data
-      val polled: Option[Option[Watermark.Value]] = cfg.trigger.map { tr =>
-        val v = Watermark.poll(Tables(spark, cfg.sourceDir, tr.table), tr.column)
+      val polled: Option[((String, DataFrame), Option[Watermark.Value])] = cfg.trigger.map { tr =>
+        val df = Tables(spark, cfg.sourceDir, tr.table)
+        val v = Watermark.poll(df, tr.column)
         val stored = Watermark.readState(statePath(cfg))
         if (!Watermark.hasNewData(v, stored, cfg.hash)) return NoNewData
-        v
+        (tr.table -> df, v)
       }
 
       val version = Publish.newVersion()
 
       // shared phase-2 body (normal and resume paths must never diverge):
       // F3-validated staging, B4 zero-row short-circuit, then load per
-      // publish mode from the data validate already read
+      // publish mode: a copy of the staged files, or a write of the data
+      // validate already read
       def loadOne(t: TableSpec, s: Staging.Staged): Unit =
         if (s.manifest.count > 0 || t.allowEmpty) {             // B4 short-circuit
           t.publishMode match {
-            case ViewSwitch => Publish.writeSnapshot(s.data, cfg.targetRoot, t.to, version)
-            case TempSwap   => Publish.tempSwapPublish(s.data, cfg.targetRoot, t.to)
+            case ViewSwitch => Publish.writeSnapshot(s.files, cfg.targetRoot, t.to, version)
+            case TempSwap   => Publish.tempSwapPublish(s.files, cfg.targetRoot, t.to)
             case j: JdbcLoad => jdbcLoad(s.data, j, t.to)
             case ml: MonetLoad => monetLoad(s.data, ml, t.to, s.manifest.count)
           }
@@ -246,9 +264,12 @@ object CopyJob {
         perTable(spark, "load", cfg.tables.zip(staged))(loadOne)
       } else if (!cfg.switchOnly) {
         // ---- F1 empty-source guard: ALL tables checked before ANY copy.
-        // Each source is resolved once; the extract reuses its DataFrame.
+        // Each source table is resolved once per run, the trigger's by its
+        // poll, so its extract reads the file listing whose max becomes the
+        // stored watermark. The extract reuses the probe's DataFrame.
+        val sources = new Sources(spark, cfg.sourceDir, polled.map(_._1).toMap)
         val probed = perTable(spark, "probe", cfg.tables.map(t => t -> t.from)) { (t, from) =>
-          val df = resolveSource(spark, cfg, from)
+          val df = sources(from)
           (df, !t.allowEmpty && df.isEmpty)   // limit-1 probe, not count
         }
         val empties = cfg.tables.zip(probed).collect { case (t, (_, true)) => t.id }
@@ -260,7 +281,7 @@ object CopyJob {
           Staging.stage(df, stagingDir(cfg, t), t.autoTrim)
         }
 
-        // ---- PHASE 2: load ALL tables (staging → snapshot)
+        // ---- PHASE 2: load ALL tables (staging → snapshot or database)
         perTable(spark, "load", cfg.tables.map(t => t -> stagingDir(cfg, t))) { (t, dir) =>
           loadOne(t, Staging.validate(spark, dir))                  // F3
         }
@@ -287,7 +308,7 @@ object CopyJob {
 
       // ---- E7 staging cleanup + G3 state persist (only after full success)
       if (!cfg.switchOnly) cfg.tables.foreach(t => Staging.cleanup(stagingDir(cfg, t)))
-      polled.flatten.foreach { v =>
+      polled.flatMap(_._2).foreach { v =>
         Watermark.writeState(statePath(cfg), Watermark.State(v, cfg.hash))
       }
       Copied

@@ -22,6 +22,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   <root>/<table>/v=<version>/   (immutable parquet snapshots)
   *   <root>/<table>/CURRENT        (pointer: the published version)
   * }}}
+  * A snapshot, like the reference's `COPY INTO` of the CSV it staged
+  * (`CopyTool.java:756-870`), is the staged files as they are: phase 2
+  * copies them and runs no Spark job.
   */
 object Publish {
 
@@ -59,9 +62,22 @@ object Publish {
   private def currentPtr(root: String, table: String): Path =
     tableDir(root, table).resolve("CURRENT")
 
-  /** Load a snapshot version (phase 2). Immutable once written. */
-  def writeSnapshot(df: DataFrame, root: String, table: String, version: String): Unit =
-    df.write.mode("overwrite").parquet(snapshotDir(root, table, version))
+  /** Load a snapshot version (phase 2): a copy of the staged parquet
+    * files `staged` (part files, their `.crc` files, `_SUCCESS`), with no
+    * decode or re-encode. Immutable once written. */
+  def writeSnapshot(staged: Path, root: String, table: String, version: String): Unit =
+    copyFiles(staged, Paths.get(snapshotDir(root, table, version)))
+
+  /** Replace `to` with a copy of the tree under `from`. A copy, not a move
+    * or a hard link: the staging stays readable for `--resume` until the
+    * job succeeds, and a copy works across file systems. */
+  private def copyFiles(from: Path, to: Path): Unit = {
+    graft.FsUtil.deleteRecursively(to)
+    Files.createDirectories(to.getParent)
+    val walk = Files.walk(from)   // pre-order: each dir before its files
+    try walk.iterator.asScala.foreach(p => Files.copy(p, to.resolve(from.relativize(p))))
+    finally walk.close()
+  }
 
   /** E4 newest-version discovery: list + lexicographic max (version string
     * ordering == timestamp ordering for this format). Lazy listing — only
@@ -127,16 +143,16 @@ object Publish {
     drop.sorted
   }
 
-  /** E2 temp-swap publish (the non-versioned mode): stage under a `tmp_`
-    * dir, then swap into the stable data dir. Same drop-then-swap window
-    * as the reference (`CopyTool.java:1107-1124`) — documented, and the
+  /** E2 temp-swap publish (the non-versioned mode): copy the staged
+    * parquet files `staged` into a cleared `tmp_data` dir, then swap it
+    * into the stable data dir. Same drop-then-swap window as the
+    * reference (`CopyTool.java:1107-1124`) — documented, and the
     * versioned+pointer mode above is the preferred atomic path. */
-  def tempSwapPublish(df: DataFrame, root: String, table: String): Unit = {
+  def tempSwapPublish(staged: Path, root: String, table: String): Unit = {
     val dir = tableDir(root, table)
-    Files.createDirectories(dir)
     val tmp = dir.resolve("tmp_data")
     val fin = dir.resolve("data")
-    df.write.mode("overwrite").parquet(tmp.toString)
+    copyFiles(staged, tmp)
     graft.FsUtil.deleteRecursively(fin)
     Files.move(tmp, fin, StandardCopyOption.ATOMIC_MOVE)
   }

@@ -11,7 +11,9 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   * (`CopyTool.java:659-747`); here the staged dataset is partitioned
   * parquet (schema travels in the footer) plus a tiny JSON manifest with
   * the row count and schema snapshot — the durable phase-1→phase-2
-  * hand-off survives a crash between phases (§3.1).
+  * hand-off survives a crash between phases (§3.1). A `ViewSwitch` or
+  * `TempSwap` load publishes a copy of the staged parquet files; the
+  * staging stays intact until the job succeeds.
   */
 object Staging {
 
@@ -31,8 +33,10 @@ object Staging {
   private def manifestPath(dir: String): Path = Paths.get(dir, "_manifest.json")
   private def dataPath(dir: String): String = s"$dir/data"
 
-  /** A validated staging dir: its manifest and its data, read once. */
-  final case class Staged(manifest: Manifest, data: DataFrame)
+  /** A validated staging dir: its manifest, its data (read once, the
+    * input of a JDBC or MonetDB load) and the dir of its parquet files
+    * (what a snapshot copies). */
+  final case class Staged(manifest: Manifest, data: DataFrame, files: Path)
 
   /** Stage an extract. Writes parquet (schema even for 0 rows — the B4
     * zero-row short-circuit is the loader skipping, not schema loss) and
@@ -65,7 +69,8 @@ object Staging {
 
   /** F3 staged-files validation: manifest present, data readable, schema
     * matches the snapshot. Throws with a precise reason on failure.
-    * Returns the data it checked, so the load reads the staging once. */
+    * Returns the data it checked, so the load reads the staging once, and
+    * the files it checked, so a snapshot copies exactly those. */
   def validate(spark: SparkSession, dir: String): Staged = {
     val m = readManifest(dir).getOrElse(
       throw new IllegalStateException(s"staging dir '$dir' has no manifest"))
@@ -77,7 +82,7 @@ object Staging {
       require(shape(actual.schema) == shape(m.schema),
         s"staged schema drift in '$dir': ${actual.schema.simpleString} vs manifest ${m.schema.simpleString}")
     }
-    Staged(m, actual)
+    Staged(m, actual, Paths.get(dataPath(dir)))
   }
 
   /** Read the staged dataset back (load-phase input). */

@@ -207,7 +207,7 @@ class PublishSpec extends SparkSpec {
     val root = Files.createTempDirectory("pub").toString
     val df = Tables(spark, sf(), "region")
     val versions = Seq("2024_01_01_00_00_00", "2024_01_02_00_00_00", "2024_01_03_00_00_00")
-    versions.foreach(v => Publish.writeSnapshot(df, root, "region", v))
+    versions.foreach(v => df.write.parquet(Publish.snapshotDir(root, "region", v)))
     assert(Publish.findNewestVersion(root, "region").contains("2024_01_03_00_00_00"))
     Publish.publishVersion(root, "region", "2024_01_03_00_00_00")
     assert(Publish.currentVersion(root, "region").contains("2024_01_03_00_00_00"))
@@ -237,8 +237,8 @@ class PublishSpec extends SparkSpec {
   test("switch-only publishes newest without touching data (E6)") {
     val root = Files.createTempDirectory("pub2").toString
     val df = Tables(spark, sf(), "region")
-    Publish.writeSnapshot(df, root, "t", "2024_05_01_00_00_00")
-    Publish.writeSnapshot(df, root, "t", "2024_06_01_00_00_00")
+    df.write.parquet(Publish.snapshotDir(root, "t", "2024_05_01_00_00_00"))
+    df.write.parquet(Publish.snapshotDir(root, "t", "2024_06_01_00_00_00"))
     assert(Publish.publishNewest(root, "t").contains("2024_06_01_00_00_00"))
     assert(Publish.currentVersion(root, "t").contains("2024_06_01_00_00_00"))
   }
@@ -247,7 +247,7 @@ class PublishSpec extends SparkSpec {
     val root = Files.createTempDirectory("pub3").toString
     val df = Tables(spark, sf(), "region")
     Seq("2024_01_01_00_00_00", "2024_01_02_00_00_00", "2024_01_03_00_00_00", "2024_01_04_00_00_00")
-      .foreach(v => Publish.writeSnapshot(df, root, "t", v))
+      .foreach(v => df.write.parquet(Publish.snapshotDir(root, "t", v)))
     Publish.publishVersion(root, "t", "2024_01_01_00_00_00") // pinned old
     val dropped = Publish.gcOldVersions(root, "t", keep = 2)
     assert(!dropped.contains("2024_01_01_00_00_00"))
@@ -262,27 +262,38 @@ class PublishSpec extends SparkSpec {
 
   test("temp-swap publish replaces data dir (E2)") {
     val root = Files.createTempDirectory("pub4").toString
-    Publish.tempSwapPublish(Tables(spark, sf(), "region"), root, "t")
+    def staged(table: String) = {
+      val dir = Files.createTempDirectory("pub4stg").toString
+      Staging.stage(Tables(spark, sf(), table), dir)
+      Staging.validate(spark, dir).files
+    }
+    Publish.tempSwapPublish(staged("region"), root, "t")
     assert(spark.read.parquet(s"$root/t/data").count() == 5)
-    Publish.tempSwapPublish(Tables(spark, sf(), "nation"), root, "t")
+    Publish.tempSwapPublish(staged("nation"), root, "t")
     assert(spark.read.parquet(s"$root/t/data").count() == 25)
   }
 }
 
 /** `body`'s result and the Spark jobs started under the job group `group`
   * while it runs on this thread or on threads it creates (they inherit
-  * the group). Suites share the session and run concurrently, so other
-  * jobs do not count. */
+  * the group), counting only the jobs `only` accepts. Suites share the
+  * session and run concurrently, so other jobs do not count. */
 object JobCount {
-  def apply[T](spark: org.apache.spark.sql.SparkSession, group: String)(body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+  /** A job started inside `Tables.apply`: a source's schema inference. */
+  val sourceResolution: SparkListenerJobStart => Boolean =
+    _.stageInfos.exists(_.details.contains("graft.sources.Tables$.apply"))
+
+  def apply[T](spark: org.apache.spark.sql.SparkSession, group: String,
+      only: SparkListenerJobStart => Boolean = _ => true)(body: => T): (T, Int) = {
     val marker = s"$group-marker"
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val markerSeen = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         Option(j.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
-          if (g == group) jobs.incrementAndGet()
+          if (g == group) { if (only(j)) jobs.incrementAndGet() }
           else if (g == marker) markerSeen.countDown()
         }
     }
@@ -322,10 +333,31 @@ class CopyJobSpec extends SparkSpec {
       .flatMap(root => Files.walk(root).iterator.asScala.toSeq)
       .map(p => (p.toString, Files.size(p), Files.getLastModifiedTime(p).toMillis)).toSet
 
+  private def stagingDir(cfg: JobConfig, from: String, to: String): Path =
+    Paths.get(cfg.stagingRoot, s"table_${from}_$to")
+
   /** A regular file where the table's staging dir goes: its extract fails. */
   private def blockStaging(cfg: JobConfig, from: String, to: String): Path = {
     Files.createDirectories(Paths.get(cfg.stagingRoot))
-    Files.writeString(Paths.get(cfg.stagingRoot, s"table_${from}_$to"), "not a dir")
+    Files.writeString(stagingDir(cfg, from, to), "not a dir")
+  }
+
+  /** Rows in a comparable, order-free form. */
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  /** Column names and types; parquet read-back is always nullable. */
+  private def shape(s: org.apache.spark.sql.types.StructType) =
+    s.fields.map(f => (f.name, f.dataType)).toSeq
+
+  /** Move the stored watermark a day back, so the next run's trigger
+    * copies. Returns the state file. */
+  private def rewindWatermark(cfg: JobConfig): Path = {
+    val statePath = Files.list(Paths.get(cfg.stateDir)).iterator.asScala.toSeq.head
+    val Some(Watermark.State(Watermark.TimestampV(ts), h)) = Watermark.readState(statePath)
+    Watermark.writeState(statePath,
+      Watermark.State(Watermark.TimestampV(new Timestamp(ts.getTime - 86400000L)), h))
+    statePath
   }
 
   test("full 4-phase run: extract → load → publish → GC, result Copied") {
@@ -402,10 +434,7 @@ class CopyJobSpec extends SparkSpec {
     assert(CopyJob.run(spark, cfg) == Copied)
     // an older stored watermark, so the next run's trigger copies; a
     // sentinel row a JdbcLoad's truncate would remove
-    val statePath = Files.list(Paths.get(cfg.stateDir)).iterator.asScala.toSeq.head
-    val Some(Watermark.State(Watermark.TimestampV(ts), h)) = Watermark.readState(statePath)
-    Watermark.writeState(statePath,
-      Watermark.State(Watermark.TimestampV(new Timestamp(ts.getTime - 86400000L)), h))
+    val statePath = rewindWatermark(cfg)
     derby(_.executeUpdate("INSERT INTO region_live VALUES (99, 'sentinel', '')"))
     val state0 = Files.readString(statePath)
     val snaps = Seq("n_snap", "s_snap")
@@ -428,13 +457,110 @@ class CopyJobSpec extends SparkSpec {
     // count rode the write, 10 after. Per table 5 went: the extract's
     // source re-resolve (1 inference job), the staged read-back
     // (1 inference + 2 count jobs) and the load's second staged read
-    // (1 inference job)
+    // (1 inference job). 8 since a snapshot is a copy of the staged
+    // files: each table's snapshot write (1 job) went
     val cfg = freshCfg(Seq(
       TableSpec("nation", FromSpec("nation"), "n_jobs"),
       TableSpec("region", FromSpec("region"), "r_jobs")))
     val (r, jobs) = JobCount(spark, "copyjob-two-tables")(CopyJob.run(spark, cfg))
     assert(r == Copied)
-    assert(jobs <= 20 - 2 * 5, s"two-table run took $jobs Spark jobs")
+    assert(jobs <= 20 - 2 * 5 - 2, s"two-table run took $jobs Spark jobs")
+  }
+
+  test("a copying run resolves each source table once: one inference job per table") {
+    // the trigger, the events and orders extracts and the A3 query's views
+    // share one resolution of each table. The query registers a view of
+    // every harness table, so the run resolves all of them: 10 inference
+    // jobs and 24 jobs in all; 13 and 30 when the trigger, each extract
+    // and the query resolved their own (events three times, orders twice)
+    val cfg = freshCfg(Seq(
+      TableSpec("ev", FromSpec("events"), "ev_once"),
+      TableSpec("ord", FromSpec("orders"), "ord_once"),
+      TableSpec("q", FromSpec("q", query = Some(
+        "SELECT c_nationkey, count(*) AS n FROM orders JOIN customer " +
+          "ON o_custkey = c_custkey GROUP BY c_nationkey")), "q_once")),
+      trigger = Some(TriggerSpec("events", "ts")))
+    val (r, inference) = JobCount(spark, "copyjob-resolve-once", JobCount.sourceResolution)(
+      CopyJob.run(spark, cfg))
+    assert(r == Copied)
+    assert(inference == Tables.names.size, s"$inference inference jobs")
+  }
+
+  test("a ViewSwitch table's load is one Spark job: F3's read of the staging") {
+    // a resumed run is the load alone: validate, copy, publish, clean up.
+    // 2 jobs when the snapshot was a Spark write of the validated data
+    val cfg = freshCfg(Seq(TableSpec("nation", FromSpec("nation"), "n_load")))
+    Staging.stage(Tables(spark, sf(), "nation"), stagingDir(cfg, "nation", "n_load").toString)
+    val (r, jobs) = JobCount(spark, "copyjob-viewswitch-load")(
+      CopyJob.run(spark, cfg.copy(resumeFromStaging = true)))
+    assert(r == Copied)
+    assert(jobs == 1, s"the load ran $jobs Spark jobs")
+    assert(Publish.readCurrent(spark, cfg.targetRoot, "n_load").count() == 25)
+  }
+
+  test("a publish that fails after the load leaves every staging whole; --resume completes it") {
+    val tables = Seq(
+      TableSpec("nation", FromSpec("nation"), "n_fault"),
+      TableSpec("region", FromSpec("region"), "r_fault"))
+    val cfg = freshCfg(tables, trigger = Some(TriggerSpec("events", "ts")))
+    assert(CopyJob.run(spark, cfg) == Copied)
+    val statePath = rewindWatermark(cfg)
+    val state0 = Files.readString(statePath)
+    val current0 = tables.map(t => Publish.currentVersion(cfg.targetRoot, t.to))
+    // a non-empty directory where region's CURRENT goes: its ATOMIC_MOVE fails
+    val ptr = Paths.get(cfg.targetRoot, "r_fault", "CURRENT")
+    Files.delete(ptr)
+    Files.createDirectories(ptr.resolve("blocker"))
+
+    assert(CopyJob.run(spark, cfg).isInstanceOf[Failed])
+    assert(Files.readString(statePath) == state0, "the watermark moved on a failed run")
+    tables.zip(Seq(25L, 5L)).foreach { case (t, n) =>
+      val staged = Staging.validate(spark, stagingDir(cfg, t.from.name, t.to).toString)
+      assert(staged.manifest.count == n && staged.data.count() == n, s"${t.id} staging")
+    }
+
+    graft.FsUtil.deleteRecursively(ptr)
+    assert(CopyJob.run(spark, cfg.copy(resumeFromStaging = true)) == Copied)
+    val fresh = freshCfg(tables)
+    assert(CopyJob.run(spark, fresh) == Copied)
+    tables.zip(current0).foreach { case (t, before) =>
+      val now = Publish.currentVersion(cfg.targetRoot, t.to)
+      assert(now.isDefined && now != before && now == Publish.findNewestVersion(cfg.targetRoot, t.to))
+      assert(rows(Publish.readCurrent(spark, cfg.targetRoot, t.to)) ==
+        rows(Publish.readCurrent(spark, fresh.targetRoot, t.to)), t.id)
+    }
+  }
+
+  test("a stale tmp_data never leaks into a TempSwap publish (E2)") {
+    val cfg = freshCfg(Seq(TableSpec("r", FromSpec("region"), "r_stale", publishMode = TempSwap)))
+    val region = Tables(spark, sf(), "region")
+    val tmp = Paths.get(cfg.targetRoot, "r_stale", "tmp_data")
+    region.withColumn("r_regionkey", region("r_regionkey") + 100).write.parquet(tmp.toString)
+    assert(CopyJob.run(spark, cfg) == Copied)
+    assert(rows(spark.read.parquet(s"${cfg.targetRoot}/r_stale/data")) == rows(region))
+    assert(!Files.exists(tmp))
+  }
+
+  test("ViewSwitch and TempSwap publish the trimmed source rows with the manifest's schema") {
+    val padded = "SELECT n_nationkey, concat('  ', n_name, ' ') AS n_name, n_regionkey FROM nation"
+    val cfg = freshCfg(Seq(
+      TableSpec("vs", FromSpec("vs", query = Some(padded)), "n_vs"),
+      TableSpec("ts", FromSpec("ts", query = Some(padded)), "n_ts", publishMode = TempSwap)))
+    assert(CopyJob.run(spark, cfg) == Copied)
+    val source = Tables(spark, sf(), "nation")
+      .selectExpr("n_nationkey", "concat('  ', n_name, ' ') AS n_name", "n_regionkey")
+    val trimmed = Staging.applyAutoTrim(source)
+    val manifest = {
+      val dir = Files.createTempDirectory("fidelity").toString
+      Staging.stage(source, dir)
+      Staging.readManifest(dir).get
+    }
+    Seq(Publish.readCurrent(spark, cfg.targetRoot, "n_vs"),
+      spark.read.parquet(s"${cfg.targetRoot}/n_ts/data")).foreach { published =>
+      assert(rows(published) == rows(trimmed))
+      assert(shape(published.schema) == shape(manifest.schema))
+    }
+    assert(rows(trimmed) != rows(source))   // the padding was there to trim
   }
 
   test("end-to-end copy into a live JDBC database (C3/C7 via graft-jdbc)") {
@@ -489,7 +615,10 @@ class CopyJobSpec extends SparkSpec {
         query = Some("SELECT * FROM nation WHERE n_nationkey < 0")), "empty_out",
         allowEmpty = true)))
     assert(CopyJob.run(spark, cfg) == Copied)
-    assert(Publish.readCurrent(spark, cfg.targetRoot, "empty_out").count() == 0)
+    // a readable 0-row snapshot that keeps its schema (B4)
+    val snap = Publish.readCurrent(spark, cfg.targetRoot, "empty_out")
+    assert(snap.count() == 0)
+    assert(shape(snap.schema) == shape(Tables(spark, sf(), "nation").schema))
   }
 
   test("trigger: first run copies, unchanged watermark → NoNewData, exit codes") {
