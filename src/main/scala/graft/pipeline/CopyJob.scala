@@ -47,16 +47,12 @@ object CopyJob {
   /** C1/C2/C4 live-MonetDB load via the reference's runtime cascade
     * (`CopyTool.java:829-866`): COPY-from-file (needs `copyDir`, a
     * server-readable shared mount) → COPY-from-STDIN (distributed, one
-    * MAPI socket per partition, exact-count RECORDS hints) → batched
-    * INSERT over JDBC. `configured = Some(BatchedInsert)` skips the COPY
-    * attempts, mirroring `copymethod=insert`. The load is the publish. */
+    * MAPI socket per partition, exact-count RECORDS hints) → `insert`,
+    * the batched-INSERT load over JDBC. The load is the publish. */
   final case class MonetLoad(
       host: String, port: Int, user: String, password: String,
       database: String, schema: String,
-      jdbcUrl: String, batchSize: Int = 10000,
-      configured: Option[graft.sinks.MonetSink.LoadMethod] = None,
-      copyDir: Option[String] = None,
-      locked: Boolean = true) extends PublishMode
+      insert: JdbcLoad, copyDir: Option[String]) extends PublishMode
 
   final case class TableSpec(
       id: String,
@@ -178,36 +174,34 @@ object CopyJob {
     * (the target must pre-exist on this path — D3 DDL is the caller's
     * step).
     *
-    * The stdin rung runs with `failOnTaskRetry` so a Spark task retry
-    * can never re-COPY a committed partition; the rung fails instead
-    * and the INSERT rung replaces any partial state — exactly-once end
-    * to end. A missing `copyDir` makes the file attempt fail fast
-    * BEFORE its truncate (no shared mount ⇒ the server can't read our
-    * part files; no point emptying the table for a rung that cannot
-    * run), exactly like the reference when its temp CSV is unreachable
-    * (`CopyTool.java:823-826`). `records` is the staged manifest
-    * count — the exact-count RECORDS hint both COPY forms carry. */
+    * A Spark task retry in the stdin rung can never re-COPY a committed
+    * partition; the rung fails instead and the INSERT rung replaces any
+    * partial state — exactly-once end to end. A missing `copyDir` makes
+    * the file attempt fail fast BEFORE its truncate (no shared mount ⇒
+    * the server can't read our part files; no point emptying the table
+    * for a rung that cannot run), exactly like the reference when its
+    * temp CSV is unreachable (`CopyTool.java:823-826`). `records` is the
+    * staged manifest count — the file COPY's exact-count RECORDS hint. */
   private def monetLoad(staged: DataFrame, m: MonetLoad, table: String,
       records: Long): Unit = {
     import graft.sinks.MonetSink
     def truncate(): Unit = MonetSink.truncateViaMapi(m.host, m.port, m.user,
       m.password, m.database, m.schema, table)
-    MonetSink.loadWithCascade(m.configured,
+    MonetSink.loadWithCascade(
       copyFile = () => {
         val dir = m.copyDir.getOrElse(throw new IllegalStateException(
           "COPY INTO FROM file needs graft.monet.copydir (a server-readable shared mount)"))
         truncate()
         MonetSink.copyViaFiles(staged, m.host, m.port, m.user,
-          m.password, m.database, m.schema, table, dir,
-          records = Some(records), locked = m.locked)
+          m.password, m.database, m.schema, table, dir, records)
       },
       copyStdin = () => {
         truncate()
         MonetSink.copyViaStdinDistributed(staged, m.host,
-          m.port, m.user, m.password, m.database, m.schema, table,
-          locked = m.locked, recordsHint = true, failOnTaskRetry = true)
+          m.port, m.user, m.password, m.database, m.schema, table)
+        ()
       },
-      insert = () => jdbcLoad(staged, JdbcLoad(m.jdbcUrl, m.batchSize), table))
+      insert = () => jdbcLoad(staged, m.insert, table))
     ()
   }
 
@@ -318,14 +312,6 @@ object CopyJob {
     }
   }
 
-  /** H4 multi-config sequential runs (the reference's docker-entrypoint
-    * loop over N config files): run each job in order, never letting one
-    * failure stop the fleet; returns per-job results. */
-  def runAll(spark: SparkSession, configs: Seq[JobConfig]): Seq[JobResult] =
-    configs.map { cfg =>
-      try run(spark, cfg) catch { case e: Exception => Failed(e.getMessage, Some(e)) }
-    }
-
   /** H5 failure alerting: the engine-core hook — the reference's SMTP
     * mailer is one possible `alert` implementation (deliberately outside
     * the engine, SURVEY §2.H5). */
@@ -350,10 +336,7 @@ object CopyJob {
     var runs = 0
     while (runs < maxRuns) {
       val c = if (runs == 0) firstRunCfg.getOrElse(cfg) else cfg
-      val result = try run(spark, c) catch {
-        case e: Exception => Failed(e.getMessage, Some(e))
-      }
-      onResult(result)
+      onResult(run(spark, c))
       runs += 1
       if (runs < maxRuns) Thread.sleep(intervalSeconds * 1000)
     }

@@ -25,8 +25,6 @@ object PropertiesConfig {
       from: Option[String], fromColumns: Option[String],
       fromQuery: Option[String], fromCountQuery: Option[String],
       to: String, schema: String,
-      create: Boolean, truncate: Boolean, drop: Boolean,
-      copyViaTempTable: Boolean, tempTablePrefix: String,
       useFastViewSwitching: Boolean,
       allowEmpty: Boolean, autoTrim: Boolean,
       copyMethod: Option[String])
@@ -77,6 +75,13 @@ object PropertiesConfig {
     val props = parseProperties(text, env)
     var warnings = Vector.empty[String]
 
+    /** A whole-number value; a malformed one fails the parse, naming the
+      * key, instead of falling back to a default. */
+    def intProp(key: String, valid: Int => Boolean = _ => true,
+        what: String = "an integer"): Option[Int] =
+      props.get(key).map(v => v.toIntOption.filter(valid).getOrElse(
+        throw new IllegalArgumentException(s"'$key' must be $what, got '$v'")))
+
     def sourcesFor(prefix: String, dialect: SqlGen.Dialect): Map[String, SourceDef] = {
       // keys look like `mssql.<id>.<prop>` or bare `mssql.<prop>` (default id)
       val keys = props.keySet.filter(_.startsWith(prefix + "."))
@@ -89,25 +94,21 @@ object PropertiesConfig {
         }
       }
       ids.flatMap { id =>
-        def get(p: String) =
-          if (id == DefaultSourceId) props.get(s"$prefix.$p")
-          else props.get(s"$prefix.$id.$p")
+        def key(p: String) = if (id == DefaultSourceId) s"$prefix.$p" else s"$prefix.$id.$p"
+        def get(p: String) = props.get(key(p))
         (get("server"), get("database")) match {
           case (Some(server), Some(db)) =>
             // fail at PARSE, naming the exact key: `instance` is an MS
             // SQL Server concept; silently accepting (or dropping) it on
             // a PostgreSQL source misleads, and a URL-build-time error
             // would surface mid-run without the source id in hand
-            if (dialect == SqlGen.Postgres && get("instance").exists(_.trim.nonEmpty)) {
-              val key = if (id == DefaultSourceId) s"$prefix.instance"
-                        else s"$prefix.$id.instance"
+            if (dialect == SqlGen.Postgres && get("instance").exists(_.trim.nonEmpty))
               throw new IllegalArgumentException(
-                s"'$key' is set but 'instance' is an MS SQL Server named-instance " +
+                s"'${key("instance")}' is set but 'instance' is an MS SQL Server named-instance " +
                   "property; remove it from the PostgreSQL source block")
-            }
             Some(id -> SourceDef(id, dialect, server, db,
               get("user").getOrElse(""), get("password").getOrElse(""),
-              get("port").flatMap(_.toIntOption), get("instance")))
+              intProp(key("port")), get("instance")))
           case _ =>
             warnings :+= s"source '$id' ($prefix) missing server/database — skipped"
             None
@@ -121,7 +122,7 @@ object PropertiesConfig {
     val target = (props.get("monetdb.server"), props.get("monetdb.database")) match {
       case (Some(s), Some(d)) => Some(SourceDef("monetdb", SqlGen.Postgres, s, d,
         props.getOrElse("monetdb.user", ""), props.getOrElse("monetdb.password", ""),
-        props.get("monetdb.port").flatMap(_.toIntOption), None))
+        intProp("monetdb.port"), None))
       case _ => None
     }
 
@@ -166,10 +167,6 @@ object PropertiesConfig {
       } else Some(id -> TableDef(
         id, sourceId, from, get("from.columns"), fromQuery, fromCountQuery,
         to.get, get("schema").getOrElse("sys"),
-        flag("create", dflt = true), flag("truncate", dflt = false),
-        flag("drop", dflt = true),
-        flag("copyViaTempTable", dflt = false),
-        get("tempTablePrefix").getOrElse("tmp_"),
         flag("useFastViewSwitching", dflt = true),
         flag("allowempty", dflt = false), flag("autotrim", dflt = true),
         get("copymethod")))
@@ -184,7 +181,7 @@ object PropertiesConfig {
     val interval = props.get("scheduler.interval").map(Intervals.parseSeconds)
 
     Parsed(sources, tables, target, trigger, interval,
-      props.get("batch.size").flatMap(_.toIntOption).getOrElse(10000), warnings)
+      intProp("batch.size", _ > 0, "a positive integer").getOrElse(10000), warnings)
   }
 
   /** Strict variant: zero valid tables is a configuration error (the
@@ -203,7 +200,7 @@ object PropertiesConfig {
     * reference's config surface to the distributed batched-INSERT path.
     * `batch.size` is the reference's global knob (default 10000). */
   def jdbcLoadMode(parsed: Parsed,
-      props: Map[String, String] = Map.empty): Option[CopyJob.JdbcLoad] =
+      props: Map[String, String]): Option[CopyJob.JdbcLoad] =
     parsed.target.map { t =>
       // `graft.jdbc.url` overrides the MonetDB-derived URL so the same
       // pipeline drives any JDBC target (and the e2e spec a live
@@ -211,7 +208,7 @@ object PropertiesConfig {
       // reference's own monetdb.* block
       CopyJob.JdbcLoad(
         props.getOrElse("graft.jdbc.url", SqlGen.monetDbUrl(t.server, t.database)),
-        props.get("batch.size").flatMap(_.toIntOption).getOrElse(10000))
+        parsed.batchSize)
     }
 
   /** Per-table live-MonetDB publish mode, honoring `table.<id>.copymethod`
@@ -241,9 +238,7 @@ object PropertiesConfig {
         case Some("copyinto") =>
           CopyJob.MonetLoad(tgt.server, tgt.port.getOrElse(50000),
             tgt.user, tgt.password, tgt.database, t.schema,
-            jdbcUrl = jdbc.url, batchSize = jdbc.batchSize,
-            configured = Some(graft.sinks.MonetSink.CopyIntoFromFile),
-            copyDir = props.get("graft.monet.copydir"))
+            insert = jdbc, copyDir = props.get("graft.monet.copydir"))
         case _ => jdbc
       }
     }

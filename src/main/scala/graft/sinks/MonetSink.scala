@@ -1,60 +1,22 @@
 package graft.sinks
 
-import java.sql.Types
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcType, JdbcDialects}
-import org.apache.spark.sql.types._
-import graft.types.{Identifiers, TypeMap}
+import graft.types.Identifiers
 
 /** MonetDB target support (SURVEY.md §2.C, §2.D).
   *
-  * Three layers:
-  *  1. [[MonetDbDialect]] — a Spark `JdbcDialect` so `df.write.jdbc`
-  *     (the C3 batched-INSERT path, `batchsize` option = the reference's
-  *     `batch.size`) emits MonetDB-correct identifiers/types/truncate;
-  *  2. [[MonetDdl]] — the catalog DDL strings (D1-D11) as pure,
+  * Two layers:
+  *  1. [[MonetDdl]] — the catalog DDL strings (D1-D11) as pure,
   *     golden-testable generators;
-  *  3. [[MonetSink.copyIntoSql]] — the C1/C2 `COPY INTO` bulk-load
-  *     statements (records hint, LOCKED mode, the reference's delimiter
-  *     and NULL conventions).
+  *  2. [[MonetSink]] — the C1/C2 `COPY INTO` bulk loads over MAPI
+  *     (exact-count records hint, LOCKED mode, the reference's delimiter
+  *     and NULL conventions), the C7 truncate and the C4 cascade policy.
+  *     The C3 batched-INSERT rung is the `graft-jdbc` writer
+  *     ([[JdbcBatchDataSource]]).
   *
   * No live MonetDB exists in the test container; the SQL/config surface
   * is unit-tested, execution happens in integration environments.
   */
-object MonetDbDialect extends JdbcDialect {
-  override def canHandle(url: String): Boolean = url.startsWith("jdbc:monetdb:")
-
-  /** Identifier policy: lowercase + quote (`MonetDBTable.java:50-53`,
-    * `MonetDBUtil.java:301-333`). */
-  override def quoteIdentifier(colName: String): String = Identifiers.quote(colName)
-
-  override def getJDBCType(dt: DataType): Option[JdbcType] = dt match {
-    case LongType         => Some(JdbcType("bigint", Types.BIGINT))
-    case BinaryType       => Some(JdbcType("blob", Types.BLOB))
-    case BooleanType      => Some(JdbcType("boolean", Types.BOOLEAN))
-    case StringType       => Some(JdbcType("clob", Types.CLOB))
-    case DateType         => Some(JdbcType("date", Types.DATE))
-    case d: DecimalType   =>
-      Some(JdbcType(TypeMap.sparkToMonetDdlType(d), Types.DECIMAL))
-    case DoubleType       => Some(JdbcType("double", Types.DOUBLE))
-    case IntegerType      => Some(JdbcType("int", Types.INTEGER))
-    case FloatType        => Some(JdbcType("real", Types.REAL))
-    case ShortType        => Some(JdbcType("smallint", Types.SMALLINT))
-    case TimestampType    => Some(JdbcType("timestamp", Types.TIMESTAMP))
-    case TimestampNTZType => Some(JdbcType("timestamp", Types.TIMESTAMP))
-    case ByteType         => Some(JdbcType("tinyint", Types.TINYINT))
-    case _                => None
-  }
-
-  /** MonetDB-style truncate is `DELETE FROM` (C7, `MonetDBUtil.java:93-107`). */
-  override def getTruncateQuery(table: String,
-      cascade: Option[Boolean] = None): String = s"DELETE FROM $table"
-
-  override def isCascadingTruncateTable(): Option[Boolean] = Some(false)
-}
-
-/** Catalog DDL generation (D1-D11) — pure string builders mirroring
-  * `MonetDBUtil.java`. */
 object MonetDdl {
   private def q(s: String) = Identifiers.quote(s)
 
@@ -93,40 +55,33 @@ object MonetDdl {
 
 object MonetSink {
 
-  /** Ensure the dialect is registered (idempotent). */
-  def registerDialect(): Unit = JdbcDialects.registerDialect(MonetDbDialect)
-
   sealed trait LoadMethod
   case object CopyIntoFromFile extends LoadMethod  // C1
   case object CopyIntoFromStdin extends LoadMethod // C2
   case object BatchedInsert extends LoadMethod     // C3
 
-  /** C1/C2 `COPY INTO` statement. Conventions are the reference's staging
-    * contract (`CopyTool.java:984-991,1053-1061`): exact-count records
-    * hint (lets the server pre-allocate), `LOCKED` WAL bypass (default
-    * ON), comma/newline/doublequote delimiters, `\N` NULLs. */
-  def copyIntoSql(schema: String, table: String, records: Option[Long],
-      source: Option[String], locked: Boolean = true): String = {
-    val hint = records.map(n => s"$n RECORDS ").getOrElse("")
-    val from = source.map(f => s"FROM '$f'").getOrElse("FROM STDIN")
-    val lock = if (locked) " LOCKED" else ""
-    s"COPY ${hint}INTO ${Identifiers.quote(schema)}.${Identifiers.quote(table)} " +
-      s"$from USING DELIMITERS ',','\\n','\"' NULL AS '\\\\N'$lock"
-  }
+  /** One `COPY INTO` statement in the reference's staging contract
+    * (`CopyTool.java:984-991,1053-1061`): exact-count records hint (lets
+    * the server pre-allocate), comma/newline/doublequote delimiters, `\N`
+    * NULLs, and `LOCKED` WAL bypass (C6, the reference's default, always
+    * on here). */
+  private def copySql(schema: String, table: String, records: Long, from: String): String =
+    s"COPY $records RECORDS INTO ${Identifiers.quote(schema)}.${Identifiers.quote(table)} " +
+      s"FROM $from USING DELIMITERS ',','\\n','\"' NULL AS '\\\\N' LOCKED"
+
+  /** C2 `COPY INTO ... FROM STDIN`. */
+  def copyIntoSql(schema: String, table: String, records: Long): String =
+    copySql(schema, table, records, "STDIN")
 
   /** C1 multi-file `COPY INTO` (the distributed twin of the reference's
     * single-temp-CSV `COPY INTO ... FROM 'file'`): Spark writes one CSV
     * part per partition, and MonetDB's FROM clause takes the whole list
     * in one statement — one transaction, one RECORDS pre-allocation
     * hint, N files read server-side. */
-  def copyIntoSqlFiles(schema: String, table: String, records: Option[Long],
-      files: Seq[String], locked: Boolean = true): String = {
+  def copyIntoSqlFiles(schema: String, table: String, records: Long,
+      files: Seq[String]): String = {
     require(files.nonEmpty, "COPY INTO FROM files: empty file list")
-    val hint = records.map(n => s"$n RECORDS ").getOrElse("")
-    val lock = if (locked) " LOCKED" else ""
-    s"COPY ${hint}INTO ${Identifiers.quote(schema)}.${Identifiers.quote(table)} " +
-      s"FROM ${files.map(f => s"'$f'").mkString(", ")} " +
-      s"USING DELIMITERS ',','\\n','\"' NULL AS '\\\\N'$lock"
+    copySql(schema, table, records, files.map(f => s"'$f'").mkString(", "))
   }
 
   /** C1 execution at cluster scale: CSV formatting AND file writes are
@@ -139,15 +94,13 @@ object MonetSink {
     * connection with the exact-count RECORDS hint
     * (`CopyTool.java:984-991`). After a successful COPY the staged CSV
     * is deleted, like the reference's temp-file cleanup
-    * (`CopyTool.java:698-704` temp handling); pass `cleanup = false`
-    * to keep it (debugging, or inspection in specs). This is the
-    * reference's fastest load path without its driver-side CSV
-    * bottleneck: the driver never formats or moves a row, it only
-    * issues the final statement. */
+    * (`CopyTool.java:698-704` temp handling). This is the reference's
+    * fastest load path without its driver-side CSV bottleneck: the
+    * driver never formats or moves a row, it only issues the final
+    * statement. */
   def copyViaFiles(df: DataFrame, host: String, port: Int, user: String,
       password: String, database: String, schema: String, table: String,
-      dir: String, records: Option[Long] = None, locked: Boolean = true,
-      cleanup: Boolean = true): Unit = {
+      dir: String, records: Long): Unit = {
     val tableDir = new java.io.File(dir,
       s"${Identifiers.normalize(schema)}.${Identifiers.normalize(table)}")
     df.select(csvLine(df).as("line"))
@@ -163,18 +116,16 @@ object MonetSink {
       .filter(f => f.isFile && f.getName.startsWith("part-"))
       .map(_.getAbsolutePath).sorted.toSeq
     val client = MapiClient.connect(host, port, user, password, database)
-    try client.query(copyIntoSqlFiles(schema, table, records, files, locked))
+    try client.query(copyIntoSqlFiles(schema, table, records, files))
     finally client.close()
-    if (cleanup) {
-      tableDir.listFiles().foreach(_.delete())
-      tableDir.delete()
-      ()
-    }
+    tableDir.listFiles().foreach(_.delete())
+    tableDir.delete()
+    ()
   }
 
   /** C7 truncate over the MAPI channel (`MonetDBUtil.java:93-107` —
     * MonetDB-style truncate is `DELETE FROM`). The pipeline issues this
-    * ONCE before entering the C4 cascade so every rung — COPY-file,
+    * before each COPY rung of the C4 cascade so every rung — COPY-file,
     * COPY-stdin, INSERT — starts from the same empty table and shares
     * replace semantics (the reference truncates before any load method,
     * `CopyTool.java:806-812`). */
@@ -182,26 +133,15 @@ object MonetSink {
       password: String, database: String, schema: String,
       table: String): Unit = {
     val client = MapiClient.connect(host, port, user, password, database)
-    try client.query(MonetDbDialect.getTruncateQuery(
-      s"${Identifiers.quote(schema)}.${Identifiers.quote(table)}"))
+    try client.query(s"DELETE FROM ${Identifiers.quote(schema)}.${Identifiers.quote(table)}")
     finally client.close()
     ()
   }
 
-  /** C4 load-method selection: the reference cascades
-    * COPY-file → COPY-stdin → INSERT at runtime; Spark-side the writer is
-    * chosen up front (a cascade is only meaningful against a live server;
-    * the enum + this policy function preserve the semantics). A freshly
-    * created table auto-promotes to COPY INTO (C5,
-    * `MonetDBUtil.java:183-189`). */
-  def chooseLoadMethod(configured: Option[LoadMethod], freshTable: Boolean): LoadMethod =
-    configured.getOrElse(if (freshTable) CopyIntoFromFile else BatchedInsert)
-
   /** One CSV record in the reference's staging dialect
     * (`CopyTool.java:692-728`): every non-null value double-quoted with
     * `\` and `"` backslash-escaped, nulls as bare `\N`, comma separator.
-    * Built as a codegen'd Column so formatting runs distributed; only the
-    * finished lines ever reach the driver-side socket pump. */
+    * Built as a codegen'd Column so formatting runs distributed. */
   def csvLine(df: DataFrame): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
     val cells = df.schema.fields.map { f =>
@@ -213,140 +153,87 @@ object MonetSink {
     concat(cells.toIndexedSeq.flatMap(c => Seq(lit(","), c)).drop(1): _*)
   }
 
-  /** C2 execution: stream the DataFrame through one MAPI socket as
-    * `COPY INTO ... FROM STDIN`. CSV formatting is distributed; the
-    * driver pumps finished lines into the block stream (constant memory —
-    * `toLocalIterator` holds one partition at a time). One socket by
-    * design: LOCKED-mode COPY serializes on the server anyway, and the
-    * parallel many-connection path is the DSv2 JDBC writer (C3); this is
-    * the DB-bound bulk channel, where MonetDB itself is the bottleneck. */
-  def copyViaStdin(df: DataFrame, host: String, port: Int, user: String,
-      password: String, database: String, schema: String, table: String,
-      records: Option[Long] = None, locked: Boolean = true): Long = {
-    val sql = copyIntoSql(schema, table, records, source = None, locked = locked)
-    val lines = df.select(csvLine(df).as("line"))
-      .toLocalIterator()
-    val client = MapiClient.connect(host, port, user, password, database)
-    try client.copyIntoStdin(sql, new Iterator[String] {
-      override def hasNext: Boolean = lines.hasNext
-      override def next(): String = lines.next().getString(0)
-    })
-    finally client.close()
-  }
-
-  /** C2 at cluster scale: every partition opens its OWN MAPI connection
-    * and streams its rows as an independent `COPY INTO ... FROM STDIN`.
-    * The reference holds one socket because it is a single-threaded
-    * process ([[copyViaStdin]] mirrors that parity path, driver-pumped);
-    * on a cluster the single-socket form makes the driver the choke
-    * point for the whole corpus, so this is the scale path: CSV
-    * formatting AND the socket I/O stay on the executors, the driver
-    * never sees a row. Per-partition COPYs commit independently —
-    * MonetDB serializes concurrent LOCKED loads server-side, which
-    * bounds the win at however fast the server ingests (same ceiling
-    * the reference hits), but partitions overlap their format/transfer
-    * work instead of queueing behind one pump.
+  /** C2 execution at cluster scale: every partition opens its OWN MAPI
+    * connection and streams its rows as an independent `COPY INTO ...
+    * FROM STDIN`. The reference holds one socket because it is a
+    * single-threaded process; on a cluster that would make the driver
+    * the choke point for the whole corpus, so CSV formatting AND the
+    * socket I/O stay on the executors and the driver never sees a row.
+    * Per-partition COPYs commit independently — MonetDB serializes
+    * concurrent LOCKED loads server-side, which bounds the win at
+    * however fast the server ingests (same ceiling the reference hits),
+    * but partitions overlap their format/transfer work instead of
+    * queueing behind one pump. Returns the rows the server acknowledged.
     *
-    * `recordsHint` restores the reference's exact-count `COPY n
-    * RECORDS` pre-allocation (`CopyTool.java:984-985`) on this path:
-    * per-COPY counts differ per partition, so a counting pass runs
-    * first and each partition's COPY carries its own exact count. Both
-    * passes read ONE persisted RDD of formatted lines — the count pass
-    * materializes each partition and the stream pass replays the pinned
-    * blocks, so a non-deterministic upstream (sample(), rand()-derived
-    * filters) cannot make the hint understate the stream and have the
-    * server silently stop reading early. (Executor loss can still evict
-    * a pinned block and force recomputation — the narrow residual
-    * window; an understated hint there fails the COPY loudly rather
-    * than dropping data, since the server replies before EOF.)
+    * Each partition's COPY carries its own exact-count `n RECORDS`
+    * pre-allocation hint (`CopyTool.java:984-985`), so a counting pass
+    * runs first. Both passes read ONE persisted RDD of formatted lines —
+    * the count pass materializes each partition and the stream pass
+    * replays the pinned blocks, so a non-deterministic upstream
+    * (sample(), rand()-derived filters) cannot make the hint understate
+    * the stream and have the server silently stop reading early.
+    * (Executor loss can still evict a pinned block and force
+    * recomputation — the narrow residual window; an understated hint
+    * there fails the COPY loudly rather than dropping data, since the
+    * server replies before EOF.)
     *
-    * Delivery is AT-LEAST-ONCE under task retry by default: a partition
-    * that fails after its COPY committed re-runs and loads again
-    * (disable `spark.speculation` for this sink). The reference has the
-    * same exposure across its per-batch COPYs on crash-retry.
-    * `failOnTaskRetry = true` closes it for callers with a replace-
-    * semantics fallback (the C4 cascade): a re-attempted task refuses
-    * to dial the server at all, so a partition can never COPY twice —
-    * the rung fails instead and the caller's next rung (the
-    * truncate-and-overwrite INSERT) replaces whatever partial state the
-    * failed rung committed. Exactly-once without a distributed
-    * transaction: never-duplicate here, replace-on-failure there. */
+    * A re-attempted task refuses to dial the server at all, so a
+    * partition can never COPY twice: the load fails instead, and the C4
+    * cascade's next rung (the truncate-and-overwrite INSERT) replaces
+    * whatever partial state this one committed. Exactly-once without a
+    * distributed transaction: never-duplicate here, replace-on-failure
+    * there. */
   def copyViaStdinDistributed(df: DataFrame, host: String, port: Int,
       user: String, password: String, database: String, schema: String,
-      table: String, locked: Boolean = true,
-      recordsHint: Boolean = false,
-      failOnTaskRetry: Boolean = false): Unit = {
-    def guard(): Unit =
-      if (failOnTaskRetry) {
-        val tc = org.apache.spark.TaskContext.get()
-        if (tc != null && tc.attemptNumber() > 0)
-          throw new IllegalStateException(
-            "COPY INTO FROM STDIN partition re-attempt refused: the prior " +
-              "attempt may have committed its COPY; retrying would " +
-              "duplicate rows. Failing the rung so the cascade's " +
-              "replace-semantics fallback reloads the table.")
-      }
-    val lines = df.select(csvLine(df).as("line"))
-    if (recordsHint) {
-      val rdd = lines.rdd.map(_.getString(0))
-      // DISK_ONLY, serialized: the pinned copy exists for determinism
-      // (both passes replay identical blocks), not for speed — the load
-      // is server-ingest-bound anyway, and a memory-resident
-      // deserialized-String copy of a whole staged table would evict
-      // genuinely hot cache across the executor fleet
-      rdd.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      try {
-        // one (partitionId, count) pair per partition — bounded by the
-        // partition count, not the data; materializes the pinned blocks
-        // the stream pass below replays
-        val counts = rdd
-          .mapPartitionsWithIndex((i, it) => Iterator((i, it.size.toLong)))
-          .collect().toMap
-        val bc = df.sparkSession.sparkContext.broadcast(counts)
-        rdd.mapPartitionsWithIndex { (i, it) =>
-          if (it.hasNext) { // empty partitions never dial — and their
-            guard()         // retries are provably safe, so no refusal
-            val sql = copyIntoSql(schema, table, records = bc.value.get(i),
-              source = None, locked = locked)
-            val client = MapiClient.connect(host, port, user, password, database)
-            try client.copyIntoStdin(sql, it)
-            finally client.close()
-          }
-          Iterator.empty[Int]
-        }.count()
-        ()
-      } finally { rdd.unpersist(); () }
-    } else {
-      val sql = copyIntoSql(schema, table, records = None, source = None,
-        locked = locked)
-      lines.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-        if (it.hasNext) { // empty partitions never dial the server;
-          guard()          // their retries can't have committed anything
+      table: String): Long = {
+    val rdd = df.select(csvLine(df).as("line")).rdd.map(_.getString(0))
+    // DISK_ONLY, serialized: the pinned copy exists for determinism
+    // (both passes replay identical blocks), not for speed — the load
+    // is server-ingest-bound anyway, and a memory-resident
+    // deserialized-String copy of a whole staged table would evict
+    // genuinely hot cache across the executor fleet
+    rdd.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    try {
+      // one (partitionId, count) pair per partition — bounded by the
+      // partition count, not the data; materializes the pinned blocks
+      // the stream pass below replays
+      val counts = rdd
+        .mapPartitionsWithIndex((i, it) => Iterator((i, it.size.toLong)))
+        .collect().toMap
+      val bc = df.sparkSession.sparkContext.broadcast(counts)
+      rdd.mapPartitionsWithIndex { (i, it) =>
+        if (!it.hasNext) Iterator.empty // empty partitions never dial, so
+        else {                          // their retries are provably safe
+          val tc = org.apache.spark.TaskContext.get()
+          if (tc != null && tc.attemptNumber() > 0)
+            throw new IllegalStateException(
+              "COPY INTO FROM STDIN partition re-attempt refused: the prior " +
+                "attempt may have committed its COPY; retrying would " +
+                "duplicate rows. Failing the rung so the cascade's " +
+                "replace-semantics fallback reloads the table.")
           val client = MapiClient.connect(host, port, user, password, database)
-          try client.copyIntoStdin(sql, it.map(_.getString(0)))
+          try Iterator(client.copyIntoStdin(copyIntoSql(schema, table, bc.value(i)), it))
           finally client.close()
-          ()
         }
-      }
-    }
+      }.fold(0L)(_ + _)
+    } finally { rdd.unpersist(); () }
   }
 
-  /** C4 runtime cascade (`CopyTool.java:829-866`): unless the configured
-    * method is INSERT, try COPY-from-file; on failure fall through to
-    * COPY-from-STDIN; on failure fall through to batched INSERTs; if
-    * everything failed, raise. Returns the method that succeeded. The
-    * attempts are passed as thunks so the policy is unit-testable without
-    * a live server and reusable across JDBC/MAPI transports. */
-  def loadWithCascade(configured: Option[LoadMethod],
-      copyFile: () => Unit, copyStdin: () => Unit, insert: () => Unit): LoadMethod = {
+  /** C4 runtime cascade (`CopyTool.java:829-866`): try COPY-from-file;
+    * on failure fall through to COPY-from-STDIN; on failure fall through
+    * to batched INSERTs; if everything failed, raise. Returns the method
+    * that succeeded. The attempts are passed as thunks so the policy is
+    * unit-testable without a live server. A `copymethod=insert` table
+    * never reaches this cascade: it loads through the INSERT writer
+    * directly. */
+  def loadWithCascade(copyFile: () => Unit, copyStdin: () => Unit,
+      insert: () => Unit): LoadMethod = {
     def attempt(m: LoadMethod, f: () => Unit): Option[LoadMethod] =
       try { f(); Some(m) } catch { case scala.util.control.NonFatal(_) => None }
-    val viaCopy =
-      if (configured.contains(BatchedInsert)) None
-      else attempt(CopyIntoFromFile, copyFile)
-        .orElse(attempt(CopyIntoFromStdin, copyStdin))
-    viaCopy.orElse(attempt(BatchedInsert, insert)).getOrElse(
-      throw new IllegalStateException(
+    attempt(CopyIntoFromFile, copyFile)
+      .orElse(attempt(CopyIntoFromStdin, copyStdin))
+      .orElse(attempt(BatchedInsert, insert))
+      .getOrElse(throw new IllegalStateException(
         "unable to load data: COPY INTO (file), COPY INTO (stdin) and batched INSERT all failed"))
   }
 
@@ -379,23 +266,5 @@ object MonetSink {
     }
     createView()
     i
-  }
-
-  /** C3 batched-INSERT path via Spark's JDBC writer; `batchsize` is the
-    * reference's `batch.size` (default 10000, `CopyToolConfig.java:44`). */
-  def writeJdbc(df: DataFrame, url: String, schema: String, table: String,
-      user: String, password: String, batchSize: Int = 10000,
-      truncate: Boolean = false): Unit = {
-    registerDialect()
-    val mode = if (truncate) "overwrite" else "append"
-    df.write.mode(mode)
-      .option("truncate", truncate.toString) // overwrite→truncate = C7 DELETE FROM
-      .option("batchsize", batchSize.toString)
-      .jdbc(url, s"${Identifiers.normalize(schema)}.${Identifiers.normalize(table)}", {
-        val p = new java.util.Properties()
-        p.setProperty("user", user)
-        p.setProperty("password", password)
-        p
-      })
   }
 }

@@ -16,6 +16,12 @@ import org.apache.spark.sql.SparkSession
   * This is the scale audit in table form: a query whose shuffle count
   * grows, whose broadcast disappears, or whose filters stop reaching
   * the scan changes a number here and shows up in review.
+  *
+  * Usage: `PlanReport [out.md]` writes the table (default `PLANS.md`);
+  * `PlanReport --dump <outDir> <suffix> <query...>` instead writes each
+  * named query's formatted physical plan to `<outDir>/<query>_<suffix>.txt`
+  * (the before/after plan pairs under `plans/`). The corpus is
+  * `SPARK_GRAFT_SF_DIR` (default sf0.001).
   */
 object PlanReport {
 
@@ -50,8 +56,10 @@ object PlanReport {
   }
 
   def main(args: Array[String]): Unit = {
+    val dump = args.headOption.contains("--dump")
+    require(!dump || args.length >= 4,
+      "usage: PlanReport --dump <outDir> <suffix> <query...>")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val out = args.headOption.getOrElse("PLANS.md")
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
@@ -59,7 +67,24 @@ object PlanReport {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    if (dump) dumpPlans(spark, sfDir, Paths.get(args(1)), args(2), args.drop(3).toSeq)
+    else writeReport(spark, sfDir, args.headOption.getOrElse("PLANS.md"))
+    spark.stop()
+  }
 
+  /** One file per query: its formatted physical plan. */
+  private def dumpPlans(spark: SparkSession, sfDir: String, outDir: java.nio.file.Path,
+      suffix: String, queries: Seq[String]): Unit = {
+    Files.createDirectories(outDir)
+    queries.foreach { q =>
+      val plan = graft.SparkEntry.queries(q)(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      Files.write(outDir.resolve(s"${q}_$suffix.txt"), plan.getBytes(UTF_8))
+      System.err.println(s"[plandump] wrote ${q}_$suffix.txt (${plan.length} chars)")
+    }
+  }
+
+  private def writeReport(spark: SparkSession, sfDir: String, out: String): Unit = {
     val rows = graft.SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       try {
         graft.plans.LeafPlanRegistry.drain() // discard a prior query's leaves
@@ -99,6 +124,5 @@ object PlanReport {
     val doc = header + "\n" + rows.mkString("\n") + "\n"
     Files.write(Paths.get(out), doc.getBytes(UTF_8))
     println(s"[plan-report] wrote ${rows.length} rows to $out")
-    spark.stop()
   }
 }

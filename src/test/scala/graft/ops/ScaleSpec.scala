@@ -104,16 +104,33 @@ class ResumeSpec extends SparkSpec {
     assert(Publish.readCurrent(spark, cfg.targetRoot, "nation_out").count() == 25)
   }
 
-  test("runAll keeps going past a failing job and reports per-job results (H4)") {
+  test("Main's fleet loop keeps going past a failing job and reports per-job results (H4)") {
     val base = Files.createTempDirectory("fleet")
-    def cfg(name: String, query: String) = JobConfig(
-      Seq(TableSpec(name, FromSpec(name, query = Some(query)), s"${name}_out")),
-      sf(), s"$base/staging_$name", s"$base/target", s"$base/state")
-    val results = CopyJob.runAll(spark, Seq(
+    def cfg(name: String, query: String): String = {
+      val p = base.resolve(s"$name.properties")
+      Files.writeString(p,
+        s"""graft.source.dir = ${sf()}
+           |graft.target.dir = $base/target
+           |graft.staging.dir = $base/staging_$name
+           |graft.state.dir = $base/state
+           |table.$name.from.query = $query
+           |table.$name.from.countquery = SELECT count(*) FROM ($query)
+           |table.$name.to = ${name}_out
+           |""".stripMargin)
+      p.toString
+    }
+    val configs = Seq(
       cfg("good1", "SELECT * FROM nation"),
       cfg("bad", "SELECT * FROM nation WHERE n_nationkey < 0"), // empty → guard fails
-      cfg("good2", "SELECT * FROM region")))
-    assert(results.map(_.exitCode) == Seq(0, 1, 0))
+      cfg("good2", "SELECT * FROM region"))
+    val logged = Vector.newBuilder[String]
+    val code = graft.Main.run(configs.flatMap(c => Seq("-c", c)).toArray, spark,
+      logged += _)
+    assert(code == 1)
+    assert(logged.result().filter(_.startsWith("[")) == Seq(
+      s"[${configs(0)}] Copied (exit 0)",
+      s"[${configs(1)}] Failed (exit 1)",
+      s"[${configs(2)}] Copied (exit 0)"))
     assert(Publish.readCurrent(spark, s"$base/target", "good2_out").count() == 5)
   }
 

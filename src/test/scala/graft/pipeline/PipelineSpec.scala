@@ -586,6 +586,36 @@ class CopyJobSpec extends SparkSpec {
     assert(spark.read.jdbc(url, "nation_live", new java.util.Properties()).count() == 25)
   }
 
+  test("a JdbcLoad into a missing target table fails loudly: no create, no state advance") {
+    val url = "jdbc:derby:memory:missingdb;create=true"
+    def derby[T](f: java.sql.Statement => T): T = {
+      val c = java.sql.DriverManager.getConnection(url)
+      try { val st = c.createStatement(); try f(st) finally st.close() } finally c.close()
+    }
+    def tableExists(): Boolean = derby { st =>
+      val rs = st.executeQuery(
+        "SELECT COUNT(*) FROM SYS.SYSTABLES WHERE TABLENAME = 'REGION_GONE'")
+      rs.next(); rs.getLong(1) > 0
+    }
+    derby(_.executeUpdate(
+      "CREATE TABLE region_gone (r_regionkey BIGINT, r_name VARCHAR(64), r_comment VARCHAR(256))"))
+    val cfg = freshCfg(Seq(
+      TableSpec("region", FromSpec("region"), "region_gone", publishMode = JdbcLoad(url))),
+      trigger = Some(TriggerSpec("events", "ts")))
+    assert(CopyJob.run(spark, cfg) == Copied)
+    // the next run's trigger copies, but the target table is gone (D3
+    // DDL is the caller's step: the load must not create it)
+    val statePath = rewindWatermark(cfg)
+    val state0 = Files.readString(statePath)
+    derby(_.executeUpdate("DROP TABLE region_gone"))
+    CopyJob.run(spark, cfg) match {
+      case Failed(reason, _) => assert(reason.startsWith("load region: "), reason)
+      case other => fail(s"expected Failed, got $other")
+    }
+    assert(!tableExists(), "the load created the missing target table")
+    assert(Files.readString(statePath) == state0)
+  }
+
   test("projection + query sources (A2/A3)") {
     val cfg = freshCfg(Seq(
       TableSpec("proj", FromSpec("nation", columns = Some(Seq("n_nationkey", "n_name"))), "proj_out"),

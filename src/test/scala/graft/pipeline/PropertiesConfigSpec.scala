@@ -44,8 +44,7 @@ class PropertiesConfigSpec extends AnyFunSuite {
     assert(p.target.exists(_.password == "fallbackpw")) // env default applied
     val t = p.tables("example")
     assert(t.from.contains("example_table") && t.to == "example_table_new")
-    assert(t.truncate && t.copyViaTempTable && !t.useFastViewSwitching)
-    assert(t.tempTablePrefix == "tmp_")
+    assert(!t.useFastViewSwitching)
     assert(p.trigger.exists(tr => tr.table == "updated" && tr.column == "last_updatetime"))
     assert(p.schedulerIntervalSeconds.contains(300L))
     assert(p.batchSize == 10000)
@@ -207,6 +206,29 @@ class PropertiesConfigSpec extends AnyFunSuite {
     val mode = PropertiesConfig.jdbcLoadMode(p, props)
     assert(mode.contains(
       CopyJob.JdbcLoad(SqlGen.monetDbUrl("localhost", "my_target"), 10000)))
-    assert(PropertiesConfig.jdbcLoadMode(p.copy(target = None)).isEmpty)
+    assert(PropertiesConfig.jdbcLoadMode(p.copy(target = None), props).isEmpty)
+    // the one parsed batch.size is the INSERT writer's batch size
+    val p7 = PropertiesConfig.parseOrFail(canonical.replace(
+      "batch.size = 10000", "batch.size = 7"), env = Map.empty)
+    assert(PropertiesConfig.jdbcLoadMode(p7, props).map(_.batchSize).contains(7))
+  }
+
+  test("malformed batch.size and port values fail the parse, naming the key") {
+    def parseError(line: String): String = intercept[IllegalArgumentException] {
+      PropertiesConfig.parse(canonical + line + "\n", env = Map.empty)
+    }.getMessage
+    for (v <- Seq("ten", "0", "-5", "1.5"))
+      assert(parseError(s"batch.size = $v").startsWith("'batch.size' must be"), v)
+    assert(parseError("monetdb.port = fifty").startsWith("'monetdb.port' must be"))
+    assert(parseError("mssql.db1.port = 14x3").startsWith("'mssql.db1.port' must be"))
+    assert(parseError("mssql.server = s\nmssql.database = d\nmssql.port = x")
+      .startsWith("'mssql.port' must be"))
+    assert(parseError("postgresql.pg.server = s\npostgresql.pg.database = d\n" +
+      "postgresql.pg.port = 5432.0").startsWith("'postgresql.pg.port' must be"))
+    // well-formed values still parse
+    val ok = PropertiesConfig.parse(canonical +
+      "monetdb.port = 50001\nmssql.db1.port = 1444\n", env = Map.empty)
+    assert(ok.target.flatMap(_.port).contains(50001))
+    assert(ok.sources("db1").port.contains(1444))
   }
 }

@@ -1,6 +1,5 @@
 package graft.sinks
 
-import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{JdbcSource, SqlGen}
 import JdbcSource.{JdbcSourceConfig, Partitioning}
@@ -44,47 +43,13 @@ class JdbcSourceSpec extends AnyFunSuite {
   }
 }
 
-class MonetDialectSpec extends AnyFunSuite {
-  test("dialect handles monetdb URLs only") {
-    assert(MonetDbDialect.canHandle("jdbc:monetdb://h/db"))
-    assert(!MonetDbDialect.canHandle("jdbc:postgresql://h/db"))
-  }
-
-  test("identifier quoting lower-cases + sanitizes") {
-    assert(MonetDbDialect.quoteIdentifier("My Col") == "\"my_col\"")
-  }
-
-  test("type mapping incl. decimal downcast through the DDL layer") {
-    assert(MonetDbDialect.getJDBCType(LongType).get.databaseTypeDefinition == "bigint")
-    assert(MonetDbDialect.getJDBCType(StringType).get.databaseTypeDefinition == "clob")
-    assert(MonetDbDialect.getJDBCType(DecimalType(38, 10)).get.databaseTypeDefinition ==
-      "decimal(18,10)")
-    assert(MonetDbDialect.getJDBCType(DecimalType(4, 0)).get.databaseTypeDefinition ==
-      "smallint")
-    assert(MonetDbDialect.getJDBCType(TimestampNTZType).get.databaseTypeDefinition ==
-      "timestamp")
-    assert(MonetDbDialect.getJDBCType(ArrayType(LongType)).isEmpty)
-  }
-
-  test("truncate is DELETE FROM (C7)") {
-    assert(MonetDbDialect.getTruncateQuery("\"sys\".\"t\"") == "DELETE FROM \"sys\".\"t\"")
-  }
-}
-
 class MonetDdlSpec extends AnyFunSuite {
   test("COPY INTO statement variants (C1/C2/C6)") {
-    assert(MonetSink.copyIntoSql("sys", "Orders", Some(1234), Some("/tmp/x.csv")) ==
+    assert(MonetSink.copyIntoSqlFiles("sys", "Orders", 1234, Seq("/tmp/x.csv")) ==
       """COPY 1234 RECORDS INTO "sys"."orders" FROM '/tmp/x.csv' """ +
         """USING DELIMITERS ',','\n','"' NULL AS '\\N' LOCKED""")
-    assert(MonetSink.copyIntoSql("sys", "t", None, None, locked = false) ==
-      """COPY INTO "sys"."t" FROM STDIN USING DELIMITERS ',','\n','"' NULL AS '\\N'""")
-  }
-
-  test("load-method policy: fresh table promotes to COPY INTO (C4/C5)") {
-    import MonetSink._
-    assert(chooseLoadMethod(None, freshTable = true) == CopyIntoFromFile)
-    assert(chooseLoadMethod(None, freshTable = false) == BatchedInsert)
-    assert(chooseLoadMethod(Some(CopyIntoFromStdin), freshTable = false) == CopyIntoFromStdin)
+    assert(MonetSink.copyIntoSql("sys", "t", 5) ==
+      """COPY 5 RECORDS INTO "sys"."t" FROM STDIN USING DELIMITERS ',','\n','"' NULL AS '\\N' LOCKED""")
   }
 
   test("D11 view switch: bounded drop retry, table-vs-view choice, create after") {

@@ -93,8 +93,8 @@ class LiveMonetDbSpec extends SparkSpec {
         val df = (0 until n * 2).map(i => (i.toLong, s"row$i")).toDF("id", "name")
         // the real acknowledgment the fake can't give: server-reported
         // affected rows from an exact-count RECORDS COPY
-        MonetSink.copyViaStdin(df, host, port, user, pass, db,
-          schema, t, records = Some(n * 2L))
+        assert(MonetSink.copyViaStdinDistributed(df.coalesce(1), host, port,
+          user, pass, db, schema, t) == n * 2L)
         assert(count(client, t) == n * 2L, s"COPY into $t not acknowledged")
         switchView(v) // D11: repoint the stable view at this version
         assert(count(client, view) == n * 2L, "view does not resolve to newest load")
@@ -135,8 +135,8 @@ class LiveMonetDbSpec extends SparkSpec {
       client.query(s"""CREATE TABLE "$schema"."$t" (id BIGINT, name CLOB)""")
       val df = (0 until 1000).map(i => (i.toLong, s"row$i")).toDF("id", "name")
         .repartition(8)
-      MonetSink.copyViaStdinDistributed(df, host, port, user, pass, db,
-        schema, t, recordsHint = true, failOnTaskRetry = true)
+      assert(MonetSink.copyViaStdinDistributed(df, host, port, user, pass, db,
+        schema, t) == 1000)
       assert(count(client, t) == 1000)
       // distinct ids prove no partition double-committed
       assert(dataRows(client.query(

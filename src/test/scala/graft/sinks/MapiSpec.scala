@@ -9,7 +9,10 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import graft.SparkSpec
 
 /** A loopback fake speaking just enough MAPI v9 to exercise the client:
-  * challenge, digest check, redirect, COPY INTO FROM STDIN capture. */
+  * challenge, digest check, redirect, COPY INTO capture. A COPY FROM
+  * STDIN's rows are the records that follow the statement; a COPY FROM a
+  * file list's rows are read from the listed files when the statement
+  * arrives, as a server reading a shared mount would. */
 final class FakeMonetServer(user: String, password: String,
     redirectsFirst: Boolean = false, connections: Int = 1,
     failCopy: Boolean = false) {
@@ -63,8 +66,17 @@ final class FakeMonetServer(user: String, password: String,
           s.writeMessage("!COPY INTO: insufficient privileges (forced)".getBytes(UTF_8))
         } else if (receivedCopySql.contains("FROM STDIN")) {
           // CSV records follow in the same message, closed by an empty line
-          receivedRows = receivedRows ++ lines.tail.takeWhile(_.nonEmpty)
-          s.writeMessage(s"&2 ${receivedRows.size} -1\n".getBytes(UTF_8))
+          val rows = lines.tail.takeWhile(_.nonEmpty)
+          receivedRows = receivedRows ++ rows
+          s.writeMessage(s"&2 ${rows.size} -1\n".getBytes(UTF_8))
+        } else if (receivedCopySql.startsWith("COPY")) {
+          val fromList = receivedCopySql.split(" FROM ", 2)(1).split(" USING ", 2)(0)
+          val rows = "'([^']*)'".r.findAllMatchIn(fromList).map(_.group(1)).toSeq.flatMap { f =>
+            val src = scala.io.Source.fromFile(f)
+            try src.getLines().toVector finally src.close()
+          }
+          receivedRows = receivedRows ++ rows
+          s.writeMessage(s"&2 ${rows.size} -1\n".getBytes(UTF_8))
         } else {
           s.writeMessage("&2 0 -1\n".getBytes(UTF_8))
         }
@@ -153,8 +165,8 @@ class MapiSpec extends SparkSpec {
           org.apache.spark.sql.functions.lit("n\"q\\"), col("id")))
       .withColumn("maybe",
         org.apache.spark.sql.functions.when(col("id") % 2 === 0, col("id")))
-    val affected = MonetSink.copyViaStdin(df, "127.0.0.1", srv.port,
-      "monetdb", "secret", "demo", "sys", "target", records = Some(5))
+    val affected = MonetSink.copyViaStdinDistributed(df.coalesce(1), "127.0.0.1",
+      srv.port, "monetdb", "secret", "demo", "sys", "target")
     srv.awaitDone()
     assert(affected == 5)
     assert(srv.receivedCopySql ==
@@ -167,48 +179,31 @@ class MapiSpec extends SparkSpec {
 
   test("C2 distributed: every non-empty partition opens its own MAPI connection") {
     import org.apache.spark.sql.functions.{col, concat, lit}
-    // round-robin repartition(3) → exactly 3 non-empty partitions
+    // round-robin repartition(3) → exactly 3 non-empty partitions, 10 rows each
     val srv = new FakeMonetServer("monetdb", "secret", connections = 3)
     val df = spark.range(0, 30).toDF("id")
       .withColumn("name", concat(lit("row"), col("id")))
       .repartition(3)
-    MonetSink.copyViaStdinDistributed(df, "127.0.0.1", srv.port,
-      "monetdb", "secret", "demo", "sys", "target")
+    assert(MonetSink.copyViaStdinDistributed(df, "127.0.0.1", srv.port,
+      "monetdb", "secret", "demo", "sys", "target") == 30)
     srv.awaitDone()
     assert(srv.connectionsServed == 3)
     // all 30 rows arrive across the 3 independent COPY statements
     assert(srv.receivedRows.size == 30)
     assert(srv.receivedRows.toSet ==
       (0 until 30).map(i => s""""$i","row$i"""").toSet)
-    // no records hint on the per-partition appends
-    assert(srv.receivedCopySql ==
-      """COPY INTO "sys"."target" FROM STDIN USING DELIMITERS ',','\n','"' NULL AS '\\N' LOCKED;""")
-  }
-
-  test("C2 distributed with recordsHint: each partition's COPY carries its exact count") {
-    import org.apache.spark.sql.functions.{col, concat, lit}
-    val srv = new FakeMonetServer("monetdb", "secret", connections = 3)
-    val df = spark.range(0, 30).toDF("id")
-      .withColumn("name", concat(lit("row"), col("id")))
-      .repartition(3) // round-robin → 10 rows per partition
-    MonetSink.copyViaStdinDistributed(df, "127.0.0.1", srv.port,
-      "monetdb", "secret", "demo", "sys", "target", recordsHint = true)
-    srv.awaitDone()
-    assert(srv.receivedRows.size == 30)
-    // every per-partition COPY restored the reference's exact-count
-    // RECORDS pre-allocation hint (CopyTool.java:984-985)
-    assert(srv.receivedCopySqls.size == 3)
-    srv.receivedCopySqls.foreach { sql =>
-      assert(sql.startsWith("""COPY 10 RECORDS INTO "sys"."target" FROM STDIN"""), sql)
-    }
+    // every per-partition COPY carries its own exact count: the
+    // reference's RECORDS pre-allocation hint (CopyTool.java:984-985)
+    assert(srv.receivedCopySqls == Seq.fill(3)(
+      """COPY 10 RECORDS INTO "sys"."target" FROM STDIN USING DELIMITERS ',','\n','"' NULL AS '\\N' LOCKED;"""))
   }
 
   test("C1 multi-file COPY SQL lists every part file with the records hint") {
-    assert(MonetSink.copyIntoSqlFiles("sys", "t", Some(42L),
+    assert(MonetSink.copyIntoSqlFiles("sys", "t", 42L,
       Seq("/mnt/shared/part-0.txt", "/mnt/shared/part-1.txt")) ==
       """COPY 42 RECORDS INTO "sys"."t" FROM '/mnt/shared/part-0.txt', '/mnt/shared/part-1.txt' USING DELIMITERS ',','\n','"' NULL AS '\\N' LOCKED""")
     intercept[IllegalArgumentException] {
-      MonetSink.copyIntoSqlFiles("sys", "t", None, Seq.empty)
+      MonetSink.copyIntoSqlFiles("sys", "t", 42L, Seq.empty)
     }
   }
 
@@ -220,20 +215,20 @@ class MapiSpec extends SparkSpec {
       .withColumn("name", concat(lit("row"), col("id")))
       .repartition(3)
     MonetSink.copyViaFiles(df, "127.0.0.1", srv.port, "monetdb", "secret",
-      "demo", "sys", "target", dir, records = Some(12L), cleanup = false)
+      "demo", "sys", "target", dir, records = 12L)
     srv.awaitDone()
     val sql = srv.receivedCopySql
     assert(sql.startsWith("""COPY 12 RECORDS INTO "sys"."target" FROM '"""), sql)
-    // the FROM list names the actual part files Spark wrote, under the
+    // the FROM list names one part file per partition, under the
     // per-table subdirectory (concurrent loads must not share a dir)
-    val files = new java.io.File(dir, "sys.target").listFiles()
-      .filter(f => f.isFile && f.getName.startsWith("part-")).map(_.getAbsolutePath)
+    val files = "'([^']*)'".r.findAllMatchIn(sql.split(" USING ", 2)(0))
+      .map(_.group(1)).toSeq
     assert(files.length == 3)
-    files.foreach(f => assert(sql.contains(s"'$f'"), s"$f missing from $sql"))
-    // and the files hold the full CSV payload in the reference dialect
-    val rows = files.flatMap(f =>
-      scala.io.Source.fromFile(f).getLines().toSeq)
-    assert(rows.toSet == (0 until 12).map(i => s""""$i","row$i"""").toSet)
+    files.foreach(f => assert(f.startsWith(s"$dir/sys.target/part-"), f))
+    // and the files held the full CSV payload in the reference dialect
+    // when the server read them
+    assert(srv.receivedRows.size == 12)
+    assert(srv.receivedRows.toSet == (0 until 12).map(i => s""""$i","row$i"""").toSet)
   }
 
   test("C1 execution cleans its staged CSV after a successful COPY (default)") {
@@ -243,7 +238,7 @@ class MapiSpec extends SparkSpec {
     val df = spark.range(0, 4).toDF("id")
       .withColumn("name", concat(lit("r"), col("id")))
     MonetSink.copyViaFiles(df, "127.0.0.1", srv.port, "monetdb", "secret",
-      "demo", "sys", "target", dir, records = Some(4L))
+      "demo", "sys", "target", dir, records = 4L)
     srv.awaitDone()
     assert(srv.receivedCopySql.startsWith("COPY 4 RECORDS"))
     // reference parity: the temp CSV does not outlive the load
@@ -286,29 +281,23 @@ class MapiSpec extends SparkSpec {
       if (fail) throw new RuntimeException(s"$name failed")
     }
     // all succeed → file wins, nothing else attempted
-    assert(loadWithCascade(None, step("file", false), step("stdin", false),
+    assert(loadWithCascade(step("file", false), step("stdin", false),
       step("insert", false)) == CopyIntoFromFile)
     assert(order.toSeq == Seq("file"))
     order.clear()
     // file fails → stdin wins
-    assert(loadWithCascade(None, step("file", true), step("stdin", false),
+    assert(loadWithCascade(step("file", true), step("stdin", false),
       step("insert", false)) == CopyIntoFromStdin)
     assert(order.toSeq == Seq("file", "stdin"))
     order.clear()
     // file + stdin fail → insert wins
-    assert(loadWithCascade(None, step("file", true), step("stdin", true),
+    assert(loadWithCascade(step("file", true), step("stdin", true),
       step("insert", false)) == BatchedInsert)
     assert(order.toSeq == Seq("file", "stdin", "insert"))
     order.clear()
-    // configured INSERT skips the COPY attempts entirely (reference
-    // CopyTool.java:833: copyMethod == INSERT bypasses both COPY paths)
-    assert(loadWithCascade(Some(BatchedInsert), step("file", false),
-      step("stdin", false), step("insert", false)) == BatchedInsert)
-    assert(order.toSeq == Seq("insert"))
-    order.clear()
     // everything fails → exception
     intercept[IllegalStateException] {
-      loadWithCascade(None, step("file", true), step("stdin", true),
+      loadWithCascade(step("file", true), step("stdin", true),
         step("insert", true))
     }
   }

@@ -105,6 +105,10 @@ class IdentifiersSpec extends AnyFunSuite {
     assert(c("a_b").toSet == Set("a-b", "a_b"))
   }
 
+  test("identifier quoting lower-cases + sanitizes") {
+    assert(Identifiers.quote("My Col") == "\"my_col\"")
+  }
+
   test("value quoting escapes backslash and quote (MonetDBUtil.java:315-318)") {
     assert(Identifiers.quoteValue("it's a \\ test") == "'it\\'s a \\\\ test'")
   }
