@@ -75,12 +75,11 @@ object PropertiesConfig {
     val props = parseProperties(text, env)
     var warnings = Vector.empty[String]
 
-    /** A whole-number value; a malformed one fails the parse, naming the
+    /** A port or batch size; a malformed one fails the parse, naming the
       * key, instead of falling back to a default. */
-    def intProp(key: String, valid: Int => Boolean = _ => true,
-        what: String = "an integer"): Option[Int] =
-      props.get(key).map(v => v.toIntOption.filter(valid).getOrElse(
-        throw new IllegalArgumentException(s"'$key' must be $what, got '$v'")))
+    def positiveInt(key: String): Option[Int] =
+      props.get(key).map(v => v.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(s"'$key' must be a positive integer, got '$v'")))
 
     def sourcesFor(prefix: String, dialect: SqlGen.Dialect): Map[String, SourceDef] = {
       // keys look like `mssql.<id>.<prop>` or bare `mssql.<prop>` (default id)
@@ -108,7 +107,7 @@ object PropertiesConfig {
                   "property; remove it from the PostgreSQL source block")
             Some(id -> SourceDef(id, dialect, server, db,
               get("user").getOrElse(""), get("password").getOrElse(""),
-              intProp(key("port")), get("instance")))
+              positiveInt(key("port")), get("instance")))
           case _ =>
             warnings :+= s"source '$id' ($prefix) missing server/database — skipped"
             None
@@ -122,7 +121,7 @@ object PropertiesConfig {
     val target = (props.get("monetdb.server"), props.get("monetdb.database")) match {
       case (Some(s), Some(d)) => Some(SourceDef("monetdb", SqlGen.Postgres, s, d,
         props.getOrElse("monetdb.user", ""), props.getOrElse("monetdb.password", ""),
-        intProp("monetdb.port"), None))
+        positiveInt("monetdb.port"), None))
       case _ => None
     }
 
@@ -181,7 +180,7 @@ object PropertiesConfig {
     val interval = props.get("scheduler.interval").map(Intervals.parseSeconds)
 
     Parsed(sources, tables, target, trigger, interval,
-      intProp("batch.size", _ > 0, "a positive integer").getOrElse(10000), warnings)
+      positiveInt("batch.size").getOrElse(10000), warnings)
   }
 
   /** Strict variant: zero valid tables is a configuration error (the

@@ -219,7 +219,8 @@ class PropertiesConfigSpec extends AnyFunSuite {
     }.getMessage
     for (v <- Seq("ten", "0", "-5", "1.5"))
       assert(parseError(s"batch.size = $v").startsWith("'batch.size' must be"), v)
-    assert(parseError("monetdb.port = fifty").startsWith("'monetdb.port' must be"))
+    for (v <- Seq("fifty", "0"))
+      assert(parseError(s"monetdb.port = $v").startsWith("'monetdb.port' must be"), v)
     assert(parseError("mssql.db1.port = 14x3").startsWith("'mssql.db1.port' must be"))
     assert(parseError("mssql.server = s\nmssql.database = d\nmssql.port = x")
       .startsWith("'mssql.port' must be"))
