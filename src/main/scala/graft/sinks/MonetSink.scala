@@ -123,8 +123,11 @@ object MonetSink {
     ()
   }
 
-  /** C7 truncate over the MAPI channel (`MonetDBUtil.java:93-107` —
-    * MonetDB-style truncate is `DELETE FROM`). The pipeline issues this
+  /** C7 MonetDB-style truncate (`MonetDBUtil.java:93-107`). */
+  def truncateSql(schema: String, table: String): String =
+    s"DELETE FROM ${Identifiers.quote(schema)}.${Identifiers.quote(table)}"
+
+  /** C7 truncate over the MAPI channel. The pipeline issues this
     * before each COPY rung of the C4 cascade so every rung — COPY-file,
     * COPY-stdin, INSERT — starts from the same empty table and shares
     * replace semantics (the reference truncates before any load method,
@@ -133,7 +136,7 @@ object MonetSink {
       password: String, database: String, schema: String,
       table: String): Unit = {
     val client = MapiClient.connect(host, port, user, password, database)
-    try client.query(s"DELETE FROM ${Identifiers.quote(schema)}.${Identifiers.quote(table)}")
+    try client.query(truncateSql(schema, table))
     finally client.close()
     ()
   }

@@ -104,7 +104,8 @@ class ResumeSpec extends SparkSpec {
     assert(Publish.readCurrent(spark, cfg.targetRoot, "nation_out").count() == 25)
   }
 
-  test("Main's fleet loop keeps going past a failing job and reports per-job results (H4)") {
+  // the fleet loop is Main.run's: one -c config per job
+  test("runAll keeps going past a failing job and reports per-job results (H4)") {
     val base = Files.createTempDirectory("fleet")
     def cfg(name: String, query: String): String = {
       val p = base.resolve(s"$name.properties")

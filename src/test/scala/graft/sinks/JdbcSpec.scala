@@ -43,6 +43,12 @@ class JdbcSourceSpec extends AnyFunSuite {
   }
 }
 
+class MonetDialectSpec extends AnyFunSuite {
+  test("truncate is DELETE FROM (C7)") {
+    assert(MonetSink.truncateSql("sys", "t") == "DELETE FROM \"sys\".\"t\"")
+  }
+}
+
 class MonetDdlSpec extends AnyFunSuite {
   test("COPY INTO statement variants (C1/C2/C6)") {
     assert(MonetSink.copyIntoSqlFiles("sys", "Orders", 1234, Seq("/tmp/x.csv")) ==

@@ -198,6 +198,19 @@ class MapiSpec extends SparkSpec {
       """COPY 10 RECORDS INTO "sys"."target" FROM STDIN USING DELIMITERS ',','\n','"' NULL AS '\\N' LOCKED;"""))
   }
 
+  test("C2 distributed with recordsHint: each partition's COPY carries its exact count") {
+    // uneven partitions (0..4 filtered to 3 rows, 5..9 kept whole): each
+    // hint is its own partition's count, not a share of the total
+    val srv = new FakeMonetServer("monetdb", "secret", connections = 2)
+    val df = spark.range(0, 10, 1, 2).toDF("id").where("id < 3 OR id >= 5")
+    assert(MonetSink.copyViaStdinDistributed(df, "127.0.0.1", srv.port,
+      "monetdb", "secret", "demo", "sys", "target") == 8)
+    srv.awaitDone()
+    assert(srv.receivedRows.size == 8)
+    assert(srv.receivedCopySqls.sorted == Seq(3, 5).map(n =>
+      s"""COPY $n RECORDS INTO "sys"."target" FROM STDIN USING DELIMITERS ',','\\n','"' NULL AS '\\\\N' LOCKED;"""))
+  }
+
   test("C1 multi-file COPY SQL lists every part file with the records hint") {
     assert(MonetSink.copyIntoSqlFiles("sys", "t", 42L,
       Seq("/mnt/shared/part-0.txt", "/mnt/shared/part-1.txt")) ==
