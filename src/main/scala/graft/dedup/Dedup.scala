@@ -155,29 +155,6 @@ object Dedup {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  /** Incremental index maintenance — the LSH twin of
-    * [[graft.sim.IvfIndex.append]]: after a batch has been screened by
-    * [[probeLshIndex]], fold its survivors INTO the index (signatures +
-    * band keys appended under the stored hash-family parameters) so the
-    * next batch dedups against them too — no recompute, no rewrite of
-    * the standing corpus. Typical cycle: probe → drop flagged dups →
-    * append the kept docs. */
-  def appendToLshIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      newDocs: DataFrame, textCol: String, idCol: String): Unit = {
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (numPerm, bands, rows) = (meta.getAs[Int]("num_perm"),
-      meta.getAs[Int]("bands"), meta.getAs[Int]("rows"))
-    requireBandGeometry(numPerm, bands, rows)
-    val sigs = graft.plans.LeafPlanRegistry.record(
-        minHashSignatures(newDocs, textCol, idCol, numPerm))
-      .localCheckpoint() // one signature pass feeds both files
-    sigs.write.mode("append").parquet(s"$path/sigs")
-    graft.sim.IvfIndex.writeByKey(
-      bandKeys(sigs, idCol, bands, rows)
-        .select(col(idCol), col("band_idx"), col("band_hash")),
-      "band_idx", s"$path/bands", org.apache.spark.sql.SaveMode.Append)
-  }
-
   /** Probe a [[saveLshIndex]] index with a new batch: candidates are
     * (new, ref) pairs sharing a band, scored by signature agreement,
     * kept at `threshold`. Only the BATCH is shingled/hashed; the index

@@ -748,14 +748,14 @@ object UnitNormalize {
 }
 
 /** SQ8 encode `floor(((x_d − vmin_d) / vdiff_d) · 255)` (0 when
-  * `vdiff_d = 0`, optionally clamped to [0, 255]) as one codegen'd
+  * `vdiff_d = 0`) as one codegen'd
   * pass — replaces the interpreted `zip_with(v, sequence, λ)` lambda
   * with two array-literal lookups per element on the corpus-wide
   * encode (the [[SqAdcDist]] lesson applied to the write side).
   * Identical arithmetic: double subtract/divide/multiply, floor,
   * int truncation. */
 case class SqEncode(child: Expression, vmin: Array[Double],
-    vdiff: Array[Double], clamp: Boolean) extends UnaryExpression {
+    vdiff: Array[Double]) extends UnaryExpression {
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
@@ -769,13 +769,13 @@ case class SqEncode(child: Expression, vmin: Array[Double],
   override def prettyName: String = "sq_encode"
 
   override def nullSafeEval(v: Any): Any =
-    SqEncode.compute(v.asInstanceOf[ArrayData], vmin, vdiff, clamp)
+    SqEncode.compute(v.asInstanceOf[ArrayData], vmin, vdiff)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v => {
       val mn = ctx.addReferenceObj("vmin", vmin, "double[]")
       val df = ctx.addReferenceObj("vdiff", vdiff, "double[]")
-      s"${ev.value} = graft.functions.SqEncode.compute($v, $mn, $df, $clamp);"
+      s"${ev.value} = graft.functions.SqEncode.compute($v, $mn, $df);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): SqEncode =
@@ -783,8 +783,7 @@ case class SqEncode(child: Expression, vmin: Array[Double],
 }
 
 object SqEncode {
-  def compute(x: ArrayData, vmin: Array[Double], vdiff: Array[Double],
-      clamp: Boolean): ArrayData = {
+  def compute(x: ArrayData, vmin: Array[Double], vdiff: Array[Double]): ArrayData = {
     val dim = vmin.length
     // zip_with(v, sequence(1, dim)) semantics: output length =
     // max(|v|, dim), with null x past |v| → null element unless the
@@ -800,13 +799,10 @@ object SqEncode {
         else if (d >= x.numElements() || x.isNullAt(d)) null
         else {
           // Double.toInt saturates at Int.MaxValue/MinValue exactly like
-          // the composed cast("int") on a double (non-ANSI); the earlier
-          // .toLong.toInt wrapped modulo 2^32 for extreme out-of-range
-          // inputs (unclamped path only — clamp pins to [0, 255] anyway)
-          val raw = math.floor(((x.getFloat(d).toDouble - vmin(d)) /
-            vdiff(d)) * 255.0).toInt
-          Integer.valueOf(
-            if (clamp) math.max(0, math.min(255, raw)) else raw)
+          // the composed cast("int") on a double (non-ANSI); .toLong.toInt
+          // would wrap modulo 2^32 for extreme out-of-range inputs
+          Integer.valueOf(math.floor(((x.getFloat(d).toDouble - vmin(d)) /
+            vdiff(d)) * 255.0).toInt)
         }
       d += 1
     }
@@ -1005,8 +1001,8 @@ object VectorFunctions {
   def unit_normalize(v: Column): Column = column(UnitNormalize(expr(v)))
 
   /** SQ8 encode under trained [min, max] ranges. */
-  def sq_encode(v: Column, vmin: Array[Double], vdiff: Array[Double],
-      clamp: Boolean): Column = column(SqEncode(expr(v), vmin, vdiff, clamp))
+  def sq_encode(v: Column, vmin: Array[Double], vdiff: Array[Double]): Column =
+    column(SqEncode(expr(v), vmin, vdiff))
 
   /** Hamming distance over packed-word code arrays. */
   def hamming_words(a: Column, b: Column): Column =

@@ -4,42 +4,17 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftBridge
 
-/** Skew-mitigation utilities (the 100 TB story's hot-key defenses).
+/** Skew and sizing helpers (the 100 TB story's hot-key defenses).
   *
-  * AQE's skew-join handling covers sort-merge joins at runtime; these
-  * helpers cover the two cases it doesn't: hash-aggregations with a few
-  * giant groups, and broadcast-infeasible joins against a skewed key
-  * where pre-splitting beats runtime re-planning.
-  *
-  * Salts are DETERMINISTIC (hash of stable columns, not rand()) so
-  * retried tasks and AQE re-executions see identical data placement.
+  * AQE's skew-join handling splits hot partitions of sort-merge joins at
+  * runtime, but it cannot split one key of a keyed merge: the as-of join
+  * needs a key's full time range in order. [[asofPreSplit]] restores
+  * parallelism there by splitting each key into time buckets, and
+  * [[suggestedAsofBucketWidth]] sizes those buckets from the corpus.
+  * [[suggestedShufflePartitions]] sizes the shuffle-partition count
+  * every shuffle shares.
   */
 object Skew {
-
-  /** Two-phase salted aggregation: partial-aggregate on (key, salt) —
-    * spreading a hot key over `salts` reducers — then final-aggregate on
-    * key. `partials` must be decomposable aggregates expressed over the
-    * pre-aggregated columns (sum→sum, count→sum, min→min, max→max). */
-  def saltedAggregate(df: DataFrame, key: Column, saltSource: Column, salts: Int,
-      partials: Seq[Column], finals: Seq[Column]): DataFrame =
-    df.withColumn("_salt", pmod(xxhash64(saltSource), lit(salts)))
-      .groupBy(key.as("_key"), col("_salt"))
-      .agg(partials.head, partials.tail: _*)
-      .groupBy(col("_key"))
-      .agg(finals.head, finals.tail: _*)
-
-  /** Salted equi-join for a skewed LEFT side against a non-broadcastable
-    * right side: left rows get a deterministic salt in [0, salts); right
-    * rows are replicated once per salt. Correct for 1:N joins (each left
-    * row meets every right row with its key exactly once). */
-  def saltedJoin(left: DataFrame, right: DataFrame, key: String,
-      salts: Int, joinType: String = "inner"): DataFrame = {
-    val l = left.withColumn("_salt",
-      pmod(xxhash64(left.columns.toSeq.map(col): _*), lit(salts)))
-    val r = right.withColumn("_salt",
-      explode(array((0 until salts).map(i => lit(i.toLong)): _*)))
-    l.join(r, Seq(key, "_salt"), joinType).drop("_salt")
-  }
 
   /** Hot-key pre-split for the as-of join: the remedy named at
     * `plans/AsOfJoin.scala` — a keyed merge join puts all rows of one
@@ -214,12 +189,4 @@ object Skew {
       .max(1L).min(Int.MaxValue.toLong).toInt
     math.max(math.min(cores, maxUseful), byVolume)
   }
-
-  /** Hot-key report: the keys whose row counts exceed `threshold` — the
-    * monitoring half of skew handling (decide salting data-driven, not
-    * by guesswork). */
-  def hotKeys(df: DataFrame, key: Column, threshold: Long): DataFrame =
-    df.groupBy(key.as("key")).agg(count(lit(1)).as("n_rows"))
-      .filter(col("n_rows") >= threshold)
-      .orderBy(desc("n_rows"))
 }

@@ -206,9 +206,15 @@ object PropertiesConfig {
       // in-container Derby); production MonetDB runs need only the
       // reference's own monetdb.* block
       CopyJob.JdbcLoad(
-        props.getOrElse("graft.jdbc.url", SqlGen.monetDbUrl(t.server, t.database)),
+        props.getOrElse("graft.jdbc.url",
+          SqlGen.monetDbUrl(t.server, monetPort(t), t.database)),
         parsed.batchSize)
     }
+
+  /** The target's port, `monetdb.port` or MonetDB's default: the COPY
+    * rungs and the INSERT URL dial this one value. */
+  private def monetPort(t: SourceDef): Int =
+    t.port.getOrElse(SqlGen.MonetDbDefaultPort)
 
   /** Per-table live-MonetDB publish mode, honoring `table.<id>.copymethod`
     * (`CopyToolConfig.java:908-918`, cascade gate `CopyTool.java:832`):
@@ -235,7 +241,7 @@ object PropertiesConfig {
       val tgt = parsed.target.get
       t.copyMethod.map(_.toLowerCase) match {
         case Some("copyinto") =>
-          CopyJob.MonetLoad(tgt.server, tgt.port.getOrElse(50000),
+          CopyJob.MonetLoad(tgt.server, monetPort(tgt),
             tgt.user, tgt.password, tgt.database, t.schema,
             insert = jdbc, copyDir = props.get("graft.monet.copydir"))
         case _ => jdbc

@@ -127,11 +127,6 @@ object Publish {
     spark.read.parquet(snapshotDir(root, table, v))
   }
 
-  /** Register the published snapshot as a stable-name temp view (the
-    * catalog face of E3). */
-  def registerView(spark: SparkSession, root: String, table: String): Unit =
-    readCurrent(spark, root, table).createOrReplaceTempView(table)
-
   /** E5 retention GC: keep the newest `keep` versions (reference default:
     * current + 1 backup, `CopyTool.java:578-580`), never delete the
     * published one. Returns dropped versions. */

@@ -195,14 +195,14 @@ object IvfIndex {
 
   // ------------------------------------------------ persisted cell layout
   //
-  // ONE on-disk layout serves IVF, IVF∘PQ and IVF∘SQ8: `$path/cells`
-  // holds (id, payload) rows parquet-PARTITIONED BY cell, `$path/centroids`
-  // the float coarse quantizer, and each codec adds its own params table
-  // next to them (PQ `codebook`, SQ8 `ranges`). The payload is the only
-  // codec-specific part: the raw vector, `PqIndex.codesExpr` or
-  // `SqIndex.clampedCodesExpr` — a row expression over `vecCol`. The three
-  // functions below are the whole layout: write, frozen-centroid append,
-  // and the probe-collect + static-IN pruned scan.
+  // ONE on-disk layout serves IVF and IVF∘PQ: `$path/cells` holds
+  // (id, payload) rows parquet-PARTITIONED BY cell, `$path/centroids` the
+  // float coarse quantizer, and IVF∘PQ adds its `codebook` next to them.
+  // The payload is the only codec-specific part: the raw vector or
+  // `PqIndex.codesExpr` — a row expression over `vecCol`. [[saveCells]]
+  // writes the layout and [[probeCells]] does the probe-collect +
+  // static-IN pruned scan; [[append]] adds raw vectors under the frozen
+  // centroids.
 
   /** Persist the index: `payload` rows partitioned by cell plus the
     * centroids. At scale the "index" is just a directory layout, and a
@@ -215,29 +215,6 @@ object IvfIndex {
         .select(col(idCol), payload, col("cell")),
       "cell", s"$path/cells", SaveMode.Overwrite)
     ivf.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-  }
-
-  /** Incremental maintenance: assign NEW vectors to their nearest cell
-    * under the STORED centroids and append their payload to the layout —
-    * no retraining, no rewrite of the standing corpus (FAISS's `add` in
-    * directory form). A vector whose length differs from the stored dim
-    * fails the write: [[graft.functions.NearestCell]] would otherwise
-    * score a prefix and file it under a meaningless cell. The check rides
-    * the write's own projection, so it costs no Spark job. */
-  private[sim] def appendCells(spark: SparkSession, path: String,
-      newVectors: DataFrame, idCol: String, vecCol: String,
-      payload: Column): Unit = {
-    val centroids = centroidMatrix(spark.read.parquet(s"$path/centroids"))
-    val dim = centroids.head.length
-    val checked = newVectors.filter(col(vecCol).isNotNull)
-      .withColumn(vecCol, when(size(col(vecCol)) === dim, col(vecCol))
-        .otherwise(raise_error(concat(
-          lit(s"appended vector length does not match the index dim $dim: "),
-          size(col(vecCol)).cast("string")))))
-    writeByKey(
-      checked.select(col(idCol), payload,
-        assignExpr(col(vecCol), centroids).as("cell")),
-      "cell", s"$path/cells", SaveMode.Append)
   }
 
   /** Probe a persisted index with STATIC partition pruning: the union of
@@ -295,18 +272,35 @@ object IvfIndex {
     Model(spark.read.parquet(s"$path/cells"), centroids, centroids.count().toInt)
   }
 
-  /** Append new raw vectors under the frozen centroids ([[appendCells]]);
-    * immediately visible to [[searchIndexed]]. The quantizer slowly
+  /** Incremental maintenance: assign NEW raw vectors to their nearest
+    * cell under the STORED centroids and append them to the layout — no
+    * retraining, no rewrite of the standing corpus (FAISS's `add` in
+    * directory form); immediately visible to [[searchIndexed]]. A vector
+    * whose length differs from the stored dim fails the write:
+    * [[graft.functions.NearestCell]] would otherwise score a prefix and
+    * file it under a meaningless cell. The check rides the write's own
+    * projection, so it costs no Spark job. The quantizer slowly
     * staleness-drifts as the distribution moves — the standard IVF
     * trade; retrain with [[build]] when recall decays. */
   def append(spark: SparkSession, path: String, newVectors: DataFrame,
-      idCol: String, vecCol: String): Unit =
-    appendCells(spark, path, newVectors, idCol, vecCol, col(vecCol))
+      idCol: String, vecCol: String): Unit = {
+    val centroids = centroidMatrix(spark.read.parquet(s"$path/centroids"))
+    val dim = centroids.head.length
+    val checked = newVectors.filter(col(vecCol).isNotNull)
+      .withColumn(vecCol, when(size(col(vecCol)) === dim, col(vecCol))
+        .otherwise(raise_error(concat(
+          lit(s"appended vector length does not match the index dim $dim: "),
+          size(col(vecCol)).cast("string")))))
+    writeByKey(
+      checked.select(col(idCol), col(vecCol),
+        assignExpr(col(vecCol), centroids).as("cell")),
+      "cell", s"$path/cells", SaveMode.Append)
+  }
 
-  /** Cell-occupancy statistics of a PERSISTED index — the maintenance
-    * advisor's input ([[append]] adds vectors under frozen centroids
-    * forever, so a drifting corpus silently concentrates into few cells
-    * and recall decays with no error anywhere). ONE row out:
+  /** Cell-occupancy statistics of a PERSISTED index ([[append]] adds
+    * vectors under frozen centroids forever, so a drifting corpus
+    * silently concentrates into few cells and recall decays with no
+    * error anywhere). ONE row out:
     * `(nlist, n_vecs, n_empty_cells, max_cell, max_cell_frac,
     * imbalance)` with `imbalance = nlist · Σ n_c² / N²` — FAISS's
     * imbalance factor: 1.0 is perfectly balanced, k means everything
@@ -340,24 +334,6 @@ object IvfIndex {
             col("n_vecs").cast("decimal(38,0)")).cast("double"))
           .as("imbalance"))
   }
-
-  /** The retrain trigger — the maintenance member of the sizing-rule
-    * family ([[suggestedNlist]] sizes the build,
-    * [[Similarity.suggestedNprobe]] sizes the probe; this says WHEN to
-    * rebuild). Trips when the persisted index's imbalance factor
-    * exceeds `imbalanceThreshold`: a quantizer trained on the current
-    * distribution lands near 1.0 (measured: 1.02 on the sf corpora),
-    * stationary appends leave it there (the spec's negative control),
-    * and distribution drift drives it up as appended vectors pile into
-    * whichever frozen cells sit nearest the moved mass (the spec's
-    * positive control trips on a drifted batch). The threshold is an
-    * absolute FAISS-folk-wisdom default; distribution-specific
-    * pipelines calibrate it by recording [[occupancyStats]] at build
-    * time and comparing. */
-  def suggestedReindex(spark: SparkSession, path: String,
-      imbalanceThreshold: Double = 1.5): Boolean =
-    occupancyStats(spark, path).head().getAs[Double]("imbalance") >
-      imbalanceThreshold
 
   /** Search a persisted index through the pruned [[probeCells]] scan. */
   def searchIndexed(spark: SparkSession, path: String, queries: DataFrame,

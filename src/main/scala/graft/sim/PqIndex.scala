@@ -281,19 +281,6 @@ object PqIndex {
       ladder, "shortlist"), exact)
   }
 
-  /** The shortlist sizing rule: the smallest ladder shortlist whose
-    * pooled recall@k reaches `targetRecall`. TOTAL when the ladder ends
-    * at the candidate count ([[shortlistLadder]]) — that step reranks
-    * everything the ADC pass emitted, recall 1.0 by construction. */
-  def suggestedShortlist(cb: Codebook, codes: DataFrame, corpus: DataFrame,
-      queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      ladder: Seq[Int], targetRecall: Double): Int =
-    Similarity.smallestStepReaching(shortlistRecallCurve(cb, codes, corpus,
-        queries, idCol, vecCol, k, ladder), "shortlist", targetRecall)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no ladder step reaches recall $targetRecall — the rule is only " +
-          "total when the ladder ends at the candidate count (shortlistLadder)"))
-
   /** Two-stage serve: ADC shortlist of `shortlist` candidates per
     * query, then EXACT cosine re-rank of only those rows — the standard
     * compressed-index accuracy recovery. The corpus-wide pass still
@@ -694,17 +681,6 @@ object PqIndex {
     }
     Codebook(dim, m, ksub, cents)
   }
-
-  /** Incremental maintenance of the persisted composed index: arriving
-    * vectors are cell-assigned under the STORED coarse centroids
-    * ([[IvfIndex.appendCells]]) and PQ-encoded under the STORED codebook
-    * — no retraining, no rewrite of the standing codes. Both quantizers
-    * staleness-drift as the distribution moves — retrain when recall
-    * decays. */
-  def appendIvfPq(spark: org.apache.spark.sql.SparkSession, path: String,
-      newVectors: DataFrame, idCol: String, vecCol: String): Unit =
-    IvfIndex.appendCells(spark, path, newVectors, idCol, vecCol,
-      codesExpr(loadCodebook(spark, path), col(vecCol)).as("codes"))
 
   /** Search a persisted IVF∘PQ index through the statically pruned
     * [[IvfIndex.probeCells]] scan: only the probed cell directories are

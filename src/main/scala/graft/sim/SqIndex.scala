@@ -67,21 +67,11 @@ object SqIndex {
     * dimension (diff = 0) codes as 0 and reconstructs to vmin. A pure
     * codegen'd row expression, usable in any projection. */
   def codesExpr(m: Model, vecCol: Column): Column =
-    codesWith(m, vecCol, clamp = false)
-
-  /** [[codesExpr]] with per-element [0, 255] saturation — for vectors
-    * OUTSIDE the trained ranges (appended batches: the
-    * closed-over-training-corpus argument stops holding there). On
-    * in-range vectors the two are identical. */
-  def clampedCodesExpr(m: Model, vecCol: Column): Column =
-    codesWith(m, vecCol, clamp = true)
-
-  private def codesWith(m: Model, vecCol: Column, clamp: Boolean): Column =
     // codegen'd one-pass encode ([[graft.functions.SqEncode]]) — the
     // zip_with lambda it replaces interpreted per element on the
     // corpus-wide rewrite (the SqAdcDist lesson, write side); identical
     // floor/divide arithmetic, oracle hashes unchanged (q184/q185)
-    graft.functions.VectorFunctions.sq_encode(vecCol, m.vmin, m.vdiff, clamp)
+    graft.functions.VectorFunctions.sq_encode(vecCol, m.vmin, m.vdiff)
 
   /** Compress the corpus to (id, codes) — a zero-shuffle map stage, the
     * 4×-smaller rewrite of the float store. */
@@ -135,69 +125,12 @@ object SqIndex {
     val cellCodes = ivf.cells.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("neighbor_id"), col("cell"),
         codesExpr(m, col(vecCol)).as("codes"))
-    sqOverCells(cellCodes, m,
-      IvfIndex.probesFor(ivf.centroids, queries, idCol, vecCol, nprobe), k)
-  }
-
-  /** The shared IVF∘SQ8 scan: probe rows (query_id, q_vec, cell) join
-    * the (neighbor_id, cell, codes) rows of their probed cells. */
-  private def sqOverCells(cellCodes: DataFrame, m: Model, probes: DataFrame,
-      k: Int): DataFrame =
     PqIndex.topKByAdc(
-      cellCodes.join(broadcast(probes), Seq("cell"))
+      cellCodes.join(
+        broadcast(IvfIndex.probesFor(ivf.centroids, queries, idCol, vecCol, nprobe)),
+        Seq("cell"))
         .filter(col("query_id") =!= col("neighbor_id"))
         .withColumn("adist_fp", sqDistCol(m)), k)
-
-  /** Persist the composed index: SQ8 byte codes in the shared cell
-    * layout ([[IvfIndex.saveCells]]) plus the 2·dim range model — a
-    * probe is a statically partition-pruned scan over files 4× smaller
-    * than the vectors they stand for, reading only the code column. */
-  def saveIvfSq(ivf: IvfIndex.Model, m: Model, idCol: String,
-      vecCol: String, path: String): Unit = {
-    val spark = ivf.cells.sparkSession
-    import spark.implicits._
-    IvfIndex.saveCells(ivf, idCol, vecCol,
-      codesExpr(m, col(vecCol)).as("codes"), path)
-    (0 until m.dim).map(d => (d, m.vmin(d), m.vdiff(d)))
-      .toDF("d", "vmin", "vdiff")
-      .write.mode("overwrite").parquet(s"$path/ranges")
-  }
-
-  def loadSqModel(spark: org.apache.spark.sql.SparkSession, path: String): Model = {
-    val rows = spark.read.parquet(s"$path/ranges").collect()
-    val dim = rows.length
-    val vmin = new Array[Double](dim)
-    val vdiff = new Array[Double](dim)
-    rows.foreach { r =>
-      val d = r.getAs[Int]("d")
-      vmin(d) = r.getAs[Double]("vmin"); vdiff(d) = r.getAs[Double]("vdiff")
-    }
-    Model(dim, vmin, vdiff)
-  }
-
-  /** Incremental maintenance: cell-assign ([[IvfIndex.appendCells]]) and
-    * SQ-encode arriving vectors under the STORED centroids and ranges —
-    * no retrain, standing codes untouched; the same staleness trade,
-    * watched by the same [[IvfIndex.occupancyStats]] advisor. A new
-    * vector OUTSIDE a trained range still encodes total — the affine map
-    * just saturates below 0 / above 255 — so the clamp here is
-    * correctness, not cosmetics (the closed-over-training-corpus
-    * argument in [[codesExpr]] stops holding on appended data). */
-  def appendIvfSq(spark: org.apache.spark.sql.SparkSession, path: String,
-      newVectors: DataFrame, idCol: String, vecCol: String): Unit =
-    IvfIndex.appendCells(spark, path, newVectors, idCol, vecCol,
-      clampedCodesExpr(loadSqModel(spark, path), col(vecCol)).as("codes"))
-
-  /** Search a persisted IVF∘SQ8 index through the statically pruned
-    * [[IvfIndex.probeCells]] scan: only the probed cell directories are
-    * listed and only the byte-code column is read. */
-  def searchIndexedIvfSq(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, nprobe: Int): DataFrame = {
-    val m = loadSqModel(spark, path)
-    val (probes, cellCodes) =
-      IvfIndex.probeCells(spark, path, queries, idCol, vecCol, nprobe)
-    sqOverCells(cellCodes, m, probes, k)
   }
 
   // ---------------------------------------------------------------- binary

@@ -228,16 +228,29 @@ object MonetSink {
     * that succeeded. The attempts are passed as thunks so the policy is
     * unit-testable without a live server. A `copymethod=insert` table
     * never reaches this cascade: it loads through the INSERT writer
-    * directly. */
+    * directly. When every rung fails, the thrown exception names each
+    * rung with its message, carries the first rung's exception as its
+    * cause and the later ones as suppressed. */
   def loadWithCascade(copyFile: () => Unit, copyStdin: () => Unit,
       insert: () => Unit): LoadMethod = {
-    def attempt(m: LoadMethod, f: () => Unit): Option[LoadMethod] =
-      try { f(); Some(m) } catch { case scala.util.control.NonFatal(_) => None }
-    attempt(CopyIntoFromFile, copyFile)
-      .orElse(attempt(CopyIntoFromStdin, copyStdin))
-      .orElse(attempt(BatchedInsert, insert))
-      .getOrElse(throw new IllegalStateException(
-        "unable to load data: COPY INTO (file), COPY INTO (stdin) and batched INSERT all failed"))
+    @scala.annotation.tailrec
+    def run(rungs: List[(LoadMethod, String, () => Unit)],
+        failed: Vector[(String, Throwable)]): LoadMethod = rungs match {
+      case (m, name, f) :: rest =>
+        scala.util.Try(f()) match {
+          case scala.util.Success(_) => m
+          case scala.util.Failure(e) => run(rest, failed :+ (name -> e))
+        }
+      case Nil =>
+        val err = new IllegalStateException("unable to load data: " +
+          failed.map { case (name, e) => s"$name failed: ${e.getMessage}" }
+            .mkString("; "), failed.head._2)
+        failed.tail.foreach { case (_, e) => err.addSuppressed(e) }
+        throw err
+    }
+    run(List((CopyIntoFromFile, "COPY INTO (file)", copyFile),
+      (CopyIntoFromStdin, "COPY INTO (stdin)", copyStdin),
+      (BatchedInsert, "batched INSERT", insert)), Vector.empty)
   }
 
   /** D11/E3 live-DB view switch with the reference's bounded drop retry

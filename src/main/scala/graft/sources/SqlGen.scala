@@ -64,9 +64,12 @@ object SqlGen {
       s"""SELECT "$column" FROM "$table" ORDER BY "$column" DESC LIMIT 1"""
   }
 
+  /** MonetDB's default MAPI port. */
+  val MonetDbDefaultPort = 50000
+
   /** MonetDB target URL (A10). */
-  def monetDbUrl(server: String, database: String): String =
-    s"jdbc:monetdb://$server/$database"
+  def monetDbUrl(server: String, port: Int, database: String): String =
+    s"jdbc:monetdb://$server:$port/$database"
 
   /** SELECT generation (A1-A3, `CopyTable.java:310-328`): an explicit
     * query wins; else a projection list; else `SELECT *`. */

@@ -1056,15 +1056,4 @@ object EventsStream {
       .option("checkpointLocation", checkpointLocation)
       .trigger(Trigger.AvailableNow())
       .start()
-
-  /** Run a streaming DataFrame to completion against a memory sink and
-    * return the materialized result (test/dev harness for AvailableNow
-    * pipelines). */
-  def runToMemory(spark: SparkSession, streaming: DataFrame, name: String,
-      outputMode: String = "append"): DataFrame = {
-    val q = streaming.writeStream.format("memory").queryName(name)
-      .outputMode(outputMode).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(name)
-  }
 }

@@ -323,29 +323,6 @@ object TextAnalysis {
         lit(1000000L) -
           expr(s"(sum_tokens * 1000000) div (n_seqs * $maxTokens)"))
 
-  /** Bucket-count sizing for [[packSequences]] — the packing member of
-    * the sizing-rule family. Sharding's ONLY quality cost is each
-    * bucket's partially-filled tail sequence (~maxTokens/2 wasted
-    * tokens per bucket in expectation), so the relative extra padding
-    * is ≈ nBuckets·maxTokens / (2·totalTokens); measured at sf0.1
-    * (270k tokens, 512-token seqs): 1→8 buckets costs 0.3 points of
-    * padding, 64 costs 4.5, 512 costs 26 — the model tracks within a
-    * point (BASELINE.md r14). The rule caps buckets where the tail
-    * waste stays under ~1/minSeqsPerBucket of capacity (default 16 ⇒
-    * ≲3 %) and floors at 4 waves of cores for parallelism/skew slack —
-    * at 100 TB the cap is astronomically above the floor, and on a
-    * corpus too small for both, the waste cap wins (parallelism is
-    * free to give up on a small corpus; padding is not). */
-  def suggestedPackBuckets(totalTokens: Long, maxTokens: Int, cores: Int,
-      minSeqsPerBucket: Int = 16): Int = {
-    require(totalTokens >= 0 && maxTokens >= 1 && cores >= 1 &&
-      minSeqsPerBucket >= 1,
-      s"totalTokens=$totalTokens maxTokens=$maxTokens cores=$cores " +
-        s"minSeqsPerBucket=$minSeqsPerBucket out of range")
-    val cap = totalTokens / (maxTokens.toLong * minSeqsPerBucket)
-    math.max(1L, math.min(cap, 4L * cores)).min(Int.MaxValue.toLong).toInt
-  }
-
   /** Temperature-scaled mixture budgeting — the "α-sampling" data-mix
     * pass (GPT-3 / multilingual-LM style): each source's token budget is
     * proportional to `src_tokens^α` with α = 1/2, flattening the mix so

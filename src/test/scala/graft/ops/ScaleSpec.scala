@@ -1,90 +1,9 @@
 package graft.ops
 
 import java.nio.file.Files
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.SparkSpec
 import graft.sources.Tables
-import graft.sinks.Bucketing
 import graft.pipeline.{CopyJob, Publish, Staging}
-
-class SkewSpec extends SparkSpec {
-
-  test("saltedAggregate equals plain aggregation (sum/count decompose)") {
-    val li = Tables(spark, sf("sf0.01"), "lineitem")
-    val plain = li.groupBy(col("l_returnflag").as("_key"))
-      .agg(sum(col("l_quantity").cast(DecimalType(18, 6))).as("s"),
-        count(lit(1)).as("n"))
-      .collect().map(r => (r.getString(0), r.getDecimal(1), r.getLong(2))).toSet
-    val salted = Skew.saltedAggregate(li,
-      key = col("l_returnflag"), saltSource = col("l_orderkey"), salts = 8,
-      partials = Seq(sum(col("l_quantity").cast(DecimalType(18, 6))).as("ps"),
-        count(lit(1)).as("pn")),
-      finals = Seq(sum(col("ps")).as("s"), sum(col("pn")).as("n")))
-      .collect().map(r => (r.getString(0), r.getDecimal(1), r.getLong(2))).toSet
-    assert(salted == plain)
-  }
-
-  test("saltedJoin equals plain join") {
-    val o = Tables(spark, sf(), "orders").select("o_orderkey", "o_custkey")
-    val l = Tables(spark, sf(), "lineitem").select("l_orderkey", "l_quantity")
-      .withColumnRenamed("l_orderkey", "o_orderkey")
-    val plain = l.join(o, "o_orderkey").count()
-    val salted = Skew.saltedJoin(l, o, "o_orderkey", salts = 4).count()
-    assert(salted == plain)
-  }
-
-  test("hotKeys surfaces the heaviest keys in order") {
-    val li = Tables(spark, sf(), "lineitem")
-    val hot = Skew.hotKeys(li, col("l_suppkey"), threshold = 1).collect()
-    assert(hot.length > 0)
-    val counts = hot.map(_.getLong(1))
-    assert(counts.sameElements(counts.sorted(Ordering[Long].reverse)))
-  }
-}
-
-class BucketingSpec extends SparkSpec {
-
-  test("bucketed join of co-bucketed tables plans without a shuffle") {
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    // a killed prior run can leave warehouse files behind after the
-    // catalog entry is gone — clear the locations too
-    Seq("b_orders", "b_lineitem").foreach { t =>
-      val p = java.nio.file.Paths.get(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
-      if (java.nio.file.Files.exists(p)) {
-        def rm(x: java.nio.file.Path): Unit = {
-          if (java.nio.file.Files.isDirectory(x)) {
-            val s = java.nio.file.Files.list(x)
-            try s.forEach(rm) finally s.close()
-          }
-          java.nio.file.Files.deleteIfExists(x)
-        }
-        rm(p)
-      }
-    }
-    Bucketing.writeBucketed(
-      Tables(spark, sf(), "orders").select("o_orderkey", "o_totalprice"),
-      "b_orders", "o_orderkey", 4, sortCols = Seq("o_orderkey"))
-    Bucketing.writeBucketed(
-      Tables(spark, sf(), "lineitem")
-        .select(col("l_orderkey").as("o_orderkey"), col("l_quantity")),
-      "b_lineitem", "o_orderkey", 4, sortCols = Seq("o_orderkey"))
-    // force the sort-merge path (tiny test data would otherwise
-    // broadcast) to show the bucket-to-bucket join plans shuffle-free
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = Bucketing.bucketedJoin(spark, "b_orders", "b_lineitem", "o_orderkey")
-      assert(Bucketing.isShuffleFree(joined), joined.queryExecution.executedPlan.toString)
-      assert(joined.queryExecution.executedPlan.toString.contains("SortMergeJoin"))
-      // and it is still correct
-      val expected = Tables(spark, sf(), "lineitem").count()
-      assert(joined.count() == expected)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-  }
-}
 
 class ResumeSpec extends SparkSpec {
   import CopyJob._

@@ -331,12 +331,15 @@ class MainSpec extends SparkSpec {
     val cfg2 = ConfigBridge.toJobConfig(p2,
       PropertiesConfig.parseProperties(text2, Map.empty))
     val byId = cfg2.tables.map(t => t.id -> t.publishMode).toMap
+    // the cascade's INSERT rung and the plain INSERT table dial the
+    // configured port too, not MonetDB's default
     byId("a") match {
       case m: CopyJob.MonetLoad =>
         assert(m.port == 49999 && m.copyDir.contains("/mnt/s"))
+        assert(m.insert.url == "jdbc:monetdb://h:49999/d")
       case other => fail(s"table a should cascade, got $other")
     }
-    assert(byId("b").isInstanceOf[CopyJob.JdbcLoad])
+    assert(byId("b") == CopyJob.JdbcLoad("jdbc:monetdb://h:49999/d", 10000))
   }
 
   test("--resume with zero-row staging for a non-allowEmpty table fails before publish") {

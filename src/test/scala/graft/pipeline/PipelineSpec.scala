@@ -68,7 +68,7 @@ class SqlGenSpec extends AnyFunSuite {
       SqlGen.Postgres.url("srv", None, "db", Some("nope")))
     assert(SqlGen.MsSql.top1("t", "c") == "SELECT TOP 1 [c] FROM [t] ORDER BY [c] DESC")
     assert(SqlGen.Postgres.top1("t", "c") == """SELECT "c" FROM "t" ORDER BY "c" DESC LIMIT 1""")
-    assert(SqlGen.monetDbUrl("srv", "db") == "jdbc:monetdb://srv/db")
+    assert(SqlGen.monetDbUrl("srv", 49999, "db") == "jdbc:monetdb://srv:49999/db")
   }
 }
 

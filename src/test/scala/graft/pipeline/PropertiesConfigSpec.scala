@@ -205,7 +205,7 @@ class PropertiesConfigSpec extends AnyFunSuite {
     val props = PropertiesConfig.parseProperties(canonical, env = Map.empty)
     val mode = PropertiesConfig.jdbcLoadMode(p, props)
     assert(mode.contains(
-      CopyJob.JdbcLoad(SqlGen.monetDbUrl("localhost", "my_target"), 10000)))
+      CopyJob.JdbcLoad("jdbc:monetdb://localhost:50000/my_target", 10000)))
     assert(PropertiesConfig.jdbcLoadMode(p.copy(target = None), props).isEmpty)
     // the one parsed batch.size is the INSERT writer's batch size
     val p7 = PropertiesConfig.parseOrFail(canonical.replace(

@@ -175,10 +175,9 @@ class AsOfJoinSpec extends SparkSpec {
       if (java.nio.file.Files.exists(p)) rm(p)
     }
     val e = Tables(spark, sf(), "events").select("event_id", "user_id", "ts", "value")
-    graft.sinks.Bucketing.writeBucketed(e, "b_ev_l", "user_id", 4)
-    graft.sinks.Bucketing.writeBucketed(
-      e.select(col("user_id"), col("ts"), col("value").as("pv")),
-      "b_ev_r", "user_id", 4)
+    e.write.mode("overwrite").bucketBy(4, "user_id").saveAsTable("b_ev_l")
+    e.select(col("user_id"), col("ts"), col("value").as("pv"))
+      .write.mode("overwrite").bucketBy(4, "user_id").saveAsTable("b_ev_r")
     val joined = Extended.asofJoinNative(
       spark.table("b_ev_l"), spark.table("b_ev_r"), Seq("user_id"), "ts")
     assert(joined.count() == e.count())

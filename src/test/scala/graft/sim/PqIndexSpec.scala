@@ -80,28 +80,6 @@ class PqIndexSpec extends SparkSpec {
     assert(!plan.contains("embedding:array"), plan)
   }
 
-  test("append: new vectors join the composed index without retraining; full probe == flat ADC over the union") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_append").toString
-    val firstHalf = emb.filter(col("vec_id") % 2 === 0)
-    val secondHalf = emb.filter(col("vec_id") % 2 === 1)
-    PqIndex.saveIvfPq(IvfIndex.build(firstHalf, "vec_id", "embedding", nlist = 8),
-      cb, "vec_id", "embedding", dir)
-    PqIndex.appendIvfPq(spark, dir, secondHalf, "vec_id", "embedding")
-    assert(spark.read.parquet(s"$dir/cells").count() == emb.count())
-    // appended codes are assigned/encoded under the EXISTING quantizers:
-    // at full probe the persisted search reproduces the flat ADC scan
-    // over the UNION — proof the new rows are really in the index
-    val queries = emb.filter(col("vec_id") < 5)
-    val flat = PqIndex.searchADC(cb,
-      PqIndex.encode(emb, "vec_id", "embedding", cb),
-      queries, "vec_id", "embedding", k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val got = PqIndex.searchIndexedIvfAdc(spark, dir, queries,
-      "vec_id", "embedding", k = 3, nprobe = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(got == flat)
-  }
-
   test("two-stage re-rank: exact cosines, recall >= plain ADC, shortlist broadcast") {
     val codes = PqIndex.encode(emb, "vec_id", "embedding", cb)
     val queries = emb.filter(col("vec_id") < 8)
@@ -146,7 +124,7 @@ class PqIndexSpec extends SparkSpec {
     // prefix sets are nested, so recall never decreases with shortlist
     assert(curve.sliding(2).forall { case Array((_, _, a), (_, _, b)) => b >= a })
     // the endpoint reranks EVERY ADC candidate — brute force, recall 1.0:
-    // this is what makes suggestedShortlist total, unlike the LSH rule
+    // this is what makes the shortlist ladder total, unlike the LSH one
     assert(curve.last._3 == 1.0, s"endpoint recall ${curve.last._3}")
     // the slicing identity: step s's hits equal running the standalone
     // two-stage serve at shortlist=s through the same metric
@@ -159,14 +137,6 @@ class PqIndexSpec extends SparkSpec {
       assert(standalone == curve.find(_._1 == s).get._2,
         s"shortlist=$s: curve ${curve.find(_._1 == s).get._2} != standalone $standalone")
     }
-    // the total rule: any reachable target yields a step; 1.0 → endpoint
-    assert(PqIndex.suggestedShortlist(cb, codes, emb, queries, "vec_id",
-      "embedding", k = 3, ladder, targetRecall = 1.0) <= ladder.last)
-    val target = math.max(curve.head._3, 1e-9)
-    val easy = PqIndex.suggestedShortlist(cb, codes, emb, queries, "vec_id",
-      "embedding", k = 3, ladder, targetRecall = target)
-    assert(easy == curve.find(_._3 >= target).get._1,
-      s"easy=$easy curve=${curve.toSeq}")
   }
 
   test("null vectors drop everywhere instead of corrupting training or ranking first") {

@@ -61,56 +61,6 @@ class SqIndexSpec extends SparkSpec {
     assert(composed == flat)
   }
 
-  test("persisted IVF∘SQ8 index partition-prunes, reads only codes, matches in-memory") {
-    val ivf = IvfIndex.build(emb, "vec_id", "embedding", nlist = 8)
-    val dir = java.nio.file.Files.createTempDirectory("ivfsq").toString
-    SqIndex.saveIvfSq(ivf, m, "vec_id", "embedding", dir)
-    // round-trip of the range model (the load-bearing state: a drifted
-    // range silently rescales every reconstruction)
-    val m2 = SqIndex.loadSqModel(spark, dir)
-    assert(m2.vmin.toSeq == m.vmin.toSeq && m2.vdiff.toSeq == m.vdiff.toSeq)
-    val queries = emb.filter(col("vec_id") < 5)
-    val inMem = SqIndex.searchIvfSq(ivf, m, queries,
-      "vec_id", "embedding", k = 3, nprobe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val indexed = SqIndex.searchIndexedIvfSq(spark, dir, queries,
-      "vec_id", "embedding", k = 3, nprobe = 2)
-    val got = indexed.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got == inMem)
-    val plan = indexed.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [cell"), plan)
-    assert(!plan.contains("embedding:array"), plan)
-  }
-
-  test("append: out-of-range vectors clamp and join the persisted index; full probe == flat over the union") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfsq_append").toString
-    val firstHalf = emb.filter(col("vec_id") % 2 === 0)
-    val secondHalf = emb.filter(col("vec_id") % 2 === 1)
-    // train ranges AND centroids on the first half only, so second-half
-    // coordinates genuinely fall outside some trained [min,max]
-    val mH = SqIndex.train(firstHalf, "vec_id", "embedding")
-    SqIndex.saveIvfSq(IvfIndex.build(firstHalf, "vec_id", "embedding", nlist = 8),
-      mH, "vec_id", "embedding", dir)
-    SqIndex.appendIvfSq(spark, dir, secondHalf, "vec_id", "embedding")
-    val codes = spark.read.parquet(s"$dir/cells")
-    assert(codes.count() == emb.count())
-    // every appended code saturated into [0, 255] — no negative or
-    // overflowed byte anywhere in the layout
-    assert(codes.filter(exists(col("codes"), c => c < 0 || c > 255)).count() == 0)
-    // full probe over the persisted union == flat scan over clamp-encoded
-    // full corpus under the same (first-half) model
-    val clampedAll = emb.filter(col("embedding").isNotNull)
-      .select(col("vec_id"), SqIndex.clampedCodesExpr(mH, col("embedding")).as("codes"))
-    val queries = emb.filter(col("vec_id") < 5)
-    val flat = SqIndex.searchSqAdc(mH, clampedAll, queries,
-      "vec_id", "embedding", k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val got = SqIndex.searchIndexedIvfSq(spark, dir, queries,
-      "vec_id", "embedding", k = 3, nprobe = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    assert(got == flat)
-  }
-
   test("binary means are partitioning-invariant (fixed-point sums)") {
     val mu = SqIndex.binaryMeans(emb, "vec_id", "embedding")
     val mu2 = SqIndex.binaryMeans(emb.repartition(7, col("vec_id")), "vec_id", "embedding")

@@ -116,6 +116,67 @@ class TrainFoldSpec extends SparkSpec {
     assert(got.toSeq == exp.toSeq)
   }
 
+  private def causeMessages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(String.valueOf(_)).mkString(" | ")
+
+  test("codesCrossSums fails on a code outside [0, ksub)") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("codes", ArrayType(IntegerType, containsNull = true)),
+      StructField("x", ArrayType(FloatType, containsNull = true))))
+    // m = 2, ksub = 4: code 4 of subspace 1 would land in the slot of
+    // (i + 1, sub 0, cell 0) without the check
+    val rows = java.util.Arrays.asList(
+      org.apache.spark.sql.Row(Seq(0, 3), Seq(1.0f, 2.0f)),
+      org.apache.spark.sql.Row(Seq(1, 4), Seq(3.0f, 4.0f)))
+    val e = intercept[Exception](TrainFold.codesCrossSums(
+      spark.createDataFrame(rows, schema), m = 2, ksub = 4, dim = 2))
+    assert(causeMessages(e).contains("code 4 of subspace 1 outside [0, 4)"),
+      causeMessages(e))
+  }
+
+  test("both folds fail on a null vector row instead of skipping it") {
+    import org.apache.spark.sql.types._
+    val keyedSchema = StructType(Seq(
+      StructField("k", IntegerType),
+      StructField("vec", ArrayType(FloatType, containsNull = true))))
+    val keyed = spark.createDataFrame(java.util.Arrays.asList(
+      org.apache.spark.sql.Row(0, Seq(1.0f, 2.0f)),
+      org.apache.spark.sql.Row(1, null)), keyedSchema)
+    val e1 = intercept[Exception](
+      TrainFold.keyedFixedPointSums(keyed, nKeys = 2, dim = 2))
+    assert(causeMessages(e1).contains("null key or null vector row"),
+      causeMessages(e1))
+    val crossSchema = StructType(Seq(
+      StructField("codes", ArrayType(IntegerType, containsNull = true)),
+      StructField("x", ArrayType(FloatType, containsNull = true))))
+    val cross = spark.createDataFrame(java.util.Arrays.asList(
+      org.apache.spark.sql.Row(Seq(0, 1), Seq(1.0f, 2.0f)),
+      org.apache.spark.sql.Row(Seq(1, 0), null)), crossSchema)
+    val e2 = intercept[Exception](
+      TrainFold.codesCrossSums(cross, m = 2, ksub = 2, dim = 2))
+    assert(causeMessages(e2).contains("null codes or null vector row"),
+      causeMessages(e2))
+  }
+
+  test("64-partition input folds to the same sums as a 1-partition input") {
+    val m = 4; val ksub = 8
+    val cb = PqIndex.train(emb, "vec_id", "embedding", m = m, ksub = ksub)
+    val rel = emb.filter(col("embedding").isNotNull)
+      .select(PqIndex.codesExpr(cb, col("embedding")).as("codes"),
+        col("embedding"))
+    val keyed = rel.select(element_at(col("codes"), 1).as("k"), col("embedding"))
+    val spread = keyed.repartition(64)
+    assert(spread.rdd.getNumPartitions == 64)
+    val (c64, s64) = TrainFold.keyedFixedPointSums(spread, ksub, cb.dim)
+    val (c1, s1) = TrainFold.keyedFixedPointSums(keyed.coalesce(1), ksub, cb.dim)
+    assert(c64.sum == emb.filter(col("embedding").isNotNull).count())
+    assert(c64.toSeq == c1.toSeq && s64.toSeq == s1.toSeq)
+    assert(TrainFold.codesCrossSums(rel.repartition(64), m, ksub, cb.dim).toSeq ==
+      TrainFold.codesCrossSums(rel.coalesce(1), m, ksub, cb.dim).toSeq)
+  }
+
   test("trainOpq init fusion: initVecs path == the per-train collected init") {
     // the driver-rotated init must match what train() would collect from
     // the rotated relation itself — same rows, same MatVecFloat floats

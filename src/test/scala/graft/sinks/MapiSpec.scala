@@ -308,10 +308,18 @@ class MapiSpec extends SparkSpec {
       step("insert", false)) == BatchedInsert)
     assert(order.toSeq == Seq("file", "stdin", "insert"))
     order.clear()
-    // everything fails → exception
-    intercept[IllegalStateException] {
+    // everything fails → exception naming every rung and its message,
+    // the first rung's exception as cause, the later two suppressed
+    val e = intercept[IllegalStateException] {
       loadWithCascade(step("file", true), step("stdin", true),
         step("insert", true))
     }
+    assert(e.getMessage == "unable to load data: " +
+      "COPY INTO (file) failed: file failed; " +
+      "COPY INTO (stdin) failed: stdin failed; " +
+      "batched INSERT failed: insert failed")
+    assert(e.getCause.getMessage == "file failed")
+    assert(e.getSuppressed.map(_.getMessage).toSeq ==
+      Seq("stdin failed", "insert failed"))
   }
 }
