@@ -13,6 +13,11 @@ import org.apache.spark.sql.functions._
   * (which a long-lived cluster amortizes anyway).
   */
 object Bench {
+  /** Untimed settle after each query's cleanup (see the loop). */
+  private val PauseMs = 400L
+  /** Regression tripwire: a query slower than this is named in `slow`. */
+  private val SlowSec = 10.0
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -20,9 +25,7 @@ object Bench {
     // up they are re-derived from the fact table's metadata row count
     // via Skew.suggestedShufflePartitions (cores floor / volume
     // ceiling — the r11 sf10 sweep encoded as a rule, replacing the
-    // hand-tuned override). SPARK_GRAFT_SHUFFLE still wins when set —
-    // the recording knob for partition-count sweeps themselves.
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    // hand-tuned override), as perfbench's harness derives them.
     // RUNTIME broadcast threshold sized to the memory this harness
     // actually has (8 GiB driver heap), not Spark's conservative 10 MiB
     // default: at sf10 several single-column build sides (q09's distinct
@@ -34,7 +37,7 @@ object Bench {
     // size ESTIMATES of aggregate outputs run far under reality and the
     // planner happily broadcast a 15M-row side. A real deployment tunes
     // the two thresholds the same asymmetric way.
-    val bcast = sys.env.getOrElse("SPARK_GRAFT_BCAST", "64m")
+    val bcast = "64m"
     // TypedImperativeAggregates (simhash votes, minhash perms, CMS)
     // default-fall back to SORT-based aggregation after 128 distinct
     // keys per partition — a threshold sized for percentile-style
@@ -46,21 +49,18 @@ object Bench {
     // buffer population is groups/partitions, and at ~1 KiB per buffer
     // 2^20 keys is ~1 GiB per task — the same per-task budget
     // suggestedShufflePartitions assumes.
-    val objAggKeys = sys.env.getOrElse("SPARK_GRAFT_OBJAGG_KEYS", (1 << 20).toString)
-    // escape hatch for one-off conf experiments: "k=v;k=v"
-    val extraConf = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-    val builder = SparkSession.builder()
+    val objAggKeys = (1 << 20).toString
+    // one-off conf experiments pass `-Dspark.k=v`: SparkConf reads
+    // spark.* system properties, and the settings below win over them
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.autoBroadcastJoinThreshold", bcast)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", objAggKeys)
       .config("spark.ui.enabled", "false")
-    extraConf.split(";").filter(_.contains("=")).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-    }
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // derive the partition count from the CORPUS, not the harness: the
@@ -71,15 +71,13 @@ object Bench {
     // of the r11 sf10 sweep), at cluster volumes the bytes ceiling
     // takes over. shuffle.partitions is a runtime SQL conf, so setting
     // it here rebinds every subsequent non-AQE plan.
-    if (!sys.env.contains("SPARK_GRAFT_SHUFFLE")) {
-      val factRows = try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-        catch { case NonFatal(_) => 0L }
-      val derived = graft.ops.Skew.suggestedShufflePartitions(
-        factRows, avgRowBytes = 128L, cores = cpus.toInt)
-      spark.conf.set("spark.sql.shuffle.partitions", derived.toString)
-      System.err.println(s"[bench] shuffle partitions: $derived " +
-        s"(factRows=$factRows, cores=$cpus)")
-    }
+    val factRows = try spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+      catch { case NonFatal(_) => 0L }
+    val derived = graft.ops.Skew.suggestedShufflePartitions(
+      factRows, avgRowBytes = 128L, cores = cpus.toInt)
+    spark.conf.set("spark.sql.shuffle.partitions", derived.toString)
+    System.err.println(s"[bench] shuffle partitions: $derived " +
+      s"(factRows=$factRows, cores=$cpus)")
 
     // warmup: parquet scan + hash agg + shuffle + broadcast join + sort
     try {
@@ -141,10 +139,8 @@ object Bench {
       // window moved wherever the preceding block got faster — it
       // measures cross-query interference, not the operator. 400 ms of
       // untimed settle removes it entirely; timing methodology (noop
-      // sink, same queries, same order) is unchanged. Set
-      // SPARK_GRAFT_PAUSE_MS=0 to reproduce the pre-r14 numbers.
-      val pauseMs = sys.env.getOrElse("SPARK_GRAFT_PAUSE_MS", "400").toLong
-      if (pauseMs > 0) Thread.sleep(pauseMs)
+      // sink, same queries, same order) is unchanged.
+      Thread.sleep(PauseMs)
       name -> dt
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
@@ -156,20 +152,16 @@ object Bench {
     // regression tripwire (BASELINE.md): no single query may cost >10s at
     // sf0.1 — the q53 class of plan bug, flagged in the output instead of
     // buried in 80 per-query numbers. The wire is calibrated for the
-    // driver's sf0.1 run; larger-SF soaks set SPARK_GRAFT_SLOW_SEC (e.g.
-    // 30 at sf1) so a healthy 11 s query at 10× data doesn't read as the
-    // plan bug the wire exists to catch (r9/r11 both re-diagnosed that
-    // false positive before this knob existed).
-    val slowSec = sys.env.getOrElse("SPARK_GRAFT_SLOW_SEC", "10").toDouble
-    val slow = results.filter(_._2 > slowSec).map("\"" + _._1 + "\"")
+    // driver's sf0.1 run; at larger SFs a healthy query can cross it, so
+    // read `slow` there against the per-query times, not as a verdict.
+    val slow = results.filter(_._2 > SlowSec).map("\"" + _._1 + "\"")
       .mkString("[", ",", "]")
     // self-description: the knobs that make two recordings comparable.
     // An r13 soak read as a false 23-28×/decade regression purely because
     // SPARK_GRAFT_CPUS=4 had leaked into one side of the comparison and
     // nothing in the artifact said so.
     val env = s""""cpus":$cpus,"shuffle_partitions":${
-      spark.conf.get("spark.sql.shuffle.partitions")},"objagg_keys":$objAggKeys,"pause_ms":${
-      sys.env.getOrElse("SPARK_GRAFT_PAUSE_MS", "400")}"""
+      spark.conf.get("spark.sql.shuffle.partitions")},"objagg_keys":$objAggKeys,"pause_ms":$PauseMs"""
     val json =
       s"""{"queries":$qs,"errors":$errs,"slow":$slow,"sf":"$sfDir",$env,"metric":"total","unit":"sec","n":${results.size},"value":$total}"""
     // Output-contract fix (r15, declared in OPTIMIZATION_r15.md; timed

@@ -155,13 +155,6 @@ object Dedup {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  /** Probe a [[saveLshIndex]] index with a new batch: candidates are
-    * (new, ref) pairs sharing a band, scored by signature agreement,
-    * kept at `threshold`. Only the BATCH is shingled/hashed; the index
-    * scan is pre-pruned by a bloom filter over the batch's band hashes
-    * (pre-shuffle, [[graft.functions.BloomMightContainLong]] semantics:
-    * false positives are dropped by the join, nothing is lost), so the
-    * shuffle carries ~matching index rows, not the index. */
   /** Shared probe preparation: stored hash-family params, batch
     * signatures (materialized once), batch band keys, and the
     * bloom-pruned reference band slice — [[probeLshIndex]] joins over
@@ -201,7 +194,15 @@ object Dedup {
     ProbePrep(refSigs, newSigs, nb, pruned)
   }
 
-  /** `maxBucket` here is an OPT-IN skew guard (default: no cap). The
+  /** Probe a [[saveLshIndex]] index with a new batch: candidates are
+    * (new, ref) pairs sharing a band, scored by signature agreement,
+    * kept at `threshold`. Only the BATCH is shingled/hashed; the index
+    * scan is pre-pruned by a bloom filter over the batch's band hashes
+    * (pre-shuffle, [[graft.functions.BloomMightContainLong]] semantics:
+    * false positives are dropped by the join, nothing is lost), so the
+    * shuffle carries ~matching index rows, not the index.
+    *
+    * `maxBucket` is an OPT-IN skew guard (default: no cap). The
     * default changed from 1000: silently discarding every candidate in
     * a boilerplate-heavy reference bucket is a recall regression with
     * no signal, and the persisted-index probe is exactly where a
@@ -1519,8 +1520,8 @@ object Dedup {
     * values, so the corpus side is a stored table maintained by
     * appending each batch's rows — at 100 TB the daily append then
     * tokenizes ONLY the batch, and the corpus-side cost drops from a
-    * full re-tokenize to a 16-bytes-per-doc scan (tools.IncBench
-    * measures the phase split; numbers in BASELINE.md r12). */
+    * full re-tokenize to a 16-bytes-per-doc scan (the phase split is
+    * recorded in `BENCH_*inc*.json`; numbers in BASELINE.md r12). */
   def simHashNearDupsAgainstFps(newFps: DataFrame, allFps: DataFrame,
       idCol: String, maxHamming: Int = 3): DataFrame = {
     require(maxHamming < 4,

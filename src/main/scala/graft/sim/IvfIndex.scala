@@ -179,7 +179,7 @@ object IvfIndex {
       .select("query_id", "q_vec", "cell")
 
   /** Top-k cosine over the probed cells; `cells` carries the corpus id
-    * already renamed to `neighbor_id` (the [[probeCells]] output shape). */
+    * already renamed to `neighbor_id`. */
   private def topKInProbedCells(cells: DataFrame, probes: DataFrame,
       vecCol: String, k: Int): DataFrame =
     PqIndex.topKByCos(
@@ -195,56 +195,15 @@ object IvfIndex {
 
   // ------------------------------------------------ persisted cell layout
   //
-  // ONE on-disk layout serves IVF and IVF∘PQ: `$path/cells` holds
-  // (id, payload) rows parquet-PARTITIONED BY cell, `$path/centroids` the
-  // float coarse quantizer, and IVF∘PQ adds its `codebook` next to them.
-  // The payload is the only codec-specific part: the raw vector or
-  // `PqIndex.codesExpr` — a row expression over `vecCol`. [[saveCells]]
-  // writes the layout and [[probeCells]] does the probe-collect +
-  // static-IN pruned scan; [[append]] adds raw vectors under the frozen
-  // centroids.
+  // `$path/cells` holds the (id, vector) rows parquet-PARTITIONED BY
+  // cell and `$path/centroids` the float coarse quantizer. At scale the
+  // "index" is just this directory layout: [[save]] writes it,
+  // [[append]] adds raw vectors under the frozen centroids, and
+  // [[searchIndexed]] probes it with a partition-pruned scan that never
+  // opens the other cells' files.
 
-  /** Persist the index: `payload` rows partitioned by cell plus the
-    * centroids. At scale the "index" is just a directory layout, and a
-    * probe becomes a partition-pruned scan that never opens the other
-    * cells' files. */
-  private[sim] def saveCells(ivf: Model, idCol: String, vecCol: String,
-      payload: Column, path: String): Unit = {
-    writeByKey(
-      ivf.cells.filter(col(vecCol).isNotNull)
-        .select(col(idCol), payload, col("cell")),
-      "cell", s"$path/cells", SaveMode.Overwrite)
-    ivf.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-  }
-
-  /** Probe a persisted index with STATIC partition pruning: the union of
-    * all queries' probe cells (≤ nlist values, independent of query
-    * count) is collected ONCE and pushed as a literal IN filter, so the
-    * parquet scan lists only the probed cell directories — the 100 TB
-    * path where nprobe/nlist of the corpus is read, verifiable as
-    * `PartitionFilters` in the plan. Returns the probe rows
-    * (query_id, q_vec, cell) as a local relation — bounded by
-    * |queries| × nprobe, it feeds both the IN filter and the broadcast
-    * join, and a local list avoids the persist-without-unpersist leak a
-    * cached two-consumer plan would carry — and the pruned cell scan
-    * with the corpus id renamed to `neighbor_id`. */
-  private[sim] def probeCells(spark: SparkSession, path: String,
-      queries: DataFrame, idCol: String, vecCol: String,
-      nprobe: Int): (DataFrame, DataFrame) = {
-    val probesPlan = probesFor(spark.read.parquet(s"$path/centroids"),
-      queries, idCol, vecCol, nprobe)
-    val probeRows = probesPlan.collect()
-    val probedCells = probeRows.map(_.getAs[Int]("cell")).distinct.toSeq
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
-    val pruned = spark.read.parquet(s"$path/cells")
-      .filter(col("cell").isin(probedCells.map(Int.box): _*))
-      .withColumnRenamed(idCol, "neighbor_id")
-    (probes, pruned)
-  }
-
-  /** THE partitioned write, shared by every cell layout and the LSH
-    * index's band rows so none can lose the discipline independently:
+  /** THE partitioned write, shared by the cell layout and the LSH
+    * index's band rows so neither can lose the discipline independently:
     * the `repartition(key)` before `partitionBy` is load-bearing at
     * scale — the key is computed by a map stage over corpus splits, so
     * every write task holds rows of ~every key and a bare `partitionBy`
@@ -258,13 +217,17 @@ object IvfIndex {
     df.repartition(col(key))
       .write.partitionBy(key).mode(mode).parquet(path)
 
-  /** Persist a raw-vector IVF index ([[saveCells]] with the vector itself
-    * as payload). `model.cells` is (id, vector, cell), as [[build]] and
+  /** Persist the index: the vectors partitioned by cell plus the
+    * centroids. `model.cells` is (id, vector, cell), as [[build]] and
     * [[load]] produce it. */
   def save(model: Model, path: String): Unit = {
     val idCol = model.cells.columns.head
     val vecCol = model.cells.columns(1)
-    saveCells(model, idCol, vecCol, col(vecCol), path)
+    writeByKey(
+      model.cells.filter(col(vecCol).isNotNull)
+        .select(col(idCol), col(vecCol), col("cell")),
+      "cell", s"$path/cells", SaveMode.Overwrite)
+    model.centroids.write.mode("overwrite").parquet(s"$path/centroids")
   }
 
   def load(spark: SparkSession, path: String): Model = {
@@ -297,10 +260,11 @@ object IvfIndex {
       "cell", s"$path/cells", SaveMode.Append)
   }
 
-  /** Cell-occupancy statistics of a PERSISTED index ([[append]] adds
-    * vectors under frozen centroids forever, so a drifting corpus
-    * silently concentrates into few cells and recall decays with no
-    * error anywhere). ONE row out:
+  /** Cell-occupancy statistics of an index persisted by [[save]]
+    * ([[append]] adds vectors under frozen centroids forever, so a
+    * drifting corpus silently concentrates into few cells and recall
+    * decays with no error anywhere). q180 reads it after a drifted
+    * append and flags the retrain in-plan. ONE row out:
     * `(nlist, n_vecs, n_empty_cells, max_cell, max_cell_frac,
     * imbalance)` with `imbalance = nlist · Σ n_c² / N²` — FAISS's
     * imbalance factor: 1.0 is perfectly balanced, k means everything
@@ -335,10 +299,27 @@ object IvfIndex {
           .as("imbalance"))
   }
 
-  /** Search a persisted index through the pruned [[probeCells]] scan. */
+  /** Search a persisted index with STATIC partition pruning: the union
+    * of all queries' probe cells (≤ nlist values, independent of query
+    * count) is collected ONCE and pushed as a literal IN filter, so the
+    * parquet scan lists only the probed cell directories — the 100 TB
+    * path where nprobe/nlist of the corpus is read, verifiable as
+    * `PartitionFilters` in the plan. The probe rows (query_id, q_vec,
+    * cell) are re-served as a local relation — bounded by |queries| ×
+    * nprobe, they feed both the IN filter and the broadcast join, and a
+    * local list avoids the persist-without-unpersist leak a cached
+    * two-consumer plan would carry. */
   def searchIndexed(spark: SparkSession, path: String, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
-    val (probes, cells) = probeCells(spark, path, queries, idCol, vecCol, nprobe)
+    val probesPlan = probesFor(spark.read.parquet(s"$path/centroids"),
+      queries, idCol, vecCol, nprobe)
+    val probeRows = probesPlan.collect()
+    val probedCells = probeRows.map(_.getAs[Int]("cell")).distinct.toSeq
+    val probes = spark.createDataFrame(
+      java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
+    val cells = spark.read.parquet(s"$path/cells")
+      .filter(col("cell").isin(probedCells.map(Int.box): _*))
+      .withColumnRenamed(idCol, "neighbor_id")
     topKInProbedCells(cells, probes, vecCol, k)
   }
 }

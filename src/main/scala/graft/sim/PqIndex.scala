@@ -612,86 +612,25 @@ object PqIndex {
         .withColumn("adist_fp", adcDistCol(cb) + col("qnorm_fp")), k)
   }
 
-  /** The persisted-index form of the two-stage serve: ADC shortlist from
-    * the partition-pruned [[searchIndexedIvfAdc]] scan, then
-    * [[rerankExact]] against the full-vector `corpus` relation — the
-    * complete production read path (pruned code files for candidates,
-    * one corpus-side fetch for exactly |queries| × shortlist vectors). */
-  def searchIndexedIvfAdcRerank(spark: org.apache.spark.sql.SparkSession,
-      path: String, corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, nprobe: Int, shortlist: Int): DataFrame =
-    rerankExact(
-      searchIndexedIvfAdc(spark, path, queries, idCol, vecCol, shortlist, nprobe)
-        .select("query_id", "neighbor_id"),
-      corpus, queries, idCol, vecCol, k)
-
-  /** The shared IVF∘PQ scan: probe rows (query_id, q_vec, cell) carry
-    * their ADC table into an equi join on `cell`, so each query reads
-    * ONLY its probed cells' code rows — corpus fraction ≈ nprobe/nlist,
-    * and of that only the m-byte code column. */
-  private def adcOverCells(cellCodes: DataFrame, cb: Codebook,
-      probes: DataFrame, k: Int): DataFrame = {
-    val q = broadcast(probes.select(col("query_id"), col("cell"),
-      dtabFp(cb, col("q_vec")).as("dtab")))
-    topKByAdc(
-      cellCodes.join(q, Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .withColumn("adist_fp", adcDistCol(cb)), k)
-  }
-
   /** IVF∘PQ search (FAISS `IndexIVFPQ` with `by_residual=false`): the
     * coarse quantizer picks `nprobe` cells per query, PQ codes pay the
     * per-pair cost. The two stages compose without re-touching the
     * corpus: codes are computed from the cells relation in the same
-    * map stage that the cell assignment already produced. */
+    * map stage that the cell assignment already produced. Probe rows
+    * carry their ADC table into an equi join on `cell`, so each query
+    * reads ONLY its probed cells' code rows — corpus fraction ≈
+    * nprobe/nlist, and of that only the m-byte code column. */
   def searchIvfAdc(ivf: IvfIndex.Model, cb: Codebook, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
     val cellCodes = ivf.cells.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("neighbor_id"), col("cell"),
         codesExpr(cb, col(vecCol)).as("codes"))
-    adcOverCells(cellCodes, cb,
-      IvfIndex.probesFor(ivf.centroids, queries, idCol, vecCol, nprobe), k)
-  }
-
-  /** Persist the composed index: PQ codes in the shared cell layout
-    * ([[IvfIndex.saveCells]] — a probe is a partition-pruned scan over
-    * files 16-32× smaller than the vectors they stand for), plus the
-    * codebook (KiB). */
-  def saveIvfPq(ivf: IvfIndex.Model, cb: Codebook, idCol: String,
-      vecCol: String, path: String): Unit = {
-    val spark = ivf.cells.sparkSession
-    import spark.implicits._
-    IvfIndex.saveCells(ivf, idCol, vecCol,
-      codesExpr(cb, col(vecCol)).as("codes"), path)
-    (for (j <- 0 until cb.m; c <- 0 until cb.ksub)
-      yield (j, c, cb.centroids(j)(c).toSeq, cb.dim))
-      .toDF("sub", "cell", "c", "dim")
-      .write.mode("overwrite").parquet(s"$path/codebook")
-  }
-
-  def loadCodebook(spark: org.apache.spark.sql.SparkSession, path: String): Codebook = {
-    val rows = spark.read.parquet(s"$path/codebook").collect()
-    val dim = rows.head.getAs[Int]("dim")
-    val m = rows.map(_.getAs[Int]("sub")).max + 1
-    val ksub = rows.map(_.getAs[Int]("cell")).max + 1
-    val cents = Array.ofDim[Array[Double]](m, ksub)
-    rows.foreach { r =>
-      cents(r.getAs[Int]("sub"))(r.getAs[Int]("cell")) =
-        r.getSeq[Double](r.fieldIndex("c")).toArray
-    }
-    Codebook(dim, m, ksub, cents)
-  }
-
-  /** Search a persisted IVF∘PQ index through the statically pruned
-    * [[IvfIndex.probeCells]] scan: only the probed cell directories are
-    * listed and only the code column is read — the full memory-and-I/O
-    * path of a production ANN serve. */
-  def searchIndexedIvfAdc(spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, idCol: String, vecCol: String, k: Int,
-      nprobe: Int): DataFrame = {
-    val cb = loadCodebook(spark, path)
-    val (probes, cellCodes) =
-      IvfIndex.probeCells(spark, path, queries, idCol, vecCol, nprobe)
-    adcOverCells(cellCodes, cb, probes, k)
+    val q = broadcast(
+      IvfIndex.probesFor(ivf.centroids, queries, idCol, vecCol, nprobe)
+        .select(col("query_id"), col("cell"), dtabFp(cb, col("q_vec")).as("dtab")))
+    topKByAdc(
+      cellCodes.join(q, Seq("cell"))
+        .filter(col("query_id") =!= col("neighbor_id"))
+        .withColumn("adist_fp", adcDistCol(cb)), k)
   }
 }

@@ -7,12 +7,6 @@ import graft.sources.Tables
 class IvfIndexSpec extends SparkSpec {
   private lazy val emb = Tables(spark, sf("sf0.01"), "embeddings")
   private lazy val model = IvfIndex.build(emb, "vec_id", "embedding", nlist = 8)
-  private lazy val cb = PqIndex.train(emb, "vec_id", "embedding", m = 4, ksub = 8)
-
-  /** The codecs that save the shared cell layout: (name, save). */
-  private def layouts: Seq[(String, (IvfIndex.Model, String) => Unit)] = Seq(
-    ("ivf", IvfIndex.save(_, _)),
-    ("ivfpq", (m, dir) => PqIndex.saveIvfPq(m, cb, "vec_id", "embedding", dir)))
 
   test("build assigns every vector to exactly one of nlist cells") {
     assert(model.cells.count() == emb.count())
@@ -79,18 +73,15 @@ class IvfIndexSpec extends SparkSpec {
     // holds → tasks × nlist files; with it each cell is wholly inside
     // one task. Repartition the source 8 ways first so the failure mode
     // (8 tasks × cells files) is actually reachable in this spec.
-    // The layout is shared, so every codec's save is checked.
     val spread = IvfIndex.build(emb.repartition(8), "vec_id", "embedding", nlist = 8)
-    layouts.foreach { case (name, save) =>
-      val dir = java.nio.file.Files.createTempDirectory(s"${name}_files").toString
-      save(spread, dir)
-      val cellDirs = new java.io.File(s"$dir/cells").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("cell="))
-      assert(cellDirs.nonEmpty, name)
-      cellDirs.foreach { d =>
-        val parts = d.listFiles().count(_.getName.endsWith(".parquet"))
-        assert(parts == 1, s"$name ${d.getName}: $parts data files, want exactly 1")
-      }
+    val dir = java.nio.file.Files.createTempDirectory("ivf_files").toString
+    IvfIndex.save(spread, dir)
+    val cellDirs = new java.io.File(s"$dir/cells").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("cell="))
+    assert(cellDirs.nonEmpty)
+    cellDirs.foreach { d =>
+      val parts = d.listFiles().count(_.getName.endsWith(".parquet"))
+      assert(parts == 1, s"${d.getName}: $parts data files, want exactly 1")
     }
   }
 

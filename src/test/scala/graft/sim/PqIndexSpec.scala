@@ -61,25 +61,6 @@ class PqIndexSpec extends SparkSpec {
     assert(composed == flat)
   }
 
-  test("persisted IVF∘PQ index partition-prunes, reads only codes, matches in-memory") {
-    val ivf = IvfIndex.build(emb, "vec_id", "embedding", nlist = 8)
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq").toString
-    PqIndex.saveIvfPq(ivf, cb, "vec_id", "embedding", dir)
-    val queries = emb.filter(col("vec_id") < 5)
-    val inMem = PqIndex.searchIvfAdc(ivf, cb, queries,
-      "vec_id", "embedding", k = 3, nprobe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val indexed = PqIndex.searchIndexedIvfAdc(spark, dir, queries,
-      "vec_id", "embedding", k = 3, nprobe = 2)
-    val got = indexed.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(got == inMem)
-    val plan = indexed.queryExecution.executedPlan.toString
-    // probe set pushed as a static partition filter; the scan reads the
-    // m-byte code column, never the float vectors
-    assert(plan.contains("PartitionFilters: [cell"), plan)
-    assert(!plan.contains("embedding:array"), plan)
-  }
-
   test("two-stage re-rank: exact cosines, recall >= plain ADC, shortlist broadcast") {
     val codes = PqIndex.encode(emb, "vec_id", "embedding", cb)
     val queries = emb.filter(col("vec_id") < 8)
