@@ -152,7 +152,7 @@ object Bench {
     // regression tripwire (BASELINE.md): no single query may cost >10s at
     // sf0.1 — the q53 class of plan bug, flagged in the output instead of
     // buried in 80 per-query numbers. The wire is calibrated for the
-    // driver's sf0.1 run; at larger SFs a healthy query can cross it, so
+    // sf0.1 bench run; at larger SFs a healthy query can cross it, so
     // read `slow` there against the per-query times, not as a verdict.
     val slow = results.filter(_._2 > SlowSec).map("\"" + _._1 + "\"")
       .mkString("[", ",", "]")

@@ -3,12 +3,12 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * plus oracle_sql.json, for the DuckDB oracle compare (`tools/compare.py`).
   *
   * `Verify <sfDir> <outDir> [prefixes]` — the optional third argument is
   * a comma-separated list of query-name prefixes (`q113,q114` finds
   * `q113_interval_bin_join`), the fast inner loop when adding one
-  * operator. Without it every query is dumped (the driver's mode). */
+  * operator. Without it every query is dumped (the full correctness gate). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, prefixes) = args match {
