@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.Paths
+import java.nio.file.{Path, Paths}
 import java.util.concurrent.{Callable, ConcurrentHashMap, ExecutionException, Executors}
 import scala.util.control.NonFatal
 import scala.util.{Failure, Success, Try}
@@ -15,10 +15,24 @@ import graft.sources.Tables
   * publish, then GC — so a multi-table publish is consistent and the
   * publish window is as small as possible. Within a phase the tables run
   * concurrently, each step a distributed Spark job. Phase 2 of a
-  * `ViewSwitch` or `TempSwap` table copies the staged parquet files as
+  * `ViewSwitch` or `TempSwap` table places the staged parquet files as
   * they are (the reference's `COPY INTO` loads the file it staged,
   * `CopyTool.java:756-870`), so its only Spark job is F3's read of the
   * staging. Each source table is resolved at most once per run.
+  *
+  * Unlike the reference, which re-copies every table on each trigger, a
+  * `ViewSwitch` or `TempSwap` table whose source files are unchanged since
+  * its published snapshot is not extracted again. The probe step
+  * fingerprints the files the table's DataFrame reads, from the listing
+  * its resolution already made (no Spark job), and compares that with the
+  * `_source_fingerprint` of the snapshot CURRENT names (or of TempSwap's
+  * data dir). On a match the table skips its F1 probe, extract and F3
+  * read: a `ViewSwitch` table's new version is the old snapshot's files,
+  * hard-linked, and a `TempSwap` table keeps its data dir. Every copying
+  * run still publishes a new, newest version of every versioned table. On
+  * any doubt the table copies: no fingerprint stored, a source that is
+  * not files, a non-deterministic plan, a file modified within
+  * [[RacyWindowMs]] of the listing. Live-database targets always reload.
   *
   * Results mirror the reference's exit codes
   * (`CopyTool.java:66-68,95-106`): Copied=0, NoNewData=2, Failed=1.
@@ -77,8 +91,11 @@ object CopyJob {
       /** resume from durable staging after a crash between phases 1 and 2
         * (the reference's staging-triplet recovery, SURVEY §3.1). */
       resumeFromStaging: Boolean = false) {
-    /** Config identity for watermark-state scoping (G3). */
-    def hash: String = Watermark.configHash(this.toString)
+    /** Config identity for watermark-state scoping (G3). The run-mode
+      * flags are not part of it: a `--resume` or `--switch-only` run
+      * reads and writes the state of the job it belongs to. */
+    def hash: String = Watermark.configHash(
+      copy(switchOnly = false, noSwitch = false, resumeFromStaging = false).toString)
   }
 
   sealed trait JobResult { def exitCode: Int }
@@ -205,6 +222,60 @@ object CopyJob {
     ()
   }
 
+  /** Git's racy-timestamp rule: a file whose mtime lies this close to (or
+    * after) the listing may change again without changing its mtime, so
+    * a listing that holds one cannot vouch for the data. */
+  val RacyWindowMs = 2000L
+
+  /** The fingerprint of what a file-target table's extract would write:
+    * a format tag, the table's extract identity, and the sorted path,
+    * length and mtime of every file under every leaf relation of `df`'s
+    * analyzed plan (subqueries included), taken from the listing its
+    * resolution made at or after `listedAfter`. None, so the table
+    * copies, when a leaf is not a file relation, the plan is not
+    * deterministic (`rand()`, `current_timestamp()`), or a file is racy. */
+  private def fingerprint(t: TableSpec, df: DataFrame, listedAfter: Long): Option[String] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LeafNode
+    import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+      PartitioningAwareFileIndex}
+    val nodes = df.queryExecution.analyzed.collectWithSubqueries { case p => p }
+    val listings = nodes.collect {
+      case r: LogicalRelation => Some(r.relation).collect {
+        case fs: HadoopFsRelation => fs.location
+      }.collect { case idx: PartitioningAwareFileIndex => idx.allFiles() }
+      case _: LeafNode => None
+    }
+    val volatile = nodes.exists(_.expressions.exists(e =>
+      !e.deterministic || e.containsPattern(CURRENT_LIKE)))
+    if (volatile || listings.contains(None)) None
+    else {
+      val files = listings.flatten.flatten
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).distinct.sorted
+      if (files.exists(_._3 > listedAfter - RacyWindowMs)) None
+      else Some((Seq("graft source fingerprint 1",
+        s"from ${t.from.name}", s"columns ${t.from.columns.fold("*")(_.mkString(","))}",
+        s"query ${t.from.query.getOrElse("")}",
+        s"autoTrim ${t.autoTrim}", s"allowEmpty ${t.allowEmpty}") ++
+        files.map { case (path, len, mtime) => s"$path\t$len\t$mtime" }).mkString("", "\n", "\n"))
+    }
+  }
+
+  /** The published snapshot a file-target table's fingerprint is compared
+    * with: the version CURRENT names, or a TempSwap table's data dir. */
+  private def published(cfg: JobConfig, t: TableSpec): Option[Path] = t.publishMode match {
+    case ViewSwitch => Publish.currentVersion(cfg.targetRoot, t.to)
+      .map(v => Paths.get(Publish.snapshotDir(cfg.targetRoot, t.to, v)))
+    case TempSwap => Some(Publish.swapDir(cfg.targetRoot, t.to))
+    case _ => None
+  }
+
+  /** One table after the probe step: its source, the fingerprint of that
+    * source, the published snapshot it reuses, and whether F1 found it
+    * empty. */
+  private final case class Probed(df: DataFrame, fingerprint: Option[String],
+      reuse: Option[Path], empty: Boolean)
+
   private def stagingDir(cfg: JobConfig, t: TableSpec): String =
     Paths.get(cfg.stagingRoot, s"table_${t.from.name}_${t.to}").toString
 
@@ -213,6 +284,8 @@ object CopyJob {
 
   def run(spark: SparkSession, cfg: JobConfig): JobResult = {
     try {
+      // every source this run resolves is listed after this instant
+      val listedAfter = System.currentTimeMillis()
       // ---- trigger check (G1-G4): skip everything when certain no new data
       val polled: Option[((String, DataFrame), Option[Watermark.Value])] = cfg.trigger.map { tr =>
         val df = Tables(spark, cfg.sourceDir, tr.table)
@@ -225,59 +298,81 @@ object CopyJob {
       val version = Publish.newVersion()
 
       // shared phase-2 body (normal and resume paths must never diverge):
-      // F3-validated staging, B4 zero-row short-circuit, then load per
-      // publish mode: a copy of the staged files, or a write of the data
-      // validate already read
-      def loadOne(t: TableSpec, s: Staging.Staged): Unit =
-        if (s.manifest.count > 0 || t.allowEmpty) {             // B4 short-circuit
+      // a reused snapshot (Left) or F3-validated staging (Right), B4
+      // zero-row short-circuit, then load per publish mode: the snapshot's
+      // or staging's files, or a write of the data validate already read
+      def loadOne(t: TableSpec, in: Either[Path, Staging.Staged]): Unit = in match {
+        case Left(snapshot) =>
+          if (t.publishMode == ViewSwitch)                      // TempSwap: data/ is it
+            Publish.writeSnapshot(snapshot, cfg.targetRoot, t.to, version)
+        case Right(s) if s.manifest.count > 0 || t.allowEmpty => // B4 short-circuit
           t.publishMode match {
             case ViewSwitch => Publish.writeSnapshot(s.files, cfg.targetRoot, t.to, version)
             case TempSwap   => Publish.tempSwapPublish(s.files, cfg.targetRoot, t.to)
             case j: JdbcLoad => jdbcLoad(s.data, j, t.to)
             case ml: MonetLoad => monetLoad(s.data, ml, t.to, s.manifest.count)
           }
-        }
+        case Right(_) => ()
+      }
+      def staged(dir: String): Either[Path, Staging.Staged] =
+        Staging.reusedSnapshot(dir).toLeft(Staging.validate(spark, dir))   // F3
 
       if (cfg.resumeFromStaging) {
         // crash-between-phases resumption (§3.1): phase 1 already ran and
         // its durable staging survived — validate it (F3), once per
-        // table, and continue from phase 2 without re-extracting. The F1
+        // table, and continue from phase 2 without re-extracting; a table
+        // phase 1 decided to reuse places the snapshot it recorded. The F1
         // guard's resume equivalent runs on the MANIFESTS (the sources
         // may have changed since the crash — staging is the truth being
         // resumed): without it, a zero-row staging for an allowEmpty=false
         // table would skip its snapshot while phase 3 still repoints
         // CURRENT at the never-written version dir, wedging every reader.
-        val staged = perTable(spark, "probe", cfg.tables.map(t => t -> stagingDir(cfg, t))) {
-          (_, dir) => Staging.validate(spark, dir)
+        val ins = perTable(spark, "probe", cfg.tables.map(t => t -> stagingDir(cfg, t))) {
+          (_, dir) => staged(dir)
         }
-        val empties = cfg.tables.zip(staged).collect {
-          case (t, s) if !t.allowEmpty && s.manifest.count == 0 => t.id
+        val empties = cfg.tables.zip(ins).collect {
+          case (t, Right(s)) if !t.allowEmpty && s.manifest.count == 0 => t.id
         }
         if (empties.nonEmpty)
           return Failed(s"empty staged tables: ${empties.mkString(", ")}")
-        perTable(spark, "load", cfg.tables.zip(staged))(loadOne)
+        perTable(spark, "load", cfg.tables.zip(ins))(loadOne)
       } else if (!cfg.switchOnly) {
         // ---- F1 empty-source guard: ALL tables checked before ANY copy.
         // Each source table is resolved once per run, the trigger's by its
         // poll, so its extract reads the file listing whose max becomes the
-        // stored watermark. The extract reuses the probe's DataFrame.
+        // stored watermark. The extract reuses the probe's DataFrame. A
+        // table that reuses its published snapshot passed F1 when that
+        // snapshot was made, from the same files.
         val sources = new Sources(spark, cfg.sourceDir, polled.map(_._1).toMap)
         val probed = perTable(spark, "probe", cfg.tables.map(t => t -> t.from)) { (t, from) =>
           val df = sources(from)
-          (df, !t.allowEmpty && df.isEmpty)   // limit-1 probe, not count
+          val fp = t.publishMode match {
+            case ViewSwitch | TempSwap => fingerprint(t, df, listedAfter)
+            case _ => None                                  // a live database always reloads
+          }
+          val reuse = fp.flatMap(f => published(cfg, t).filter(Publish.readFingerprint(_).contains(f)))
+          Probed(df, fp, reuse, reuse.isEmpty && !t.allowEmpty && df.isEmpty) // limit-1 probe
         }
-        val empties = cfg.tables.zip(probed).collect { case (t, (_, true)) => t.id }
+        val empties = cfg.tables.zip(probed).collect { case (t, p) if p.empty => t.id }
         if (empties.nonEmpty)
           return Failed(s"empty source tables: ${empties.mkString(", ")}")
 
-        // ---- PHASE 1: extract ALL tables to durable staging
-        perTable(spark, "extract", cfg.tables.zip(probed.map(_._1))) { (t, df) =>
-          Staging.stage(df, stagingDir(cfg, t), t.autoTrim)
+        // ---- PHASE 1: extract ALL tables to durable staging, or record
+        // the reuse there; a staged table's fingerprint travels with its
+        // files into the snapshot
+        perTable(spark, "extract", cfg.tables.zip(probed)) { (t, p) =>
+          val dir = stagingDir(cfg, t)
+          p.reuse match {
+            case Some(snapshot) => Staging.recordReuse(dir, snapshot)
+            case None =>
+              Staging.stage(p.df, dir, t.autoTrim)
+              p.fingerprint.foreach(Publish.writeFingerprint(Staging.files(dir), _))
+          }
         }
 
         // ---- PHASE 2: load ALL tables (staging → snapshot or database)
         perTable(spark, "load", cfg.tables.map(t => t -> stagingDir(cfg, t))) { (t, dir) =>
-          loadOne(t, Staging.validate(spark, dir))                  // F3
+          loadOne(t, staged(dir))
         }
       }
 

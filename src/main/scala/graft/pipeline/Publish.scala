@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import java.io.IOException
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
@@ -24,7 +25,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * }}}
   * A snapshot, like the reference's `COPY INTO` of the CSV it staged
   * (`CopyTool.java:756-870`), is the staged files as they are: phase 2
-  * copies them and runs no Spark job.
+  * places them and runs no Spark job. A snapshot may hold a
+  * `_source_fingerprint` of the source files it was copied from; a later
+  * run whose sources have the same fingerprint places the files of that
+  * snapshot instead of extracting again.
   */
 object Publish {
 
@@ -61,23 +65,45 @@ object Publish {
     tableDir(root, table).resolve(s"v=$version").toString
   private def currentPtr(root: String, table: String): Path =
     tableDir(root, table).resolve("CURRENT")
+  /** The stable data dir of a [[tempSwapPublish]] table. */
+  def swapDir(root: String, table: String): Path = tableDir(root, table).resolve("data")
 
-  /** Load a snapshot version (phase 2): a copy of the staged parquet
-    * files `staged` (part files, their `.crc` files, `_SUCCESS`), with no
-    * decode or re-encode. Immutable once written. */
+  /** Load a snapshot version (phase 2): the parquet files of `staged` (part
+    * files, their `.crc` files, `_SUCCESS`, a `_source_fingerprint`), with
+    * no decode or re-encode. `staged` is a staging dir or, for a reused
+    * source, an earlier snapshot. Immutable once written. */
   def writeSnapshot(staged: Path, root: String, table: String, version: String): Unit =
     copyFiles(staged, Paths.get(snapshotDir(root, table, version)))
 
-  /** Replace `to` with a copy of the tree under `from`. A copy, not a move
-    * or a hard link: the staging stays readable for `--resume` until the
-    * job succeeds, and a copy works across file systems. */
+  /** Replace `to` with the tree under `from`, each file hard-linked, or
+    * copied where the file system cannot link it. Never a move: the
+    * staging stays readable for `--resume` until the job succeeds. Both
+    * trees are immutable once written (a parquet write replaces files,
+    * it never rewrites one), so sharing their files is safe. */
   private def copyFiles(from: Path, to: Path): Unit = {
     graft.FsUtil.deleteRecursively(to)
     Files.createDirectories(to.getParent)
     val walk = Files.walk(from)   // pre-order: each dir before its files
-    try walk.iterator.asScala.foreach(p => Files.copy(p, to.resolve(from.relativize(p))))
-    finally walk.close()
+    try walk.iterator.asScala.foreach { p =>
+      val q = to.resolve(from.relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectory(q)
+      else try Files.createLink(q, p) catch {
+        case _: IOException | _: UnsupportedOperationException => Files.copy(p, q)
+      }
+    } finally walk.close()
   }
+
+  /** The name of a snapshot's source fingerprint; Spark's reader skips it,
+    * as it skips every file whose name starts with `_`. */
+  val FingerprintFile = "_source_fingerprint"
+
+  def readFingerprint(snapshot: Path): Option[String] = {
+    val p = snapshot.resolve(FingerprintFile)
+    if (Files.isRegularFile(p)) Some(Files.readString(p)) else None
+  }
+
+  def writeFingerprint(snapshot: Path, fingerprint: String): Unit =
+    Files.writeString(snapshot.resolve(FingerprintFile), fingerprint)
 
   /** E4 newest-version discovery: list + lexicographic max (version string
     * ordering == timestamp ordering for this format). Lazy listing — only
@@ -117,7 +143,7 @@ object Publish {
 
   def currentVersion(root: String, table: String): Option[String] = {
     val p = currentPtr(root, table)
-    if (Files.exists(p)) Some(Files.readString(p).trim) else None
+    if (Files.isRegularFile(p)) Some(Files.readString(p).trim) else None
   }
 
   /** Read the published snapshot (what a view resolves to). */
@@ -138,15 +164,14 @@ object Publish {
     drop.sorted
   }
 
-  /** E2 temp-swap publish (the non-versioned mode): copy the staged
-    * parquet files `staged` into a cleared `tmp_data` dir, then swap it
+  /** E2 temp-swap publish (the non-versioned mode): place the staged
+    * parquet files `staged` in a cleared `tmp_data` dir, then swap it
     * into the stable data dir. Same drop-then-swap window as the
     * reference (`CopyTool.java:1107-1124`) — documented, and the
     * versioned+pointer mode above is the preferred atomic path. */
   def tempSwapPublish(staged: Path, root: String, table: String): Unit = {
-    val dir = tableDir(root, table)
-    val tmp = dir.resolve("tmp_data")
-    val fin = dir.resolve("data")
+    val fin = swapDir(root, table)
+    val tmp = fin.resolveSibling("tmp_data")
     copyFiles(staged, tmp)
     graft.FsUtil.deleteRecursively(fin)
     Files.move(tmp, fin, StandardCopyOption.ATOMIC_MOVE)

@@ -12,8 +12,10 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   * parquet (schema travels in the footer) plus a tiny JSON manifest with
   * the row count and schema snapshot — the durable phase-1→phase-2
   * hand-off survives a crash between phases (§3.1). A `ViewSwitch` or
-  * `TempSwap` load publishes a copy of the staged parquet files; the
-  * staging stays intact until the job succeeds.
+  * `TempSwap` load publishes the staged parquet files as they are; the
+  * staging stays intact until the job succeeds. A table whose published
+  * snapshot is reused stages no data: its staging dir records which
+  * snapshot it reuses, so a resumed load replays that decision.
   */
 object Staging {
 
@@ -31,7 +33,10 @@ object Staging {
     }
 
   private def manifestPath(dir: String): Path = Paths.get(dir, "_manifest.json")
+  private def reusePath(dir: String): Path = Paths.get(dir, "_reused_snapshot")
   private def dataPath(dir: String): String = s"$dir/data"
+  /** The dir of a staging's parquet files. */
+  def files(dir: String): Path = Paths.get(dataPath(dir))
 
   /** A validated staging dir: its manifest, its data (read once, the
     * input of a JDBC or MonetDB load) and the dir of its parquet files
@@ -44,6 +49,7 @@ object Staging {
     * itself, so staging is one Spark job with no read-back. Returns the
     * staged row count. */
   def stage(df: DataFrame, dir: String, autoTrim: Boolean = true): Long = {
+    Files.deleteIfExists(reusePath(dir))   // first: a stale reuse must never win
     val out = if (autoTrim) applyAutoTrim(df) else df
     val rows = Observation()
     out.observe(rows, count(lit(1)).as("n")).write.mode("overwrite").parquet(dataPath(dir))
@@ -82,7 +88,23 @@ object Staging {
       require(shape(actual.schema) == shape(m.schema),
         s"staged schema drift in '$dir': ${actual.schema.simpleString} vs manifest ${m.schema.simpleString}")
     }
-    Staged(m, actual, Paths.get(dataPath(dir)))
+    Staged(m, actual, files(dir))
+  }
+
+  /** Record, in place of staged data, that the table reuses the published
+    * snapshot `snapshot`. The manifest is deleted first, so a crash in
+    * between leaves a staging that fails F3 rather than one that resumes
+    * stale data. */
+  def recordReuse(dir: String, snapshot: Path): Unit = {
+    Files.deleteIfExists(manifestPath(dir))
+    Files.createDirectories(Paths.get(dir))
+    Files.writeString(reusePath(dir), snapshot.toString)
+  }
+
+  /** The snapshot a [[recordReuse]] recorded, if any. */
+  def reusedSnapshot(dir: String): Option[Path] = {
+    val p = reusePath(dir)
+    if (Files.isRegularFile(p)) Some(Paths.get(Files.readString(p))) else None
   }
 
   /** Read the staged dataset back (load-phase input). */

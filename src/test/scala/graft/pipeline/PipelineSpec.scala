@@ -350,6 +350,12 @@ class CopyJobSpec extends SparkSpec {
   private def shape(s: org.apache.spark.sql.types.StructType) =
     s.fields.map(f => (f.name, f.dataType)).toSeq
 
+  /** Delete the source fingerprint of `to`'s published snapshot, so the
+    * next run extracts the table again instead of reusing the snapshot. */
+  private def forceCopy(cfg: JobConfig, to: String): Unit =
+    Files.delete(Paths.get(Publish.snapshotDir(cfg.targetRoot, to,
+      Publish.currentVersion(cfg.targetRoot, to).get), Publish.FingerprintFile))
+
   /** Move the stored watermark a day back, so the next run's trigger
     * copies. Returns the state file. */
   private def rewindWatermark(cfg: JobConfig): Path = {
@@ -441,6 +447,7 @@ class CopyJobSpec extends SparkSpec {
     val versions0 = snaps.map(Publish.listVersions(cfg.targetRoot, _).sorted)
     val current0 = snaps.map(Publish.currentVersion(cfg.targetRoot, _))
 
+    forceCopy(cfg, "s_snap")   // an unchanged source would reuse, not extract
     blockStaging(cfg, "supplier", "s_snap")
     CopyJob.run(spark, cfg) match {
       case Failed(reason, _) => assert(reason.startsWith("extract supplier: "), reason)
@@ -501,12 +508,15 @@ class CopyJobSpec extends SparkSpec {
   test("a publish that fails after the load leaves every staging whole; --resume completes it") {
     val tables = Seq(
       TableSpec("nation", FromSpec("nation"), "n_fault"),
-      TableSpec("region", FromSpec("region"), "r_fault"))
+      TableSpec("region", FromSpec("region"), "r_fault"),
+      TableSpec("supplier", FromSpec("supplier"), "s_fault"))
     val cfg = freshCfg(tables, trigger = Some(TriggerSpec("events", "ts")))
     assert(CopyJob.run(spark, cfg) == Copied)
     val statePath = rewindWatermark(cfg)
     val state0 = Files.readString(statePath)
     val current0 = tables.map(t => Publish.currentVersion(cfg.targetRoot, t.to))
+    // nation and region extract again; supplier reuses its snapshot
+    Seq("n_fault", "r_fault").foreach(forceCopy(cfg, _))
     // a non-empty directory where region's CURRENT goes: its ATOMIC_MOVE fails
     val ptr = Paths.get(cfg.targetRoot, "r_fault", "CURRENT")
     Files.delete(ptr)
@@ -514,13 +524,16 @@ class CopyJobSpec extends SparkSpec {
 
     assert(CopyJob.run(spark, cfg).isInstanceOf[Failed])
     assert(Files.readString(statePath) == state0, "the watermark moved on a failed run")
-    tables.zip(Seq(25L, 5L)).foreach { case (t, n) =>
+    tables.take(2).zip(Seq(25L, 5L)).foreach { case (t, n) =>
       val staged = Staging.validate(spark, stagingDir(cfg, t.from.name, t.to).toString)
       assert(staged.manifest.count == n && staged.data.count() == n, s"${t.id} staging")
     }
+    assert(Staging.reusedSnapshot(stagingDir(cfg, "supplier", "s_fault").toString)
+      .contains(Paths.get(Publish.snapshotDir(cfg.targetRoot, "s_fault", current0(2).get))))
 
     graft.FsUtil.deleteRecursively(ptr)
     assert(CopyJob.run(spark, cfg.copy(resumeFromStaging = true)) == Copied)
+    assert(Files.readString(statePath) != state0, "the resume did not store the watermark")
     val fresh = freshCfg(tables)
     assert(CopyJob.run(spark, fresh) == Copied)
     tables.zip(current0).foreach { case (t, before) =>
@@ -529,6 +542,19 @@ class CopyJobSpec extends SparkSpec {
       assert(rows(Publish.readCurrent(spark, cfg.targetRoot, t.to)) ==
         rows(Publish.readCurrent(spark, fresh.targetRoot, t.to)), t.id)
     }
+  }
+
+  test("a --resume run keeps the job's watermark state: the next unchanged run is NoNewData") {
+    val cfg = freshCfg(Seq(TableSpec("region", FromSpec("region"), "r_resume_state")),
+      trigger = Some(TriggerSpec("events", "ts")))
+    // a non-empty directory where CURRENT goes: the first run fails to publish
+    val ptr = Paths.get(cfg.targetRoot, "r_resume_state", "CURRENT")
+    Files.createDirectories(ptr.resolve("blocker"))
+    assert(CopyJob.run(spark, cfg).isInstanceOf[Failed])
+    graft.FsUtil.deleteRecursively(ptr)
+    assert(CopyJob.run(spark, cfg.copy(resumeFromStaging = true)) == Copied)
+    assert(CopyJob.run(spark, cfg) == NoNewData)
+    assert(Files.list(Paths.get(cfg.stateDir)).count() == 1)
   }
 
   test("a stale tmp_data never leaks into a TempSwap publish (E2)") {
