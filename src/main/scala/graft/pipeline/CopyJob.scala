@@ -302,9 +302,13 @@ object CopyJob {
       // zero-row short-circuit, then load per publish mode: the snapshot's
       // or staging's files, or a write of the data validate already read
       def loadOne(t: TableSpec, in: Either[Path, Staging.Staged]): Unit = in match {
-        case Left(snapshot) =>
-          if (t.publishMode == ViewSwitch)                      // TempSwap: data/ is it
-            Publish.writeSnapshot(snapshot, cfg.targetRoot, t.to, version)
+        case Left(snapshot) => t.publishMode match {
+          case ViewSwitch => Publish.writeSnapshot(snapshot, cfg.targetRoot, t.to, version)
+          case TempSwap   => ()                                 // data/ is the snapshot
+          case live => throw new IllegalStateException(
+            s"staging records a reuse of $snapshot, but a ${live.getClass.getSimpleName} " +
+              "target always reloads")
+        }
         case Right(s) if s.manifest.count > 0 || t.allowEmpty => // B4 short-circuit
           t.publishMode match {
             case ViewSwitch => Publish.writeSnapshot(s.files, cfg.targetRoot, t.to, version)

@@ -200,6 +200,17 @@ class SnapshotReuseSpec extends SparkSpec {
     assert(jobs(sub, "a3-5") > 0)
   }
 
+  test("--resume of a reuse recorded for a table that is now a live-database target fails") {
+    val cfg = cfgOver(sources(), TableSpec("region", FromSpec("region"), "region_now_live",
+      publishMode = JdbcLoad("jdbc:derby:memory:reuse_resume;create=true")))
+    Staging.recordReuse(Paths.get(cfg.stagingRoot, "table_region_region_now_live").toString,
+      Paths.get(cfg.targetRoot, "region_now_live", "v=2001_01_01_00_00_00"))
+    CopyJob.run(spark, cfg.copy(resumeFromStaging = true)) match {
+      case Failed(reason, _) => assert(reason.startsWith("load region: staging records a reuse"), reason)
+      case other => fail(s"expected Failed, got $other")
+    }
+  }
+
   test("a live-database target reloads on every copying run") {
     val url = "jdbc:derby:memory:reusedb;create=true"
     def derby[T](f: java.sql.Statement => T): T = {
