@@ -102,8 +102,9 @@ object Publish {
     if (Files.isRegularFile(p)) Some(Files.readString(p)) else None
   }
 
-  def writeFingerprint(snapshot: Path, fingerprint: String): Unit =
-    Files.writeString(snapshot.resolve(FingerprintFile), fingerprint)
+  /** Write `fingerprint` into `dir`, a staging's files or a snapshot. */
+  def writeFingerprint(dir: Path, fingerprint: String): Unit =
+    Files.writeString(dir.resolve(FingerprintFile), fingerprint)
 
   /** E4 newest-version discovery: list + lexicographic max (version string
     * ordering == timestamp ordering for this format). Lazy listing — only
