@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.sources.Tables
+import graft.sources.{ParquetMeta, Tables}
 import graft.text.TextAnalysis.{tokens, distinctWordShingles, fingerprint}
 
 /** Deduplication operators for training-data pipelines.
@@ -142,7 +142,7 @@ object Dedup {
       .write.mode("overwrite").parquet(s"$path/sigs")
     // band from the WRITTEN signatures: one signature computation total,
     // and the two files are guaranteed consistent
-    val persisted = spark.read.parquet(s"$path/sigs")
+    val persisted = ParquetMeta.read(spark, s"$path/sigs")
     graft.sim.IvfIndex.writeByKey(
       bandKeys(persisted, idCol, bands, rows)
         .select(col(idCol), col("band_idx"), col("band_hash")),
@@ -166,12 +166,12 @@ object Dedup {
   private def prepareProbe(spark: org.apache.spark.sql.SparkSession,
       path: String, newDocs: DataFrame, textCol: String,
       idCol: String): ProbePrep = {
-    val meta = spark.read.parquet(s"$path/meta").head()
+    val meta = ParquetMeta.read(spark, s"$path/meta").head()
     val (numPerm, bands, rows) = (meta.getAs[Int]("num_perm"),
       meta.getAs[Int]("bands"), meta.getAs[Int]("rows"))
     requireBandGeometry(numPerm, bands, rows)
-    val refBands = spark.read.parquet(s"$path/bands")
-    val refSigs = spark.read.parquet(s"$path/sigs")
+    val refBands = ParquetMeta.read(spark, s"$path/bands")
+    val refSigs = ParquetMeta.read(spark, s"$path/sigs")
     // small by contract (one batch); materialize once — bands and the
     // scoring join would otherwise re-run the shingle pipeline. The
     // batch row count rides the SAME materialization job as an observe

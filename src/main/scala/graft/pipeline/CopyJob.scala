@@ -14,11 +14,15 @@ import graft.sources.Tables
   * (`CopyTool.java:202-299`): ALL tables extract, then ALL load, then ALL
   * publish, then GC — so a multi-table publish is consistent and the
   * publish window is as small as possible. Within a phase the tables run
-  * concurrently, each step a distributed Spark job. Phase 2 of a
+  * concurrently. Parquet metadata is read on the driver
+  * ([[graft.sources.ParquetMeta]]): resolving a source, the trigger's
+  * poll when footer statistics can answer it, and F3's check of a
+  * staging run no Spark job, so a NoNewData run runs none. Phase 2 of a
   * `ViewSwitch` or `TempSwap` table places the staged parquet files as
   * they are (the reference's `COPY INTO` loads the file it staged,
-  * `CopyTool.java:756-870`), so its only Spark job is F3's read of the
-  * staging. Each source table is resolved at most once per run.
+  * `CopyTool.java:756-870`), so it runs no Spark job either. Each source
+  * table is resolved, and so listed, at most once per run: the trigger's
+  * poll, the extract and the fingerprint read the same listing.
   *
   * Unlike the reference, which re-copies every table on each trigger, a
   * `ViewSwitch` or `TempSwap` table whose source files are unchanged since
@@ -27,7 +31,7 @@ import graft.sources.Tables
   * its resolution already made (no Spark job), and compares that with the
   * `_source_fingerprint` of the snapshot CURRENT names (or of TempSwap's
   * data dir). On a match the table skips its F1 probe, extract and F3
-  * read: a `ViewSwitch` table's new version is the old snapshot's files,
+  * check: a `ViewSwitch` table's new version is the old snapshot's files,
   * hard-linked, and a `TempSwap` table keeps its data dir. Every copying
   * run still publishes a new, newest version of every versioned table. On
   * any doubt the table copies: no fingerprint stored, a source that is
@@ -110,8 +114,10 @@ object CopyJob {
     extends Exception(s"$phase $id: ${cause.getMessage}", cause)
 
   /** The source tables of one copying run, each resolved at most once and
-    * only when first asked for; safe to share between the probe step's
-    * threads. `seed` holds tables already resolved (the trigger's). */
+    * only when first asked for: listed once, its schema read from a footer
+    * on the driver, no Spark job. Safe to share between the probe step's
+    * threads. `seed` holds tables already resolved (the trigger's, whose
+    * poll read that same listing). */
   private final class Sources(spark: SparkSession, dir: String, seed: Map[String, DataFrame]) {
     private final class Once(resolve: => DataFrame) { lazy val df: DataFrame = resolve }
     private val memo = new ConcurrentHashMap[String, Once]()

@@ -6,6 +6,7 @@ import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.ParquetMeta
 
 /** Versioned publish / view switch / retention GC (SURVEY.md §2.E).
   *
@@ -151,7 +152,7 @@ object Publish {
   def readCurrent(spark: SparkSession, root: String, table: String): DataFrame = {
     val v = currentVersion(root, table).getOrElse(
       throw new IllegalStateException(s"table '$table' has no published version"))
-    spark.read.parquet(snapshotDir(root, table, v))
+    ParquetMeta.read(spark, snapshotDir(root, table, v))
   }
 
   /** E5 retention GC: keep the newest `keep` versions (reference default:

@@ -1,7 +1,9 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions.{col, count, lit, trim}
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 
@@ -73,22 +75,29 @@ object Staging {
     }
   }
 
-  /** F3 staged-files validation: manifest present, data readable, schema
-    * matches the snapshot. Throws with a precise reason on failure.
-    * Returns the data it checked, so the load reads the staging once, and
-    * the files it checked, so a snapshot copies exactly those. */
+  /** F3 staged-files validation, as the reference checks its staged file
+    * against its count file before a load: manifest present, and every
+    * staged file's footer, read on the driver, parses, has the manifest's
+    * schema (names and types; parquet read-back is always nullable, so
+    * nullability is not drift), and the footers' row counts sum to the
+    * manifest's count. Throws with a precise reason on failure. Returns
+    * the data it checked, so the load reads the staging once, and the
+    * files it checked, so a snapshot copies exactly those. No Spark job. */
   def validate(spark: SparkSession, dir: String): Staged = {
     val m = readManifest(dir).getOrElse(
       throw new IllegalStateException(s"staging dir '$dir' has no manifest"))
-    val actual = read(spark, dir)
-    if (m.count > 0) {
-      // compare name+type only: parquet read-back is always nullable, so
-      // nullability is not schema drift
-      def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
-      require(shape(actual.schema) == shape(m.schema),
-        s"staged schema drift in '$dir': ${actual.schema.simpleString} vs manifest ${m.schema.simpleString}")
+    val data = read(spark, dir)
+    val footers = graft.sources.ParquetMeta.footers(data)
+    footers.foreach { case (f, footer) =>
+      val s = graft.sources.ParquetMeta.schema(spark, f, footer)
+      require(DataTypeUtils.equalsIgnoreNullability(s, m.schema),
+        s"staged schema drift in '$dir': ${f.getPath.getName} has ${s.simpleString}, " +
+          s"manifest ${m.schema.simpleString}")
     }
-    Staged(m, actual, files(dir))
+    val rows = footers.map(_._2.getBlocks.asScala.map(_.getRowCount).sum).sum
+    require(rows == m.count,
+      s"staged row count mismatch in '$dir': ${footers.size} files hold $rows rows, manifest ${m.count}")
+    Staged(m, data, files(dir))
   }
 
   /** Record, in place of staged data, that the table reuses the published
@@ -109,7 +118,7 @@ object Staging {
 
   /** Read the staged dataset back (load-phase input). */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dataPath(dir))
+    graft.sources.ParquetMeta.read(spark, dataPath(dir))
 
   /** E7 staging cleanup. */
   def cleanup(dir: String): Unit = graft.FsUtil.deleteRecursively(Paths.get(dir))

@@ -4,6 +4,9 @@ import java.nio.file.{Files, Path}
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, max}
+import org.apache.spark.sql.graft.GraftBridge
+import org.apache.spark.sql.types._
+import graft.sources.ParquetMeta
 
 /** Incremental-load trigger: watermark poll + conservative new-data
   * decision + state persistence (SURVEY.md §2.G).
@@ -34,19 +37,35 @@ object Watermark {
 
   final case class State(value: Value, configHash: String)
 
-  /** Poll the watermark: distributed max over the trigger column (A6).
-    * Returns None when the source has no rows (→ conservative copy). */
+  /** The Spark types whose max [[poll]] turns into a [[Value]]. */
+  private val Supported: Set[DataType] =
+    Set(LongType, IntegerType, ShortType, DateType, TimestampType, TimestampNTZType)
+
+  /** Poll the watermark: the max of the trigger column (A6). When the
+    * source is parquet files the footers can answer for
+    * ([[graft.sources.ParquetMeta.max]]), the max is their row-group
+    * statistics' over the listing `df`'s resolution made, read on the
+    * driver; otherwise it is an aggregate over the column, as the
+    * reference's `SELECT MAX(col)`. The column's type is checked first, so
+    * an unsupported one fails before any I/O. Returns None when the source
+    * has no rows (→ conservative copy). */
   def poll(df: DataFrame, column: String): Option[Value] = {
-    val row = df.agg(max(col(column)).as("w")).head()
-    if (row.isNullAt(0)) None
-    else row.get(0) match {
-      case l: Long               => Some(BigintV(l))
-      case i: Int                => Some(BigintV(i.toLong)) // INTEGER → BIGINT
-      case s: Short              => Some(BigintV(s.toLong))
-      case d: java.sql.Date      => Some(DateV(d))
-      case t: Timestamp          => Some(TimestampV(t))
-      case t: java.time.LocalDateTime => Some(TimestampV(Timestamp.valueOf(t)))
-      case d: java.time.LocalDate => Some(DateV(java.sql.Date.valueOf(d)))
+    val dt = df.select(col(column)).schema.head.dataType
+    if (!Supported(dt)) {
+      throw new IllegalArgumentException(s"Unsupported watermark type " +
+        s"${GraftBridge.externalClass(dt).getName} for column '$column'")
+    }
+    ParquetMeta.max(df, column).getOrElse {
+      val row = df.agg(max(col(column)).as("w")).head()
+      if (row.isNullAt(0)) None else Some(row.get(0))
+    }.map {
+      case l: Long               => BigintV(l)
+      case i: Int                => BigintV(i.toLong) // INTEGER → BIGINT
+      case s: Short              => BigintV(s.toLong)
+      case d: java.sql.Date      => DateV(d)
+      case t: Timestamp          => TimestampV(t)
+      case t: java.time.LocalDateTime => TimestampV(Timestamp.valueOf(t))
+      case d: java.time.LocalDate => DateV(java.sql.Date.valueOf(d))
       case other =>
         throw new IllegalArgumentException(
           s"Unsupported watermark type ${other.getClass.getName} for column '$column'")

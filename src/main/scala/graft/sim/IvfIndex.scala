@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorFunctions.vec_dot
+import graft.sources.ParquetMeta
 
 /** IVF (inverted-file) approximate nearest neighbor — the scale path for
   * similarity search, complementing the hyperplane-LSH variant.
@@ -231,8 +232,8 @@ object IvfIndex {
   }
 
   def load(spark: SparkSession, path: String): Model = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-    Model(spark.read.parquet(s"$path/cells"), centroids, centroids.count().toInt)
+    val centroids = ParquetMeta.read(spark, s"$path/centroids")
+    Model(ParquetMeta.read(spark, s"$path/cells"), centroids, centroids.count().toInt)
   }
 
   /** Incremental maintenance: assign NEW raw vectors to their nearest
@@ -247,7 +248,7 @@ object IvfIndex {
     * trade; retrain with [[build]] when recall decays. */
   def append(spark: SparkSession, path: String, newVectors: DataFrame,
       idCol: String, vecCol: String): Unit = {
-    val centroids = centroidMatrix(spark.read.parquet(s"$path/centroids"))
+    val centroids = centroidMatrix(ParquetMeta.read(spark, s"$path/centroids"))
     val dim = centroids.head.length
     val checked = newVectors.filter(col(vecCol).isNotNull)
       .withColumn(vecCol, when(size(col(vecCol)) === dim, col(vecCol))
@@ -278,8 +279,8 @@ object IvfIndex {
     * empty). Sums are exact (HUGEINT-class decimals — n² overflows a
     * long past ~3e9 rows per cell), divisions double. */
   def occupancyStats(spark: SparkSession, path: String): DataFrame = {
-    val nlist = spark.read.parquet(s"$path/centroids").count()
-    val perCell = spark.read.parquet(s"$path/cells")
+    val nlist = ParquetMeta.read(spark, s"$path/centroids").count()
+    val perCell = ParquetMeta.read(spark, s"$path/cells")
       .groupBy("cell").agg(count(lit(1)).as("n"))
     perCell.agg(
         lit(nlist).cast("int").as("nlist"),
@@ -311,13 +312,13 @@ object IvfIndex {
     * two-consumer plan would carry. */
   def searchIndexed(spark: SparkSession, path: String, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
-    val probesPlan = probesFor(spark.read.parquet(s"$path/centroids"),
+    val probesPlan = probesFor(ParquetMeta.read(spark, s"$path/centroids"),
       queries, idCol, vecCol, nprobe)
     val probeRows = probesPlan.collect()
     val probedCells = probeRows.map(_.getAs[Int]("cell")).distinct.toSeq
     val probes = spark.createDataFrame(
       java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
-    val cells = spark.read.parquet(s"$path/cells")
+    val cells = ParquetMeta.read(spark, s"$path/cells")
       .filter(col("cell").isin(probedCells.map(Int.box): _*))
       .withColumnRenamed(idCol, "neighbor_id")
     topKInProbedCells(cells, probes, vecCol, k)

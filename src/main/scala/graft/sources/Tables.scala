@@ -23,11 +23,12 @@ object Tables {
     * a microsecond timestamp) or, in newer generator versions, as a
     * native TIMESTAMP(MICROS). Both normalize to TIMESTAMP_NTZ here
     * (session TZ is pinned UTC, so wall-clock is preserved and matches
-    * DuckDB's naive-timestamp view of the same file).
+    * DuckDB's naive-timestamp view of the same file). The path resolves
+    * through [[ParquetMeta.read]], with no Spark job.
     */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = ParquetMeta.read(spark, s"$dir/$name.parquet")
     if (name == "events") {
       val normalized = df.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import graft.sources.ParquetMeta
 
 /** Structured-Streaming surface (SURVEY.md §2.J).
   *
@@ -31,7 +32,7 @@ object EventsStream {
     * state replacing the `_lastrun.txt` file. */
   def incrementalCopy(spark: SparkSession, sourceDir: String, targetDir: String,
       checkpointDir: String): Unit = {
-    val schema = spark.read.parquet(sourceDir).schema
+    val schema = ParquetMeta.read(spark, sourceDir).schema
     val q = spark.readStream.schema(schema).parquet(sourceDir)
       .writeStream
       .format("parquet")
@@ -980,7 +981,7 @@ object EventsStream {
     // batch serves both families and the dispatch below never
     // re-fingerprints the standing corpus
     val stored = if (exists(fpsPath)) {
-      val s = spark.read.parquet(fpsPath)
+      val s = ParquetMeta.read(spark, fpsPath)
       require(s.columns.contains("sh_hi"),
         s"legacy 60-bit fps state at $fpsPath (no sh_hi column) — the " +
           "wide-capable fold stores both fingerprint halves; rebuild the " +
@@ -1026,7 +1027,7 @@ object EventsStream {
     // star each batch, the one remaining standing-state-linear term
     // (measured on the 5M wide soak; see appendComponentsDelta)
     val next = (if (exists(clPath))
-        Dedup.appendComponentsDelta(spark.read.parquet(clPath), pairs,
+        Dedup.appendComponentsDelta(ParquetMeta.read(spark, clPath), pairs,
           "id_a", "id_b")
       else Dedup.connectedComponents(pairs, "id_a", "id_b"))
     next.write.mode("overwrite").parquet(clTmp)

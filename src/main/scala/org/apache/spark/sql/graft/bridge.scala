@@ -18,6 +18,11 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+  /** The class of a `Row` value of type `t` (boxed, as `Row.get` returns it). */
+  def externalClass(t: org.apache.spark.sql.types.DataType): Class[_] =
+    org.apache.commons.lang3.ClassUtils.primitiveToWrapper(
+      org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderForDataType(t, lenient = true)
+        .clsTag.runtimeClass)
   /** Analyzed plan of a DataFrame (for building composite plans). */
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
 

@@ -176,7 +176,7 @@ class StagingSpec extends SparkSpec {
 
   test("stage of a plain parquet table is one Spark job: the write itself") {
     // 4 when stage read its output back: + 1 inference and 2 count jobs
-    val df = Tables(spark, sf(), "nation")   // schema inference happens here
+    val df = Tables(spark, sf(), "nation")   // resolved from its footer: no job
     val dir = Files.createTempDirectory("stg5").toString
     val (n, jobs) = JobCount(spark, "staging-one-job")(Staging.stage(df, dir))
     assert(n == 25)
@@ -281,7 +281,8 @@ class PublishSpec extends SparkSpec {
 object JobCount {
   import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-  /** A job started inside `Tables.apply`: a source's schema inference. */
+  /** A job started inside `Tables.apply`. Schema inference was one per
+    * source; it now reads a footer on the driver, so no job matches. */
   val sourceResolution: SparkListenerJobStart => Boolean =
     _.stageInfos.exists(_.details.contains("graft.sources.Tables$.apply"))
 
@@ -313,6 +314,27 @@ object JobCount {
       sc.removeSparkListener(listener)
     }
   }
+}
+
+/** The local file system under the scheme `countfs`, counting the
+  * listings of each path: a path read as `countfs:///dir/t.parquet` is
+  * listed once per resolution. */
+class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+  override def getScheme: String = "countfs"
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    CountingFs.counts.merge(f.toUri.getPath, 1, (a: Int, b: Int) => a + b)
+    super.listStatus(f)
+  }
+}
+
+object CountingFs {
+  /** The prefix that puts an absolute local path on this file system. */
+  val Scheme = "countfs://"
+  private val counts = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+  def listings(path: String): Int = counts.getOrDefault(path, 0)
+  def install(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl", classOf[CountingFs].getName)
 }
 
 class CopyJobSpec extends SparkSpec {
@@ -474,35 +496,102 @@ class CopyJobSpec extends SparkSpec {
     assert(jobs <= 20 - 2 * 5 - 2, s"two-table run took $jobs Spark jobs")
   }
 
-  test("a copying run resolves each source table once: one inference job per table") {
+  test("a copying run lists each source table once and runs no inference job") {
     // the trigger, the events and orders extracts and the A3 query's views
     // share one resolution of each table. The query registers a view of
-    // every harness table, so the run resolves all of them: 10 inference
-    // jobs and 24 jobs in all; 13 and 30 when the trigger, each extract
-    // and the query resolved their own (events three times, orders twice)
+    // every harness table, so the run resolves all of them, each listed
+    // once: 13 listings when the trigger, each extract and the query
+    // resolved their own (events three times, orders twice). A resolution
+    // was one inference job (10 in this run) until schemas came from
+    // footers read on the driver
+    CountingFs.install(spark)
     val cfg = freshCfg(Seq(
       TableSpec("ev", FromSpec("events"), "ev_once"),
       TableSpec("ord", FromSpec("orders"), "ord_once"),
       TableSpec("q", FromSpec("q", query = Some(
         "SELECT c_nationkey, count(*) AS n FROM orders JOIN customer " +
           "ON o_custkey = c_custkey GROUP BY c_nationkey")), "q_once")),
-      trigger = Some(TriggerSpec("events", "ts")))
+      trigger = Some(TriggerSpec("events", "ts"))).copy(sourceDir = CountingFs.Scheme + sf())
     val (r, inference) = JobCount(spark, "copyjob-resolve-once", JobCount.sourceResolution)(
       CopyJob.run(spark, cfg))
     assert(r == Copied)
-    assert(inference == Tables.names.size, s"$inference inference jobs")
+    assert(inference == 0, s"$inference inference jobs")
+    val listed = Tables.names.map(t => t -> CountingFs.listings(s"${sf()}/$t.parquet"))
+    assert(listed.forall(_._2 == 1), listed)
   }
 
-  test("a ViewSwitch table's load is one Spark job: F3's read of the staging") {
+  test("a ViewSwitch table's load runs no Spark job: F3 reads footers") {
     // a resumed run is the load alone: validate, copy, publish, clean up.
-    // 2 jobs when the snapshot was a Spark write of the validated data
+    // 2 jobs when the snapshot was a Spark write of the validated data, 1
+    // while F3's read of the staging inferred its schema in a job
     val cfg = freshCfg(Seq(TableSpec("nation", FromSpec("nation"), "n_load")))
     Staging.stage(Tables(spark, sf(), "nation"), stagingDir(cfg, "nation", "n_load").toString)
     val (r, jobs) = JobCount(spark, "copyjob-viewswitch-load")(
       CopyJob.run(spark, cfg.copy(resumeFromStaging = true)))
     assert(r == Copied)
-    assert(jobs == 1, s"the load ran $jobs Spark jobs")
+    assert(jobs == 0, s"the load ran $jobs Spark jobs")
     assert(Publish.readCurrent(spark, cfg.targetRoot, "n_load").count() == 25)
+  }
+
+  test("F3 fails a staging that lost a part file, naming the count; --resume publishes nothing") {
+    val cfg = freshCfg(Seq(TableSpec("nation", FromSpec("nation"), "n_lost")))
+    val dir = stagingDir(cfg, "nation", "n_lost")
+    Staging.stage(Tables(spark, sf(), "nation").repartition(3), dir.toString)
+    val parts = Files.list(Staging.files(dir.toString)).iterator.asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
+    assert(parts.size == 3)
+    val lost = Staging.read(spark, dir.toString).count() -
+      spark.read.parquet(parts.tail.map(_.toString): _*).count()
+    Files.delete(parts.head)
+    CopyJob.run(spark, cfg.copy(resumeFromStaging = true)) match {
+      case Failed(reason, _) => assert(reason.startsWith("probe nation: ") && reason.endsWith(
+        s"staged row count mismatch in '$dir': 2 files hold ${25 - lost} rows, manifest 25"), reason)
+      case other => fail(s"expected Failed, got $other")
+    }
+    assert(Publish.listVersions(cfg.targetRoot, "n_lost").isEmpty)
+    assert(Publish.currentVersion(cfg.targetRoot, "n_lost").isEmpty)
+  }
+
+  test("a NoNewData run runs no Spark job: the watermark is read from footers") {
+    val cfg = freshCfg(Seq(TableSpec("nation", FromSpec("nation"), "n_poll")),
+      trigger = Some(TriggerSpec("events", "ts")))
+    assert(CopyJob.run(spark, cfg) == Copied)
+    val (r, jobs) = JobCount(spark, "copyjob-nonewdata")(CopyJob.run(spark, cfg))
+    assert(r == NoNewData)
+    assert(jobs == 0, s"the poll ran $jobs Spark jobs")
+  }
+
+  test("an unsupported trigger column fails before any Spark job, with the type's class") {
+    val cfg = freshCfg(Seq(TableSpec("nation", FromSpec("nation"), "n_str")),
+      trigger = Some(TriggerSpec("events", "event_type")))
+    val (r, jobs) = JobCount(spark, "copyjob-string-trigger")(CopyJob.run(spark, cfg))
+    r match {
+      case Failed(reason, _) =>
+        assert(reason == "Unsupported watermark type java.lang.String for column 'event_type'")
+      case other => fail(s"expected Failed, got $other")
+    }
+    assert(jobs == 0, s"the failed poll ran $jobs Spark jobs")
+    assert(!Files.exists(Paths.get(cfg.stateDir)))
+  }
+
+  test("a trigger file whose footer cannot be read fails the run; the watermark stays") {
+    val src = Files.createTempDirectory("job_src")
+    val events = src.resolve("events.parquet")
+    Files.createDirectories(events)
+    Files.copy(Paths.get(sf(), "events.parquet"), events.resolve("part-00000-base.parquet"))
+    val cfg = freshCfg(Seq(TableSpec("ev", FromSpec("events"), "ev_corrupt")),
+      trigger = Some(TriggerSpec("events", "ts"))).copy(sourceDir = src.toString)
+    assert(CopyJob.run(spark, cfg) == Copied)
+    val statePath = Files.list(Paths.get(cfg.stateDir)).iterator.asScala.toSeq.head
+    val state0 = Files.readString(statePath)
+    val current0 = Publish.currentVersion(cfg.targetRoot, "ev_corrupt")
+    Tables(spark, sf(), "events").limit(5)
+      .withColumn("ts", org.apache.spark.sql.functions.expr("ts + interval 1 day"))
+      .write.mode("append").parquet(events.toString)
+    Files.writeString(events.resolve("part-99999-corrupt.parquet"), "not parquet")
+    assert(CopyJob.run(spark, cfg).isInstanceOf[Failed])
+    assert(Files.readString(statePath) == state0, "the watermark moved on a failed run")
+    assert(Publish.currentVersion(cfg.targetRoot, "ev_corrupt") == current0)
   }
 
   test("a publish that fails after the load leaves every staging whole; --resume completes it") {

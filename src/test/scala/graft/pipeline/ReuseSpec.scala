@@ -34,8 +34,9 @@ class SnapshotReuseSpec extends SparkSpec {
   }
 
   /** Run `cfg`, asserting Copied, and return the Spark jobs it ran besides
-    * resolving its sources: a reused table runs none, a copied one its F1
-    * probe, its extract and its F3 read. */
+    * resolving its sources (which reads footers on the driver and runs
+    * none): a reused table runs none, a copied one its F1 probe and its
+    * extract. F3 reads footers on the driver too. */
   private def jobs(cfg: JobConfig, group: String): Int = {
     val (r, n) = JobCount(spark, group, j => !JobCount.sourceResolution(j))(CopyJob.run(spark, cfg))
     assert(r == Copied)
