@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions.{col, count, lit, trim}
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import graft.sources.ParquetMeta
 
 /** Durable staging between extract and load (SURVEY.md §2.B, §2.F3).
   *
@@ -87,9 +88,9 @@ object Staging {
     val m = readManifest(dir).getOrElse(
       throw new IllegalStateException(s"staging dir '$dir' has no manifest"))
     val data = read(spark, dir)
-    val footers = graft.sources.ParquetMeta.footers(data)
+    val footers = ParquetMeta.footers(data)
     footers.foreach { case (f, footer) =>
-      val s = graft.sources.ParquetMeta.schema(spark, f, footer)
+      val s = ParquetMeta.schema(spark, f, footer)
       require(DataTypeUtils.equalsIgnoreNullability(s, m.schema),
         s"staged schema drift in '$dir': ${f.getPath.getName} has ${s.simpleString}, " +
           s"manifest ${m.schema.simpleString}")
@@ -118,7 +119,7 @@ object Staging {
 
   /** Read the staged dataset back (load-phase input). */
   def read(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.ParquetMeta.read(spark, dataPath(dir))
+    ParquetMeta.read(spark, dataPath(dir))
 
   /** E7 staging cleanup. */
   def cleanup(dir: String): Unit = graft.FsUtil.deleteRecursively(Paths.get(dir))

@@ -59,10 +59,14 @@ object ParquetMeta {
     * listing its resolution made: `df` must be a [[read]] of a path, or
     * `spark.read.parquet`'s. Each footer is read on the driver; one that
     * is not parquet fails naming its file. */
-  def footers(df: DataFrame): Seq[(FileStatus, ParquetMetadata)] = {
-    val idx = fileIndex(df.queryExecution.analyzed).getOrElse(throw new IllegalArgumentException(
-      s"not a parquet read of a path: ${df.queryExecution.analyzed.simpleString(2)}"))
-    val conf = GraftParquetBridge.hadoopConf(df.sparkSession)
+  def footers(df: DataFrame): Seq[(FileStatus, ParquetMetadata)] =
+    footers(df.sparkSession, fileIndex(df.queryExecution.analyzed).getOrElse(
+      throw new IllegalArgumentException(
+        s"not a parquet read of a path: ${df.queryExecution.analyzed.simpleString(2)}")))
+
+  private def footers(spark: SparkSession,
+      idx: PartitioningAwareFileIndex): Seq[(FileStatus, ParquetMetadata)] = {
+    val conf = GraftParquetBridge.hadoopConf(spark)
     scanned(idx).map(f => f -> GraftParquetBridge.footer(conf, f, ParquetMetadataConverter.NO_FILTER))
   }
 
@@ -106,21 +110,19 @@ object ParquetMeta {
       out <- Some(plan.output.filter(a => resolver(a.name, column))).collect { case Seq(a) => a }
       attr <- source(plan, out)
       idx <- fileIndex(plan)
-      m <- try filesMax(df.sparkSession, scanned(idx), attr.name, attr.dataType)
+      m <- try filesMax(footers(df.sparkSession, idx).map(_._2), attr.name, attr.dataType)
            catch { case NonFatal(_) => None }
       if m.forall(trusted(attr.dataType, _))
     } yield m.map(CatalystTypeConverters.convertToScala(_, attr.dataType))
   }
 
-  /** The catalyst max of column `name` over `files`, from their footers;
-    * None when a file does not store it as type `t` or a row group holding
-    * a value of it has no max. */
-  private def filesMax(spark: SparkSession, files: Seq[FileStatus], name: String,
+  /** The catalyst max of column `name` over the files of `footers`; None
+    * when a file does not store it as type `t` or a row group holding a
+    * value of it has no max. */
+  private def filesMax(footers: Seq[ParquetMetadata], name: String,
       t: DataType): Option[Option[Any]] = {
-    val conf = GraftParquetBridge.hadoopConf(spark)
     val path = ColumnPath.get(name)
-    val chunks: Seq[Option[Option[Long]]] = files.flatMap { f =>
-      val footer = GraftParquetBridge.footer(conf, f, ParquetMetadataConverter.NO_FILTER)
+    val chunks: Seq[Option[Option[Long]]] = footers.flatMap { footer =>
       val schema = footer.getFileMetaData.getSchema
       val scale = if (schema.containsField(name)) storedScale(schema.getType(Seq(name): _*), t) else None
       scale.fold(Seq(Option.empty[Option[Long]])) { k =>
@@ -174,6 +176,7 @@ object ParquetMeta {
       }
     }
 
+  /** Whether a footer max `v` of type `t` reads back as stored. */
   private def trusted(t: DataType, v: Any): Boolean = (t, v) match {
     case (DateType, d: Int) => d >= MinDays
     case (TimestampType | TimestampNTZType, us: Long) => us >= MinMicros

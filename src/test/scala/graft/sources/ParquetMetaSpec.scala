@@ -191,10 +191,9 @@ class ParquetMetaSpec extends SparkSpec {
     val df = ParquetMeta.read(spark, noStats)
     Seq("b", "ntz").foreach(assertFallsBack(df, _))
 
-    val int96 = tmp("pm-int96").resolve("t").toString
+    val int96 = tmp("pm-int96").resolve("t").toString   // Spark's default timestamp output
     Seq(java.sql.Timestamp.valueOf("2024-03-01 10:00:00.123456"),
-      java.sql.Timestamp.valueOf("2024-02-01 00:00:00")).toDF("ts")
-      .write.option("spark.sql.parquet.outputTimestampType", "INT96").parquet(int96)
+      java.sql.Timestamp.valueOf("2024-02-01 00:00:00")).toDF("ts").write.parquet(int96)
     val footers = ParquetMeta.footers(ParquetMeta.read(spark, int96))
     assert(footers.forall(_._2.getFileMetaData.getSchema.getType(Seq("ts"): _*).asPrimitiveType
       .getPrimitiveTypeName.name == "INT96"), "the fixture is not INT96")
