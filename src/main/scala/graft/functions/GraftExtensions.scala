@@ -7,8 +7,8 @@ import org.apache.spark.sql.types.IntegerType
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * expressions as SQL functions (so `spark.sql("SELECT vec_dot(a, b)")`
-  * works the same as the Column API) and the whole-operator planner
-  * strategies. Install via
+  * works the same as the Column API), the whole-operator planner
+  * strategies and the optimizer rules. Install via
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.functions.GraftExtensions`, or call
   * [[GraftExtensions.register]] on a live session.
@@ -19,6 +19,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => graft.plans.AsOfJoinFilterPushdown)
     ext.injectOptimizerRule(_ => graft.plans.CosineJoinRewrite)
+    ext.injectOptimizerRule(_ => graft.plans.FooterAggregates)
   }
 }
 

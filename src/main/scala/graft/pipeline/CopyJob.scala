@@ -5,7 +5,7 @@ import java.util.concurrent.{Callable, ConcurrentHashMap, ExecutionException, Ex
 import scala.util.control.NonFatal
 import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sources.Tables
+import graft.sources.{ParquetMeta, Tables}
 
 /** The 4-phase copy pipeline (SURVEY.md §3.1) — the reference's whole-job
   * semantics, Spark-native.
@@ -16,8 +16,9 @@ import graft.sources.Tables
   * publish window is as small as possible. Within a phase the tables run
   * concurrently. Parquet metadata is read on the driver
   * ([[graft.sources.ParquetMeta]]): resolving a source, the trigger's
-  * poll when footer statistics can answer it, and F3's check of a
-  * staging run no Spark job, so a NoNewData run runs none. Phase 2 of a
+  * poll when footer statistics can answer it, F1's check of a source
+  * that is files, and F3's check of a staging run no Spark job, so a
+  * NoNewData run runs none. Phase 2 of a
   * `ViewSwitch` or `TempSwap` table places the staged parquet files as
   * they are (the reference's `COPY INTO` loads the file it staged,
   * `CopyTool.java:756-870`), so it runs no Spark job either. Each source
@@ -350,9 +351,10 @@ object CopyJob {
         // ---- F1 empty-source guard: ALL tables checked before ANY copy.
         // Each source table is resolved once per run, the trigger's by its
         // poll, so its extract reads the file listing whose max becomes the
-        // stored watermark. The extract reuses the probe's DataFrame. A
-        // table that reuses its published snapshot passed F1 when that
-        // snapshot was made, from the same files.
+        // stored watermark. The extract reuses the probe's DataFrame. F1
+        // reads footer row counts where the source is files, as the poll
+        // reads their max. A table that reuses its published snapshot
+        // passed F1 when that snapshot was made, from the same files.
         val sources = new Sources(spark, cfg.sourceDir, polled.map(_._1).toMap)
         val probed = perTable(spark, "probe", cfg.tables.map(t => t -> t.from)) { (t, from) =>
           val df = sources(from)
@@ -361,7 +363,8 @@ object CopyJob {
             case _ => None                                  // a live database always reloads
           }
           val reuse = fp.flatMap(f => published(cfg, t).filter(Publish.readFingerprint(_).contains(f)))
-          Probed(df, fp, reuse, reuse.isEmpty && !t.allowEmpty && df.isEmpty) // limit-1 probe
+          Probed(df, fp, reuse, reuse.isEmpty && !t.allowEmpty &&
+            ParquetMeta.count(df).fold(df.isEmpty)(_ == 0))   // footers, else a limit-1 probe
         }
         val empties = cfg.tables.zip(probed).collect { case (t, p) if p.empty => t.id }
         if (empties.nonEmpty)

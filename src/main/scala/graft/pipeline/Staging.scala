@@ -95,7 +95,7 @@ object Staging {
         s"staged schema drift in '$dir': ${f.getPath.getName} has ${s.simpleString}, " +
           s"manifest ${m.schema.simpleString}")
     }
-    val rows = footers.map(_._2.getBlocks.asScala.map(_.getRowCount).sum).sum
+    val rows = ParquetMeta.rows(footers.map(_._2))
     require(rows == m.count,
       s"staged row count mismatch in '$dir': ${footers.size} files hold $rows rows, manifest ${m.count}")
     Staged(m, data, files(dir))

@@ -64,6 +64,7 @@ object Watermark {
       case s: Short              => BigintV(s.toLong)
       case d: java.sql.Date      => DateV(d)
       case t: Timestamp          => TimestampV(t)
+      case i: java.time.Instant  => TimestampV(Timestamp.from(i)) // java8API
       case t: java.time.LocalDateTime => TimestampV(Timestamp.valueOf(t))
       case d: java.time.LocalDate => DateV(java.sql.Date.valueOf(d))
       case other =>

@@ -79,9 +79,10 @@ object AsOfJoinStrategy extends SparkStrategy {
 
   /** Idempotent runtime registration on a live session (the
     * `spark.sql.extensions` path isn't available post-construction).
-    * Installs both the planner strategy and the filter-pushdown rule. */
+    * Installs both the planner strategy and the filter-pushdown rule,
+    * under the lock every graft registration on the session takes. */
   def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    synchronized {
+    spark.experimental.synchronized {
       if (!spark.experimental.extraStrategies.contains(this))
         spark.experimental.extraStrategies =
           spark.experimental.extraStrategies :+ this

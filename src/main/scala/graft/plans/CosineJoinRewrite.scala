@@ -51,7 +51,7 @@ object CosineJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * [[AsOfJoinStrategy.ensureRegistered]]; the `spark.sql.extensions`
     * path covers builder-time installs). */
   def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    synchronized {
+    spark.experimental.synchronized {
       if (!spark.experimental.extraOptimizations.contains(this))
         spark.experimental.extraOptimizations =
           spark.experimental.extraOptimizations :+ this

@@ -91,7 +91,8 @@ object GraftParquetBridge {
     ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer), converter)
   }
 
-  /** The session's Hadoop conf, as a read uses it. */
-  def hadoopConf(spark: SparkSession): Configuration =
-    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+  /** The session's Hadoop conf with a relation's `options`, as its scan
+    * reads with. */
+  def hadoopConf(spark: SparkSession, options: Map[String, String]): Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConfWithOptions(options)
 }

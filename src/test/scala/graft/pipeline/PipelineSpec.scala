@@ -3,6 +3,7 @@ package graft.pipeline
 import java.nio.file.Files
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.col
 import graft.SparkSpec
 import graft.sources.{SqlGen, Tables}
 
@@ -131,6 +132,23 @@ class WatermarkSpec extends SparkSpec {
   test("poll on empty source → None") {
     val empty = Tables(spark, sf(), "events").filter("event_id < 0")
     assert(poll(empty, "event_id").isEmpty)
+  }
+
+  test("poll of a timestamp column under the java8 datetime API: footers and aggregate") {
+    val dir = Files.createTempDirectory("wm-java8")
+    graft.sources.ParquetMetaSpec.write(dir.resolve("part-0.parquet"), n = 40, nulls = 3, shift = 0)
+    // a session without the footer rule, so the filtered poll scans
+    def polls(java8: Boolean): Seq[Option[Value]] = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.datetime.java8API.enabled", java8.toString)
+      val df = s.read.parquet(dir.toString)
+      assert(graft.sources.ParquetMeta.max(df, "ts").exists(_.exists(v =>
+        v.isInstanceOf[java.time.Instant] == java8)), "the footers did not answer")
+      Seq(poll(df, "ts"), poll(df.filter(col("i") > Int.MinValue), "ts"))
+    }
+    val Seq(footer, scanned) = polls(java8 = true)
+    assert(footer.exists(_.isInstanceOf[TimestampV]) && footer == scanned)
+    assert(polls(java8 = false) == Seq(footer, footer))
   }
 }
 
@@ -751,6 +769,19 @@ class CopyJobSpec extends SparkSpec {
     assert(r.isInstanceOf[Failed])
     assert(r.exitCode == 1)
     // nothing published — guard ran before phase 1
+    assert(Publish.currentVersion(cfg.targetRoot, "good_out").isEmpty)
+  }
+
+  test("a zero-row parquet source fails F1 from its footers, with no Spark job") {
+    val src = Files.createTempDirectory("f1-src")
+    Tables(spark, sf(), "nation").limit(0).write.parquet(src.resolve("nation.parquet").toString)
+    val cfg = freshCfg(Seq(
+      TableSpec("good", FromSpec("region"), "good_out"),
+      TableSpec("empty", FromSpec("nation"), "empty_out"))).copy(sourceDir = src.toString)
+    Files.createSymbolicLink(src.resolve("region.parquet"), Paths.get(sf(), "region.parquet").toAbsolutePath)
+    val (r, jobs) = JobCount(spark, "f1-zero-row")(CopyJob.run(spark, cfg))
+    assert(r == Failed("empty source tables: empty"))
+    assert(jobs == 0, s"F1 ran $jobs Spark jobs")
     assert(Publish.currentVersion(cfg.targetRoot, "good_out").isEmpty)
   }
 
