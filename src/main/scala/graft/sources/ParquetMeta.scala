@@ -3,7 +3,7 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 import org.apache.hadoop.fs.FileStatus
-import org.apache.parquet.column.statistics.{IntStatistics, LongStatistics}
+import org.apache.parquet.column.statistics.{IntStatistics, LongStatistics, Statistics}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.metadata.{ColumnPath, ParquetMetadata}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation,
@@ -152,7 +152,7 @@ object ParquetMeta {
       if (!p.exists(q => scale.isDefined || plain(q, t))) Seq(None)
       else footer.getBlocks.asScala.toSeq.map { b =>
         b.getColumns.asScala.find(_.getPath == path).map { c =>
-          val s = Option(c.getStatistics)
+          val s: Option[Statistics[_]] = Option(c.getStatistics)
           val nulls = if (c.getValueCount == 0) Some(0L)
             else s.filter(_.isNumNullsSet).map(_.getNumNulls)
           val range = scale.flatMap { k =>
