@@ -27,9 +27,11 @@ import graft.sources.ParquetMeta
   * A snapshot, like the reference's `COPY INTO` of the CSV it staged
   * (`CopyTool.java:756-870`), is the staged files as they are: phase 2
   * places them and runs no Spark job. A snapshot may hold a
-  * `_source_fingerprint` of the source files it was copied from; a later
-  * run whose sources have the same fingerprint places the files of that
-  * snapshot instead of extracting again.
+  * [[SourceRecord]] of the source files it was copied from, in segments:
+  * the part files of one staged write and the source files that write
+  * read. A later run whose sources still match every segment places those
+  * part files again, hard-linked, and extracts only the files the source
+  * gained.
   */
 object Publish {
 
@@ -69,43 +71,80 @@ object Publish {
   /** The stable data dir of a [[tempSwapPublish]] table. */
   def swapDir(root: String, table: String): Path = tableDir(root, table).resolve("data")
 
-  /** Load a snapshot version (phase 2): the parquet files of `staged` (part
-    * files, their `.crc` files, `_SUCCESS`, a `_source_fingerprint`), with
-    * no decode or re-encode. `staged` is a staging dir or, for a reused
-    * source, an earlier snapshot. Immutable once written. */
-  def writeSnapshot(staged: Path, root: String, table: String, version: String): Unit =
-    copyFiles(staged, Paths.get(snapshotDir(root, table, version)))
+  /** Load a snapshot version (phase 2) from `files`: a staging's parquet
+    * files, the part files it reuses from an earlier snapshot, its source
+    * record, each placed as it is, with no decode or re-encode. Immutable
+    * once written. */
+  def writeSnapshot(files: Seq[Path], root: String, table: String, version: String): Unit =
+    place(files, Paths.get(snapshotDir(root, table, version)))
 
-  /** Replace `to` with the tree under `from`, each file hard-linked, or
-    * copied where the file system cannot link it. Never a move: the
-    * staging stays readable for `--resume` until the job succeeds. Both
-    * trees are immutable once written (a parquet write replaces files,
-    * it never rewrites one), so sharing their files is safe. */
-  private def copyFiles(from: Path, to: Path): Unit = {
+  /** Replace `to` with a dir of `files`, each hard-linked under its own
+    * name, or copied where the file system cannot link it. Never a move:
+    * the staging stays readable for `--resume` until the job succeeds.
+    * Every placed file is immutable once written (a parquet write replaces
+    * files, it never rewrites one; a record is replaced by a move), so
+    * sharing them is safe. */
+  private[pipeline] def place(files: Seq[Path], to: Path): Unit = {
     graft.FsUtil.deleteRecursively(to)
-    Files.createDirectories(to.getParent)
-    val walk = Files.walk(from)   // pre-order: each dir before its files
-    try walk.iterator.asScala.foreach { p =>
-      val q = to.resolve(from.relativize(p))
-      if (Files.isDirectory(p)) Files.createDirectory(q)
-      else try Files.createLink(q, p) catch {
+    Files.createDirectories(to)
+    files.foreach { p =>
+      val q = to.resolve(p.getFileName)
+      try Files.createLink(q, p) catch {
         case _: IOException | _: UnsupportedOperationException => Files.copy(p, q)
       }
-    } finally walk.close()
+    }
   }
 
-  /** The name of a snapshot's source fingerprint; Spark's reader skips it,
-    * as it skips every file whose name starts with `_`. */
-  val FingerprintFile = "_source_fingerprint"
-
-  def readFingerprint(snapshot: Path): Option[String] = {
-    val p = snapshot.resolve(FingerprintFile)
-    if (Files.isRegularFile(p)) Some(Files.readString(p)) else None
+  /** The files of `dir`, sorted by name: a staging's parquet output, part
+    * and checksum files and `_SUCCESS`. */
+  def filesIn(dir: Path): Seq[Path] = {
+    val ls = Files.list(dir)
+    try ls.iterator.asScala.filter(Files.isRegularFile(_)).toSeq.sortBy(_.getFileName.toString)
+    finally ls.close()
   }
 
-  /** Write `fingerprint` into `dir`, a staging's files or a snapshot. */
-  def writeFingerprint(dir: Path, fingerprint: String): Unit =
-    Files.writeString(dir.resolve(FingerprintFile), fingerprint)
+  /** A source file as a listing saw it. `crc` is the CRC32C of its content
+    * while its mtime lay within the racy window of the listings that
+    * vouched for it; None once one of them saw it settled, when length and
+    * mtime vouch for it alone. */
+  final case class SourceFile(path: String, length: Long, mtime: Long, crc: Option[Long])
+
+  /** The part files one staged write produced and the source files it read. */
+  final case class Segment(parts: Seq[String], sources: Seq[SourceFile])
+
+  /** What the files of a snapshot, or of a kept staging, were copied from:
+    * the extract's identity (its FromSpec and the settings that shape the
+    * staged rows), the schema of every relation its plan reads, in plan
+    * order, and its segments, oldest first. */
+  final case class SourceRecord(from: CopyJob.FromSpec, autoTrim: Boolean, allowEmpty: Boolean,
+      schemas: Seq[String], segments: Seq[Segment]) {
+    def files: Seq[SourceFile] = segments.flatMap(_.sources)
+  }
+
+  /** The name of the source record in a snapshot or staging dir; Spark's
+    * reader skips it, as it skips every file whose name starts with `_`. */
+  val RecordFile = "_source_record"
+
+  private val formats = org.json4s.DefaultFormats
+
+  /** The record `dir` holds; None when it holds none or one this program
+    * cannot read (the whole-table fingerprint earlier versions wrote under
+    * another name counts as none). */
+  def readRecord(dir: Path): Option[SourceRecord] = {
+    val p = dir.resolve(RecordFile)
+    if (!Files.isRegularFile(p)) None
+    else scala.util.Try(org.json4s.jackson.JsonMethods.parse(Files.readString(p))
+      .extract[SourceRecord](formats, implicitly[Manifest[SourceRecord]])).toOption
+  }
+
+  /** Write `record` into `dir`, replacing the file by a move, never in
+    * place: a record may be a hard link shared with another snapshot. */
+  def writeRecord(dir: Path, record: SourceRecord): Unit = {
+    val tmp = dir.resolve(s"$RecordFile.tmp")
+    Files.writeString(tmp, org.json4s.jackson.Serialization.write(record)(formats))
+    Files.move(tmp, dir.resolve(RecordFile), StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+  }
 
   /** E4 newest-version discovery: list + lexicographic max (version string
     * ordering == timestamp ordering for this format). Lazy listing — only
@@ -166,15 +205,15 @@ object Publish {
     drop.sorted
   }
 
-  /** E2 temp-swap publish (the non-versioned mode): place the staged
-    * parquet files `staged` in a cleared `tmp_data` dir, then swap it
+  /** E2 temp-swap publish (the non-versioned mode): place `files`, as
+    * [[writeSnapshot]] does, in a cleared `tmp_data` dir, then swap it
     * into the stable data dir. Same drop-then-swap window as the
     * reference (`CopyTool.java:1107-1124`) — documented, and the
     * versioned+pointer mode above is the preferred atomic path. */
-  def tempSwapPublish(staged: Path, root: String, table: String): Unit = {
+  def tempSwapPublish(files: Seq[Path], root: String, table: String): Unit = {
     val fin = swapDir(root, table)
     val tmp = fin.resolveSibling("tmp_data")
-    copyFiles(staged, tmp)
+    place(files, tmp)
     graft.FsUtil.deleteRecursively(fin)
     Files.move(tmp, fin, StandardCopyOption.ATOMIC_MOVE)
   }

@@ -390,11 +390,11 @@ class CopyJobSpec extends SparkSpec {
   private def shape(s: org.apache.spark.sql.types.StructType) =
     s.fields.map(f => (f.name, f.dataType)).toSeq
 
-  /** Delete the source fingerprint of `to`'s published snapshot, so the
+  /** Delete the source record of `to`'s published snapshot, so the
     * next run extracts the table again instead of reusing the snapshot. */
   private def forceCopy(cfg: JobConfig, to: String): Unit =
     Files.delete(Paths.get(Publish.snapshotDir(cfg.targetRoot, to,
-      Publish.currentVersion(cfg.targetRoot, to).get), Publish.FingerprintFile))
+      Publish.currentVersion(cfg.targetRoot, to).get), Publish.RecordFile))
 
   /** Move the stored watermark a day back, so the next run's trigger
     * copies. Returns the state file. */

@@ -76,8 +76,8 @@ class SnapshotReuseSpec extends SparkSpec {
       // the new version's files are the old snapshot's, linked
       assert(parts(now).map(_.getFileName) == parts(old).map(_.getFileName))
       parts(now).zip(parts(old)).foreach { case (a, b) => assert(Files.isSameFile(a, b)) }
-      assert(Publish.readFingerprint(now).isDefined &&
-        Publish.readFingerprint(now) == Publish.readFingerprint(old), to)
+      assert(Publish.readRecord(now).isDefined &&
+        Publish.readRecord(now) == Publish.readRecord(old), to)
       assert(rows(Publish.readCurrent(spark, cfg.targetRoot, to)) ==
         rows(Publish.readCurrent(spark, fresh.targetRoot, to)), to)
     }
@@ -126,13 +126,13 @@ class SnapshotReuseSpec extends SparkSpec {
     assert(jobs(untrimmed, "spec-4") == 0)
   }
 
-  test("a deleted _source_fingerprint copies") {
+  test("a deleted _source_record copies") {
     val src = sources()
     val cfg = cfgOver(src, TableSpec("nation", FromSpec("nation"), "n_nofp"))
     assert(jobs(cfg, "nofp-1") > 0)
-    Files.delete(current(cfg, "n_nofp").resolve(Publish.FingerprintFile))
+    Files.delete(current(cfg, "n_nofp").resolve(Publish.RecordFile))
     assert(jobs(cfg, "nofp-2") > 0)
-    assert(Publish.readFingerprint(current(cfg, "n_nofp")).isDefined)
+    assert(Publish.readRecord(current(cfg, "n_nofp")).isDefined)
   }
 
   test("a CURRENT naming a missing version, or one without a fingerprint, copies") {
@@ -144,22 +144,87 @@ class SnapshotReuseSpec extends SparkSpec {
     assert(jobs(cfg, "ptr-2") > 0)
     // an older snapshot without a fingerprint, published by hand
     Files.delete(Paths.get(Publish.snapshotDir(cfg.targetRoot, "n_ptr", good),
-      Publish.FingerprintFile))
+      Publish.RecordFile))
     Publish.publishVersion(cfg.targetRoot, "n_ptr", good)
     assert(jobs(cfg, "ptr-3") > 0)
     assert(Publish.readCurrent(spark, cfg.targetRoot, "n_ptr").count() == 25)
   }
 
-  test("a file modified inside the racy window copies and leaves no fingerprint") {
+  /** Change one byte of `file` in place, keeping its length and mtime:
+    * the first letter of the writer's name in its footer, `p` ↔ `P`. */
+  private def flip(file: Path): Unit = {
+    val mtime = Files.getLastModifiedTime(file)
+    val bytes = Files.readAllBytes(file)
+    val at = new String(bytes, "ISO-8859-1").toLowerCase.indexOf("parquet-cpp-arrow")
+    assert(at >= 0, s"$file names no parquet-cpp-arrow writer")
+    bytes(at) = (bytes(at) ^ 0x20).toByte
+    Files.write(file, bytes)
+    Files.setLastModifiedTime(file, mtime)
+  }
+
+  private def crcOf(cfg: JobConfig, to: String): Option[Long] =
+    Publish.readRecord(current(cfg, to)).get.files.head.crc
+
+  test("a racy file is content-checked by CRC32C") {
     val src = sources()
+    val file = src.resolve("nation.parquet")
     val cfg = cfgOver(src, TableSpec("nation", FromSpec("nation"), "n_racy"))
-    setMtime(src.resolve("nation.parquet"), System.currentTimeMillis())
+    // an mtime ahead of every listing keeps the file racy
+    setMtime(file, System.currentTimeMillis() + 600000L)
     assert(jobs(cfg, "racy-1") > 0)
-    assert(Publish.readFingerprint(current(cfg, "n_racy")).isEmpty)
-    assert(jobs(cfg, "racy-2") > 0)
-    setMtime(src.resolve("nation.parquet"), hourAgo)
+    val crc = crcOf(cfg, "n_racy")
+    assert(crc.isDefined)
+    assert(jobs(cfg, "racy-2") == 0)              // unchanged: reused
+    assert(crcOf(cfg, "n_racy") == crc)           // still racy, so still checked by content
+    flip(file)                                    // same length, same mtime
     assert(jobs(cfg, "racy-3") > 0)
-    assert(jobs(cfg, "racy-4") == 0)
+    assert(crcOf(cfg, "n_racy").exists(c => !crc.contains(c)))
+    setMtime(file, hourAgo)
+    assert(jobs(cfg, "racy-4") > 0)
+    assert(crcOf(cfg, "n_racy").isEmpty)          // settled: length and mtime vouch for it
+    assert(jobs(cfg, "racy-5") == 0)
+  }
+
+  test("a racy file verified once it settles is recorded as settled") {
+    val src = sources()
+    val file = src.resolve("nation.parquet")
+    val cfg = cfgOver(src, TableSpec("nation", FromSpec("nation"), "n_settle"))
+    val mtime = System.currentTimeMillis() - 500L
+    setMtime(file, mtime)
+    assert(jobs(cfg, "settle-1") > 0)
+    assert(crcOf(cfg, "n_settle").isDefined)
+    Thread.sleep(math.max(0L, mtime + CopyJob.RacyWindowMs + 200L - System.currentTimeMillis()))
+    assert(jobs(cfg, "settle-2") == 0)
+    assert(crcOf(cfg, "n_settle").isEmpty)
+    assert(jobs(cfg, "settle-3") == 0)
+  }
+
+  test("a racy file changed during its extract is never reused") {
+    val src = sources()
+    val file = src.resolve("nation.parquet")
+    val mtime = System.currentTimeMillis() + 600000L
+    setMtime(file, mtime)
+    val path = file.toString
+    // a deterministic UDF that changes the file's content, as another
+    // writer might, while the extract reads it
+    spark.udf.register("racy_touch", (k: Long) => {
+      val raf = new java.io.RandomAccessFile(path, "rw")
+      try {
+        val bytes = new Array[Byte](raf.length.toInt)
+        raf.readFully(bytes)
+        val at = new String(bytes, "ISO-8859-1").indexOf("parquet-cpp-arrow")
+        if (at >= 0) { raf.seek(at); raf.write('P') }
+      } finally raf.close()
+      Files.setLastModifiedTime(Paths.get(path), FileTime.fromMillis(mtime))
+      k
+    })
+    val cfg = cfgOver(src, TableSpec("t", FromSpec("t", query = Some(
+      "SELECT racy_touch(n_nationkey) AS k FROM nation")), "t_touched"))
+    assert(jobs(cfg, "touched-1") > 0)
+    assert(Publish.readRecord(current(cfg, "t_touched")).isEmpty)
+    assert(jobs(cfg, "touched-2") > 0)             // no record: copies again
+    assert(Publish.readRecord(current(cfg, "t_touched")).isDefined)   // read what it hashed
+    assert(jobs(cfg, "touched-3") == 0)
   }
 
   test("a source that is not files, or a non-deterministic query, copies") {
@@ -176,7 +241,7 @@ class SnapshotReuseSpec extends SparkSpec {
     assert(jobs(cfg, "volatile-2") > 0)
     first.foreach { case (to, prev) =>
       val now = current(cfg, to)
-      assert(Publish.readFingerprint(now).isEmpty, to)
+      assert(Publish.readRecord(now).isEmpty, to)
       assert(!Files.isSameFile(parts(now).head, parts(prev).head), s"$to was not copied")
     }
   }
