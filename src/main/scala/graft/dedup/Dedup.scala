@@ -1208,46 +1208,156 @@ object Dedup {
   // Connected components — pair list → dedup clusters
   // ---------------------------------------------------------------------
 
-  // Per-round shape of [[connectedComponents]], at the measured knees
-  // (see the in-loop notes): pointer jumps and neighbor-min edge-hops per
-  // materialized generation, and the vertex count up to which the label
-  // table is broadcast ((long, long) rows, ~25 B each → ~100 MB). Hops
-  // must stay >= 1: zero hops would converge on the pointer-jump fixpoint
-  // without ever propagating labels across an edge.
+  // Per-round shape of the distributed loop ([[componentsLoop]]), at the
+  // measured knees (see the in-loop notes): pointer jumps and neighbor-min
+  // edge-hops per materialized generation, and the vertex count up to
+  // which the label table is broadcast ((long, long) rows, ~25 B each →
+  // ~100 MB). Hops must stay >= 1: zero hops would converge on the
+  // pointer-jump fixpoint without ever propagating labels across an edge.
   private val CcJumpsPerRound = 2
   private val CcHopsPerRound = 1
   private val CcBroadcastMaxVertices = 4000000L
+  // The edge rows (both directions and the self-loops) up to which
+  // [[connectedComponents]] labels on the driver. Measured on a 4-core
+  // host, local[4], warm JVM, clusters of 2–6 ids, edge checkpoint and
+  // result collect included: at 4k / 64k / 256k / 1M edge rows the driver
+  // path took 0.12 / 0.25–0.28 / 0.46–0.73 / 1.5–2.0 s and the loop
+  // 0.65–0.99 / 0.92–0.98 / 1.41–1.67 / 3.2–4.3 s, so the crossover lies
+  // above 1M. The budget is set far below it by the local relation the
+  // driver path returns, shipped in every task that scans it: 64k edge
+  // rows are at most 64k vertices, about 4 MB of rows.
+  private[graft] val CcDriverMaxEdges = 1L << 16
 
   /** Connected components over a near-dup pair list: the step every real
     * dedup pipeline runs AFTER pair generation — duplicates are
     * transitive in practice (A≈B, B≈C ⇒ drop two of three), so pairs
     * must become clusters with one surviving representative.
     *
-    * Min-label propagation to a fixpoint: every vertex repeatedly takes
-    * the minimum label among itself and its neighbors. Rounds needed =
-    * component diameter, and near-dup clusters are small and dense
-    * (diameter ≲ 5 even at web scale — this is NOT a social graph), so
-    * the plain propagation beats the O(log n)-round large-star/small-star
-    * alternation (Kiveris et al., "Connected Components in MapReduce")
-    * in both simplicity and constant factors here. Scale shape: each
-    * round is one shuffle-join plus one min-aggregate over (long, long)
-    * rows — edge payloads are two ids, never documents — and each
-    * generation is checkpointed (see the in-body note on lineage
-    * blowup). Convergence is detected by the label sum: labels only ever
-    * decrease, so an unchanged sum is exactly the fixpoint (one scalar
-    * per round to the driver, nothing else).
+    * One eager checkpoint job builds the symmetric edge list (both
+    * directions and a self-loop per id) and observes its row count and
+    * the null ids of each column; a null id fails, naming its column.
+    * Then one of two paths labels every vertex with its component's
+    * minimum id:
+    *
+    *  - At or below [[CcDriverMaxEdges]] edge rows the driver collects
+    *    the edges once and runs min-label union-find; the result is a
+    *    local relation (no further job). Near-dup graphs are this small
+    *    at every scale the queries run, and the loop's per-round job
+    *    floor would cost more than the data.
+    *  - Above it, [[componentsLoop]] runs min-label propagation to a
+    *    fixpoint on the cluster: each round is one shuffle-join plus one
+    *    min-aggregate over (long, long) rows, checkpointed, and the label
+    *    sum detects the fixpoint. Not reaching it within `maxIter` rounds
+    *    fails.
     *
     * Output: `(id, component, cluster_size, keep)` for every id in the
-    * pair list — `component` is the cluster's minimum id, `keep` marks
-    * the representative. Ids in no pair are trivially their own
-    * singleton and are not emitted (join back to the corpus for the
-    * keep-filter form). Deterministic for any input order.
+    * pair list, with the same schema on both paths — `component` is the
+    * cluster's minimum id, `keep` marks the representative. Ids in no
+    * pair are trivially their own singleton and are not emitted (join
+    * back to the corpus for the keep-filter form). Deterministic for any
+    * input order. */
+  def connectedComponents(pairs: DataFrame, idACol: String, idBCol: String,
+      maxIter: Int = 25): DataFrame = {
+    val (edges, edgeRows) = edgeList(pairs, idACol, idBCol)
+    if (edgeRows <= CcDriverMaxEdges) componentsOnDriver(edges)
+    else componentsLoop(edges, maxIter)
+  }
+
+  /** [[connectedComponents]] through the distributed loop whatever the
+    * edge count. */
+  private[graft] def connectedComponentsDistributed(pairs: DataFrame, idACol: String,
+      idBCol: String, maxIter: Int = 25): DataFrame =
+    componentsLoop(edgeList(pairs, idACol, idBCol)._1, maxIter)
+
+  /** The symmetric `(src, dst)` edge list of `pairs` as an eager
+    * checkpoint leaf, and its row count, observed on that one job. Fails
+    * naming the column when a pair holds a null id. */
+  private def edgeList(pairs: DataFrame, idACol: String, idBCol: String): (DataFrame, Long) = {
+    val nulls = org.apache.spark.sql.Observation()
+    val size = org.apache.spark.sql.Observation()
+    val a = col(idACol).cast("long")
+    val b = col(idBCol).cast("long")
+    // symmetrize via explode(array(fwd, rev, selfA, selfB)) — ONE pass
+    // over the pair list (a union of forward + reversed would reference
+    // the whole pair-producing pipeline, e.g. the simhash blocking
+    // joins, twice). SELF-LOOPS ride the same explode so the per-round
+    // neighbor-min join alone preserves every vertex's own label — the
+    // union branch that used to carry it re-evaluated the whole jumped
+    // subtree a second time every round; |V| extra edge rows buy its
+    // removal once. They also make every vertex a `src`.
+    val edges = checkpointLeaf(pairs
+      .observe(nulls, count(when(a.isNull, 1)).as("a"), count(when(b.isNull, 1)).as("b"))
+      .select(explode(array(
+        struct(a.as("src"), b.as("dst")), struct(b.as("src"), a.as("dst")),
+        struct(a.as("src"), a.as("dst")), struct(b.as("src"), b.as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .distinct()
+      .observe(size, count(lit(1)).as("n")))
+    // a plan the optimizer proves empty runs no observation: no rows, so
+    // no null and no edge
+    def metric(o: org.apache.spark.sql.Observation, k: String) =
+      o.get.getOrElse(k, 0L).toString.toLong
+    for ((c, k) <- Seq(idACol -> "a", idBCol -> "b"))
+      require(metric(nulls, k) == 0L,
+        s"connectedComponents: column '$c' holds ${metric(nulls, k)} null ids")
+    (edges, metric(size, "n"))
+  }
+
+  /** The labels `(id, label)` as [[connectedComponents]] returns them. */
+  private def finish(labels: DataFrame): DataFrame = {
+    val sizes = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
+    labels.join(sizes, "label")
+      .select(col("id"), col("label").as("component"), col("cluster_size"),
+        (col("id") === col("label")).as("keep"))
+  }
+
+  /** Min-label union-find over the collected edge list, returned as a
+    * local relation with the schema [[componentsLoop]] returns (taken
+    * from one hop's plan, which no job runs). */
+  private def componentsOnDriver(edges: DataFrame): DataFrame = {
+    val es = edges.collect()
+    val ids = es.map(_.getLong(0)).distinct.sorted
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    // a root is the least index of its set, so its least id
+    es.foreach { r =>
+      val a = find(java.util.Arrays.binarySearch(ids, r.getLong(0)))
+      val b = find(java.util.Arrays.binarySearch(ids, r.getLong(1)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val root = Array.tabulate(ids.length)(find)
+    val size = new Array[Long](ids.length)
+    root.foreach(r => size(r) += 1)
+    val schema = finish(edges.groupBy("src").agg(min(col("dst")).as("label"))
+      .select(col("src").as("id"), col("label"))).schema
+    edges.sparkSession.createDataFrame(java.util.Arrays.asList(ids.indices.map(i =>
+      org.apache.spark.sql.Row(ids(i), ids(root(i)), size(root(i)), root(i) == i)): _*), schema)
+  }
+
+  /** The distributed loop of [[connectedComponents]] over an [[edgeList]]
+    * leaf: min-label propagation to a fixpoint, every vertex repeatedly
+    * taking the minimum label among itself and its neighbors. Rounds
+    * needed = component diameter, and near-dup clusters are small and
+    * dense (diameter ≲ 5 even at web scale — this is NOT a social graph),
+    * so the plain propagation beats the O(log n)-round
+    * large-star/small-star alternation (Kiveris et al., "Connected
+    * Components in MapReduce") in both simplicity and constant factors
+    * here. Scale shape: each round is one shuffle-join plus one
+    * min-aggregate over (long, long) rows — edge payloads are two ids,
+    * never documents — and each generation is checkpointed (see the
+    * in-body note on lineage blowup). Convergence is detected by the
+    * label sum: labels only ever decrease, so an unchanged sum is exactly
+    * the fixpoint (one scalar per round to the driver, nothing else).
+    * Fails when `maxIter` rounds end before the fixpoint.
     *
     * The returned plan reads the final converged generation's
     * checkpoint; intermediate generations' blocks are released by the
     * ContextCleaner once unreferenced. */
-  def connectedComponents(pairs: DataFrame, idACol: String, idBCol: String,
-      maxIter: Int = 25): DataFrame = {
+  private def componentsLoop(edges: DataFrame, maxIter: Int): DataFrame = {
     // Each generation is CHECKPOINTED, not just persisted: persist caches
     // data but leaves the logical plan intact, so generation k's plan
     // would nest generation k-1's plus the whole pair-producing subtree
@@ -1257,7 +1367,6 @@ object Dedup {
     // replaces the plan with a materialized leaf; reliable checkpointing
     // when the session has a checkpoint dir (production clusters —
     // survives executor loss), local otherwise.
-    def materialize(df: DataFrame): DataFrame = checkpointLeaf(df)
     // Per-generation checkpoints are EAGER, and their captured origin
     // stats are DROPPED. Two distinct per-round compounding traps live
     // here, both invisible at sf0.1's 5 rounds and fatal at sf10's 12:
@@ -1308,23 +1417,6 @@ object Dedup {
         m("n_vertices").toString.toLong)
     }
 
-    // symmetrize via explode(array(fwd, rev, selfA, selfB)) — ONE pass
-    // over the pair list (a union of forward + reversed would reference
-    // the whole pair-producing pipeline, e.g. the simhash blocking
-    // joins, twice). SELF-LOOPS ride the same explode so the per-round
-    // neighbor-min join alone preserves every vertex's own label — the
-    // union branch that used to carry it re-evaluated the whole jumped
-    // subtree a second time every round; |V| extra edge rows buy its
-    // removal once.
-    val edges = materialize(
-      pairs.select(explode(array(
-        struct(col(idACol).cast("long").as("src"), col(idBCol).cast("long").as("dst")),
-        struct(col(idBCol).cast("long").as("src"), col(idACol).cast("long").as("dst")),
-        struct(col(idACol).cast("long").as("src"), col(idACol).cast("long").as("dst")),
-        struct(col(idBCol).cast("long").as("src"), col(idBCol).cast("long").as("dst"))))
-        .as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst"))
-        .distinct())
     var (labels, prevSum, nVertices) = materializeGenWithSum(
       edges.groupBy("src").agg(min(col("dst")).as("_mn"))
         .select(col("src").as("id"), least(col("src"), col("_mn")).as("label")))
@@ -1403,12 +1495,9 @@ object Dedup {
       iter += 1
     }
     if (!converged)
-      System.err.println(s"[connectedComponents] maxIter=$maxIter reached " +
-        "before fixpoint — labels are a valid refinement but may be unmerged")
-    val sizes = labels.groupBy("label").agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, "label")
-      .select(col("id"), col("label").as("component"), col("cluster_size"),
-        (col("id") === col("label")).as("keep"))
+      throw new IllegalStateException(s"connectedComponents: no fixpoint after maxIter=$maxIter " +
+        "rounds; the labels are not merged")
+    finish(labels)
   }
 
   /** Incremental connected components — the daily-crawl shape for the

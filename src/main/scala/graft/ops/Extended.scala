@@ -384,96 +384,138 @@ object Extended {
       .drop("_zkey")
   }
 
-  /** Exact interpolated quantiles per group, DISTRIBUTED form. Spark's
-    * `percentile` ImperativeAggregate buffers a value→count map per
-    * group on the reducer; distinct values grow with data size, so at
-    * 100× that map is the bottleneck. This form instead ranks with
-    * row_number over a window sort (spillable, memory-bounded),
-    * broadcasts the tiny per-(group, column) counts, keeps only the
-    * two rows flanking each target rank pos = q·(n−1), and
-    * interpolates lo + (hi − lo)·(pos − ⌊pos⌋) — quantile_cont's
-    * formula, no unbounded aggregation buffer anywhere in the plan.
-    * When pos lands exactly on a rank (including every single-row
-    * group, where pos = 0 and rank ⌊pos⌋+2 does not exist), frac is 0
-    * and hi is coalesced to lo so the result is lo itself — the same
-    * answer quantile_cont gives.
+  /** Equal-width buckets per value column in [[groupedQuantiles]]'s
+    * first pass. One more bucket holds NaN. */
+  private val QuantileBuckets = 4096
+
+  /** Exact interpolated quantiles per group, by two-pass bucket
+    * selection. Spark's `percentile` buffers a value→count map per group,
+    * and ranking every row needs a sort of the whole input; this form
+    * shuffles only a histogram and the rows of the few buckets that hold
+    * a target rank.
     *
-    * Multi-column form: the value columns are MELTED (`stack`) into
-    * (group, vc, v) rows, then COMPRESSED to the distinct-value
-    * distribution — groupBy(group, vc, v) with counts combines
-    * map-side, so the shuffle and the window sort carry one row per
-    * DISTINCT value, not one per input row (real measures compress
-    * hugely: 6M lineitem rows → ~50 distinct quantities and ~100k
-    * distinct prices per group). Ranks come back as cumulative-count
-    * ranges ([cum−cnt+1, cum] is the run of ranks value v occupies in
-    * the uncompressed ordering), and a target rank r picks the value
-    * whose range contains it. One scan of the source, one tiny sort,
-    * the same interpolated result. The round-8 per-row window form was
-    * 5 shuffles / 3 broadcasts and sorted every row twice; this is 3
-    * shuffles / 1 broadcast over the compressed domain.
-    * Null values are excluded per column, as quantile_cont does.
-    * Output: one row per group with one column per (name, q) pair
-    * across all specs. */
+    *  - Bounds: each value column, cast to double, gets
+    *    [[QuantileBuckets]] equal-width buckets between its least and
+    *    greatest value. They come from parquet footers
+    *    ([[graft.sources.ParquetMeta.ranges]]) with no job, else from one
+    *    global min/max aggregate over the finite values. Every value is
+    *    clamped into the buckets and NaN gets its own bucket above +Inf,
+    *    where Spark orders it, so the bucket is monotone in the value
+    *    whatever the bounds: a wrong or stale bound costs speed, never
+    *    the answer.
+    *  - Pass 1: count, min and max per (group, column, bucket). A window
+    *    over those rows, at most groups × columns × (buckets + 1), gives
+    *    each bucket its rank range and each (group, column) its non-null
+    *    count n. A quantile q needs ranks ⌊pos⌋+1 and ⌊pos⌋+2 with
+    *    pos = q·(n−1); the buckets holding them are picked. A picked
+    *    bucket whose min equals its max already gives its value.
+    *  - Pass 2: the other picked buckets travel as one broadcast join
+    *    (unique per key, so it keeps a row at most once, as a semi-join
+    *    does, and brings the bucket's first rank along). Only their rows
+    *    are compressed to (value, count) and ranked within the bucket.
+    *  - The result interpolates lo + (hi − lo)·(pos − ⌊pos⌋), the formula
+    *    of `quantile_cont`, and gives lo itself when pos is a rank (every
+    *    single-row group included, where rank ⌊pos⌋+2 does not exist).
+    *
+    * Null values are excluded per column, as `quantile_cont` does. Every
+    * group of the input yields one row, a NULL group key included, with
+    * one column per (name, q) pair across all specs; a group whose values
+    * are all null gets NULL quantiles. */
   def groupedQuantiles(df: DataFrame, groupCol: String,
       specs: Seq[(String, Seq[(String, Double)])]): DataFrame = {
     require(specs.nonEmpty && specs.flatMap(_._2).nonEmpty, "no quantiles requested")
-    require(!Set("vc", "v", "cnt", "cum", "first", "n").contains(groupCol),
-      s"groupCol '$groupCol' collides with an internal column name")
     val names = specs.flatMap(_._2.map(_._1))
     require(names.distinct.size == names.size,
       s"duplicate quantile output names: ${names.diff(names.distinct).distinct.mkString(", ")}")
     specs.flatMap(_._2.map(_._2)).foreach(q =>
       require(q >= 0.0 && q <= 1.0, s"quantile q must be in [0, 1], got $q"))
-    val stackSql = specs.map { case (c, _) => s"'$c', cast(`$c` as double)" }
-      .mkString(s"stack(${specs.size}, ", ", ", ") as (vc, v)")
-    val melted = df.selectExpr(s"`$groupCol`", stackSql)
-      .filter(col("v").isNotNull)
-    val compressed = melted.groupBy(col(groupCol), col("vc"), col("v"))
-      .agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy(col(groupCol), col("vc")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // the per-(group, vc) total `n` rides a whole-partition window frame
-    // over the SAME partitioning as the cumulative rank — the separate
-    // counts aggregation + broadcast join it replaces re-computed the
-    // whole melt+aggregate subtree a second time (one extra corpus scan,
-    // one extra exchange, one broadcast build); the window sum of the
-    // same `cnt` longs is the identical exact value
-    val wAll = Window.partitionBy(col(groupCol), col("vc"))
-    var ranked = compressed
-      .withColumn("cum", sum("cnt").over(w))
-      .withColumn("first", col("cum") - col("cnt") + 1)
-      .withColumn("n", sum("cnt").over(wAll))
-    val flat = specs.flatMap { case (c, qs) => qs.map { case (n, q) => (c, n, q) } }
-    for ((c, name, q) <- flat) {
-      ranked = ranked
-        .withColumn(s"pos_$name",
-          when(col("vc") === c, lit(q) * (col("n") - 1).cast("double")))
-        .withColumn(s"lo_$name", floor(col(s"pos_$name")))
+    val hinted = graft.sources.ParquetMeta.ranges(df, specs.map(_._1))
+    val missing = specs.indices.filter(hinted(_).isEmpty)
+    val measured = if (missing.isEmpty) Map.empty[Int, (Double, Double)] else {
+      def finite(i: Int) = {
+        val v = col(quote(specs(i)._1)).cast("double")
+        when(v >= -Double.MaxValue && v <= Double.MaxValue, v)
+      }
+      val row = df.select(missing.flatMap(i => Seq(min(finite(i)), max(finite(i)))): _*).head()
+      missing.zipWithIndex.map { case (i, k) =>
+        i -> (if (row.isNullAt(2 * k)) (0.0, 0.0) else (row.getDouble(2 * k), row.getDouble(2 * k + 1)))
+      }.toMap
     }
-    // pos/lo are null on other columns' rows, so every comparison below
-    // is false there — each spec only ever sees its own column's ranks
-    def holds(rank: Column): Column =
-      col("first") <= rank && rank <= col("cum")
-    val keep = flat.map { case (_, name, _) =>
-      holds(col(s"lo_$name") + 1) || holds(col(s"lo_$name") + 2)
-    }.reduce(_ || _)
-    val aggs = flat.map { case (_, name, _) =>
-      val vLo = max(when(holds(col(s"lo_$name") + 1), col("v")))
-      val vHi = max(when(holds(col(s"lo_$name") + 2), col("v")))
-      val frac = max(col(s"pos_$name") - col(s"lo_$name"))
-      (vLo + (coalesce(vHi, vLo) - vLo) * frac).as(name)
-    }
-    // every input group appears in the output — a group whose values
-    // are ALL null has no melted rows (they're filtered with the other
-    // nulls) but still yields a row of NULL quantiles, exactly as
-    // quantile_cont does; the quantile side is one row per group, so
-    // the join broadcasts
-    df.select(col(groupCol)).distinct()
-      .join(broadcast(ranked.filter(keep).groupBy(groupCol)
-        .agg(aggs.head, aggs.tail: _*)), Seq(groupCol), "left_outer")
+    val bounds = specs.indices.map(i => hinted(i).getOrElse(measured(i)))
+    groupedQuantiles(df, groupCol, specs, bounds)
   }
 
-  /** Single-column convenience over the melt form. */
+  /** [[groupedQuantiles]] with the bucket bounds given, one (least,
+    * greatest) pair per spec. */
+  private[ops] def groupedQuantiles(df: DataFrame, groupCol: String,
+      specs: Seq[(String, Seq[(String, Double)])], bounds: Seq[(Double, Double)]): DataFrame = {
+    require(bounds.size == specs.size, s"${bounds.size} bounds for ${specs.size} specs")
+    val nb = QuantileBuckets
+    def bucket(v: Column, lo: Double, hi: Double): Column = {
+      val (base, width) =
+        if (lo.isFinite && hi.isFinite && hi > lo) (lo, hi / nb - lo / nb)
+        else (if (lo.isFinite) lo else 0.0, 1.0)
+      // greatest and least skip a null, so a null value is kept null first
+      when(v.isNaN, lit(nb)).when(v.isNotNull,
+        floor(least(greatest((v - base) / width, lit(0.0)), lit(nb - 1.0))).cast("int"))
+    }
+    // (group, column index, value, bucket); a null value keeps a null
+    // bucket, so an all-null group still reaches the histogram
+    val rows = df.select(col(quote(groupCol)).as("_g"), explode(array(
+        specs.zip(bounds).zipWithIndex.map { case (((c, _), (lo, hi)), i) =>
+          val v = col(quote(c)).cast("double")
+          struct(lit(i).as("vc"), v.as("v"), bucket(v, lo, hi).as("b"))
+        }: _*)).as("_e"))
+      .select(col("_g"), col("_e.vc").as("_vc"), col("_e.v").as("_v"), col("_e.b").as("_b"))
+    val perColumn = Window.partitionBy(col("_g"), col("_vc"))
+    val hist = rows.groupBy(col("_g"), col("_vc"), col("_b"))
+      .agg(count(col("_v")).as("_cnt"), min(col("_v")).as("_min"), max(col("_v")).as("_max"))
+      .withColumn("_cum", sum(col("_cnt")).over(perColumn.orderBy(col("_b"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("_first", col("_cum") - col("_cnt") + 1)
+      .withColumn("_n", sum(col("_cnt")).over(perColumn))
+    val flat = specs.zipWithIndex.flatMap { case ((_, qs), i) =>
+      qs.map { case (name, q) => (i, name, q) } }
+    def pos(q: Double): Column = lit(q) * (col("_n") - 1).cast("double")
+    def holds(rank: Column): Column = col("_first") <= rank && rank <= col("_cum")
+    // the buckets holding a target rank, and each column's null bucket
+    // (its count is 0, so it holds no rank, but it keeps the group)
+    val picked = hist.filter(col("_b").isNull || flat.map { case (i, _, q) =>
+      col("_vc") === i && (holds(floor(pos(q)) + 1) || holds(floor(pos(q)) + 2))
+    }.reduce(_ || _))
+    val known = picked.filter(col("_b").isNull || col("_min") === col("_max"))
+      .select(col("_g"), col("_vc"), col("_first"), col("_cum"), col("_n"), col("_min").as("_v"))
+    val open = picked.filter(!(col("_min") === col("_max")))
+      .select(col("_g").as("_pg"), col("_vc").as("_pvc"), col("_b").as("_pb"),
+        col("_first").as("_base"), col("_n"))
+    // the join keys are the two ints, which the hash join packs into one
+    // long; the group, of any type, is compared only on the rows of a
+    // picked (column, bucket), null-safe but in a form the planner does
+    // not turn into a key (a string key cost the probe 1.5 CPU-s at sf1)
+    val ranked = rows.join(broadcast(open), col("_vc") === col("_pvc") &&
+        col("_b") === col("_pb") &&
+        coalesce(col("_g") === col("_pg"), col("_g").isNull && col("_pg").isNull))
+      .groupBy(col("_g"), col("_vc"), col("_b"), col("_base"), col("_n"), col("_v"))
+      .agg(count(lit(1)).as("_cnt"))
+      .withColumn("_cum", col("_base") - 1 + sum(col("_cnt")).over(
+        Window.partitionBy(col("_g"), col("_vc"), col("_b")).orderBy(col("_v"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .select(col("_g"), col("_vc"), (col("_cum") - col("_cnt") + 1).as("_first"),
+        col("_cum"), col("_n"), col("_v"))
+    val aggs = flat.map { case (i, name, q) =>
+      val mine = col("_vc") === i
+      val lo = floor(pos(q))
+      val vLo = max(when(mine && holds(lo + 1), col("_v")))
+      val vHi = max(when(mine && holds(lo + 2), col("_v")))
+      val frac = max(when(mine, pos(q) - lo))
+      when(frac === 0.0, vLo).otherwise(vLo + (coalesce(vHi, vLo) - vLo) * frac).as(name)
+    }
+    known.unionByName(ranked).groupBy(col("_g").as(groupCol)).agg(aggs.head, aggs.tail: _*)
+  }
+
+  private def quote(name: String): String = s"`${name.replace("`", "``")}`"
+
+  /** Single-column convenience over [[groupedQuantiles]]. */
   def groupedQuantiles(df: DataFrame, groupCol: String, valueCol: String,
       qs: Seq[(String, Double)]): DataFrame =
     groupedQuantiles(df, groupCol, Seq(valueCol -> qs))
@@ -648,10 +690,10 @@ object Extended {
         .stripMargin)
     },
 
-    // exact percentiles (interpolated), grouped — the distributed
-    // melt + window-rank form (ONE lineitem scan, ONE sort shuffle for
-    // both value columns); see [[groupedQuantiles]] for the scale
-    // story. Outputs are rounded at scale 6 on BOTH sides: the true
+    // exact percentiles (interpolated), grouped — two-pass bucket
+    // selection with bounds from the lineitem footers: a histogram, then
+    // only the rows of the picked buckets (see [[groupedQuantiles]]).
+    // Outputs are rounded at scale 6 on BOTH sides: the true
     // values carry ≤4 decimals (2-decimal measures × {0,.1,.25,.5,
     // .75,.9} fracs), so rounding never lands on a tie and erases the
     // last-ulp drift between our lo+(hi−lo)·frac and DuckDB's

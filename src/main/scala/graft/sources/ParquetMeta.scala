@@ -3,9 +3,10 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 import org.apache.hadoop.fs.FileStatus
-import org.apache.parquet.column.statistics.{IntStatistics, LongStatistics, Statistics}
+import org.apache.parquet.column.statistics.{DoubleStatistics, FloatStatistics, IntStatistics,
+  LongStatistics, Statistics}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.metadata.{ColumnPath, ParquetMetadata}
+import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData, ColumnPath, ParquetMetadata}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation,
   IntLogicalTypeAnnotation, StringLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, BOOLEAN, DOUBLE, FLOAT,
@@ -125,6 +126,47 @@ object ParquetMeta {
            catch { case NonFatal(_) => None }
       m <- s.max
     } yield m.map(v => SQLConf.withExistingConf(conf)(CatalystTypeConverters.convertToScala(v, attr.dataType)))
+  }
+
+  /** The least and greatest value footers record for each numeric column
+    * of `columns` of `df`, as doubles, with no Spark job, reading each
+    * footer once. A hint for bucket bounds, never an answer: a double's
+    * statistics leave NaN out. None for a column that is not an integral
+    * or floating column of the relation under projections ([[column]]),
+    * when the relation reads more than [[MaxFiles]] files or a footer
+    * cannot be read, when a chunk holding values carries no min and max,
+    * or when no row holds a value. */
+  def ranges(df: DataFrame, columns: Seq[String]): Seq[Option[(Double, Double)]] = {
+    val plan = df.queryExecution.analyzed
+    val resolver = df.sparkSession.sessionState.conf.resolver
+    lazy val read = for {
+      fs <- relation(plan)
+      files = scanned(fs) if files.size <= MaxFiles
+      read <- try Some(footers(fs, files)) catch { case NonFatal(_) => None }
+    } yield read.flatMap(_._2.getBlocks.asScala)
+    def chunk(c: ColumnChunkMetaData): Option[Option[(Double, Double)]] =
+      Option(c.getStatistics: Statistics[_]).collect {
+        case s: DoubleStatistics if s.hasNonNullValue => Some((s.getMin, s.getMax))
+        case s: FloatStatistics if s.hasNonNullValue => Some((s.getMin.toDouble, s.getMax.toDouble))
+        case s: IntStatistics if s.hasNonNullValue => Some((s.getMin.toDouble, s.getMax.toDouble))
+        case s: LongStatistics if s.hasNonNullValue => Some((s.getMin.toDouble, s.getMax.toDouble))
+        case s if s.isNumNullsSet && s.getNumNulls == c.getValueCount => None   // nulls only
+      }
+    columns.map { c =>
+      for {
+        out <- Some(plan.output.filter(a => resolver(a.name, c))).collect { case Seq(a) => a }
+        attr <- column(plan, out) if (attr.dataType match {
+          case _: DecimalType => false   // stored unscaled
+          case _: NumericType => true
+          case _ => false
+        })
+        blocks <- read
+        path = ColumnPath.get(attr.name)
+        chunks = blocks.map(_.getColumns.asScala.find(_.getPath == path).flatMap(chunk))
+        if !chunks.contains(None)
+        rs = chunks.flatten.flatten if rs.nonEmpty
+      } yield (rs.map(_._1).min, rs.map(_._2).max)
+    }
   }
 
   /** The rows of the files of `footers`. */

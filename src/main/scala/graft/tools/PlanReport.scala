@@ -105,7 +105,9 @@ object PlanReport {
          |`sbt "runMain graft.tools.PlanReport"`). Columns: shuffle exchanges
          |(hash + range partitioning), broadcast exchanges, any non-empty
          |pushed scan filters, pruned read schema (fewer than 12 columns).
-         |Iterative operators (q101) report their final-output plan; their
+         |Connected components (q101 and the queries composed on it) label
+         |a graph of at most 64k edge rows on the driver, so here they
+         |report the plan over that local result; the distributed loop's
          |per-round shuffles are described in the operator Scaladoc. Queries
          |that materialize a shared subtree as a checkpoint leaf (q126: the
          |tf-idf weight table; q149: the hashed embedding table; q150: the

@@ -634,13 +634,14 @@ class DedupSpec extends SparkSpec {
   test("connectedComponents: 120-vertex chain forces multi-generation convergence") {
     // a single path 1-2-3-…-120: diameter 119, so the min label must
     // travel the whole chain through several double-jump+neighbor-min
-    // generations — the convergence loop itself is under test (a
-    // one-generation bug would still pass the short fixtures above).
+    // generations — the distributed convergence loop itself is under
+    // test (a one-generation bug would still pass the short fixtures
+    // above, which the driver path labels).
     // Worst label-ordering: ascending ids, min at one END of the path.
     val n = 120
     val pairs = (1 until n).map(i => (i.toLong, (i + 1).toLong))
       .toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(pairs, "id_a", "id_b")
+    val got = Dedup.connectedComponentsDistributed(pairs, "id_a", "id_b")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.length == n)
     assert(got.forall(_._2 == 1L), s"unmerged labels: ${got.filter(_._2 != 1L).take(5).toSeq}")
@@ -650,9 +651,71 @@ class DedupSpec extends SparkSpec {
     val pairs2 = new scala.util.Random(42).shuffle(
       (1 until n).map(i => ((n - i + 1).toLong, (n - i).toLong)).toList)
       .toDF("id_a", "id_b")
-    val got2 = Dedup.connectedComponents(pairs2, "id_a", "id_b")
+    val got2 = Dedup.connectedComponentsDistributed(pairs2, "id_a", "id_b")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got2.forall(_._2 == 1L))
+  }
+
+  test("connectedComponents: the loop failing to reach its fixpoint throws") {
+    val pairs = (1 until 120).map(i => (i.toLong, (i + 1).toLong)).toDF("id_a", "id_b")
+    val ex = intercept[IllegalStateException] {
+      Dedup.connectedComponentsDistributed(pairs, "id_a", "id_b", maxIter = 1)
+    }
+    assert(ex.getMessage.contains("maxIter=1"))
+  }
+
+  test("connectedComponents: a null id fails naming its column, on both paths") {
+    val pairs = Seq((Some(1L), None), (Some(2L), Some(3L)), (Some(3L), Some(4L)))
+      .toDF("id_a", "id_b")
+    val driver = intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(pairs, "id_a", "id_b")
+    }
+    assert(driver.getMessage.contains("'id_b'"), driver.getMessage)
+    val loop = intercept[IllegalArgumentException] {
+      Dedup.connectedComponentsDistributed(pairs.select($"id_b".as("id_a"), $"id_a".as("id_b")),
+        "id_a", "id_b")
+    }
+    assert(loop.getMessage.contains("'id_a'"), loop.getMessage)
+  }
+
+  test("connectedComponents: driver and distributed paths give identical rows and schema") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+        .sortBy(_._1).toSeq
+    def same(pairs: org.apache.spark.sql.DataFrame, driver: Boolean): Unit = {
+      val got = Dedup.connectedComponents(pairs, "id_a", "id_b")
+      assert(got.queryExecution.logical.isInstanceOf[LocalRelation] == driver)
+      val want = Dedup.connectedComponentsDistributed(pairs, "id_a", "id_b")
+      assert(got.schema == want.schema, s"${got.schema} vs ${want.schema}")
+      assert(rows(got) == rows(want))
+    }
+    val rnd = new scala.util.Random(3)
+    // random graphs: sparse (many small clusters) and dense (few large)
+    for (n <- Seq(50, 400); m <- Seq(n / 2, 2 * n)) {
+      val pairs = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)).toDF("id_a", "id_b")
+      same(pairs, driver = true)
+    }
+    same(Seq.empty[(Long, Long)].toDF("id_a", "id_b"), driver = true)
+    // chains, ascending and shuffled descending, and nullable id columns
+    same((1 until 60).map(i => (i.toLong, (i + 1).toLong)).toDF("id_a", "id_b"), driver = true)
+    same(rnd.shuffle((1 until 60).map(i => (Option(61L - i), Option(60L - i))))
+      .toDF("id_a", "id_b"), driver = true)
+    // at the edge budget the driver labels; one edge row more, the loop.
+    // k disjoint pairs are 4k edge rows (both directions, two self-loops);
+    // a pair (x, x) of a new id adds one
+    val budget = Dedup.CcDriverMaxEdges
+    val k = budget / 4
+    val atBudget = (0L until k).map(i => (2 * i, 2 * i + 1)).toDF("id_a", "id_b")
+    same(atBudget, driver = true)
+    same(atBudget.union(Seq((2 * k, 2 * k)).toDF("id_a", "id_b")), driver = false)
+  }
+
+  test("q179 runs at most 30 Spark jobs") {
+    val (rows, jobs) = graft.pipeline.JobCount(spark, "q179-jobs")(
+      graft.SparkEntry.queries("q179_incremental_components_delta")(spark, sf("sf0.1")).collect())
+    assert(rows.length == 370)
+    assert(jobs <= 30, s"$jobs jobs")
   }
 
   test("duplicateSpans: first occurrence survives, overlapping windows merge, short repeats ignored") {

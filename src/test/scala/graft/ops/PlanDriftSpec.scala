@@ -12,12 +12,13 @@ import graft.tools.PlanReport.PlanMetrics
   * Metrics come from [[PlanReport.metrics]] — the same extractor that
   * generates PLANS.md — so guard and report cannot disagree. Plans are
   * built, not run through the sink (shape is size-independent) — except
-  * the iterative operators (q101/q123), whose CONSTRUCTION executes the
-  * label-propagation rounds at sf0.001 and whose pinned metrics cover
-  * the final labels⋈sizes output plan only (the per-round shape is
-  * documented in the connectedComponents Scaladoc, not measurable from
-  * a single plan string). After an intentional plan change, regenerate
-  * PLANS.md and update the row here with it. */
+  * connected components (q101/q123 and their compositions), whose
+  * CONSTRUCTION runs the edge-list job and, at sf0.001, labels the graph
+  * on the driver, so their pinned metrics cover the plan over that local
+  * result (the distributed loop's per-round shape is documented in the
+  * connectedComponents Scaladoc, not measurable from a single plan
+  * string). After an intentional plan change, regenerate PLANS.md and
+  * update the row here with it. */
 class PlanDriftSpec extends SparkSpec {
 
   // (query, shuffles, broadcasts, pushedFilters, prunedSchema) — the
@@ -35,15 +36,6 @@ class PlanDriftSpec extends SparkSpec {
     "q53_minhash_lsh_pairs"   -> PlanMetrics(9, 5, pushedFilters = true,  prunedSchema = true),
     "q58_exact_corr"          -> PlanMetrics(2, 0, pushedFilters = false, prunedSchema = true),
     "q65_ann_ivf_topk"        -> PlanMetrics(3, 2, pushedFilters = true,  prunedSchema = true),
-    // 7/2 since the round-9 compressed-distribution rewrite (+ the
-    // group-completeness distinct/left-join, so all-null groups keep
-    // their row): melt +
-    // distinct-value hash agg (map-side combining), cum-count window
-    // over the COMPRESSED domain, per-(group,vc) counts off the same
-    // subtree (its exchanges count twice in the plan text, reused at
-    // runtime), final agg + output sort. Sort volume is bounded by the
-    // distinct-value domain, not the row count — sf0.1→sf1 measured
-    // ratio dropped 5.1× → 1.7× (BASELINE.md round-9 soak).
     // sf1-soak cost centers (BASELINE round 9): the LSH pair scans and
     // the multimodal codec boundary — pinned so a lost broadcast or an
     // extra exchange on these can't hide inside their already-heavy cost
@@ -56,15 +48,19 @@ class PlanDriftSpec extends SparkSpec {
     // keeps the 1/1 shape (same geometry and oracle as q143)
     "q67_cosine_rewrite"      -> PlanMetrics(1, 1, pushedFilters = true,  prunedSchema = true),
     "q70_multimodal_meta"     -> PlanMetrics(1, 0, pushedFilters = false, prunedSchema = true),
-    // r14 optimization: the per-(group, vc) total rides the rank
-    // window's partitioning (no second melt aggregation, no broadcast)
-    "q85_percentiles"         -> PlanMetrics(5, 1, pushedFilters = true,  prunedSchema = true),
+    // two-pass bucket selection: the histogram's aggregate and rank
+    // window (each counted once per consumer in the plan text, reused at
+    // runtime), pass 2's aggregate and in-bucket window, the final
+    // aggregate and output sort; the picked buckets are the broadcast.
+    // Both scans read every row, so no filter is pushed
+    "q85_percentiles"         -> PlanMetrics(8, 1, pushedFilters = false, prunedSchema = true),
     "q86_approx_percentiles"  -> PlanMetrics(3, 1, pushedFilters = true,  prunedSchema = true),
     "q87_json_extract"        -> PlanMetrics(1, 0, pushedFilters = false, prunedSchema = true),
     "q96_asof_presplit"       -> PlanMetrics(6, 0, pushedFilters = false, prunedSchema = true),
     "q98_decontaminate"       -> PlanMetrics(3, 2, pushedFilters = true,  prunedSchema = true),
-    "q101_dedup_clusters"     -> PlanMetrics(3, 0, pushedFilters = true,  prunedSchema = true),
-    "q123_embedding_clusters" -> PlanMetrics(3, 0, pushedFilters = true,  prunedSchema = true),
+    // components labelled on the driver: only the output sort is left
+    "q101_dedup_clusters"     -> PlanMetrics(1, 0, pushedFilters = true,  prunedSchema = true),
+    "q123_embedding_clusters" -> PlanMetrics(1, 0, pushedFilters = true,  prunedSchema = true),
     // 4/3 since round 10 (was 16/7): the tf-idf weight table is
     // materialized ONCE (localCheckpoint leaf) instead of re-planning
     // the tokenize→tf→df chain for all three consumers (norms + both
@@ -113,16 +109,13 @@ class PlanDriftSpec extends SparkSpec {
     // the corpus contributes ONE exploded scan and no shuffle
     "q164_ann_lsh_multitable" -> PlanMetrics(3, 1, pushedFilters = true, prunedSchema = true),
     // sharded pairs → closure (r12): the pass-joins' exchanges live in
-    // the per-round jobs (q159's shape); the final plan is the
-    // labels⋈sizes output — pair distinct + component agg + output sort.
-    // At sf0.001 every pass side broadcasts inside the rounds, so the
-    // FINAL plan carries 0 BroadcastExchange (components' last join is
-    // a shuffle join on the label key).
-    "q167_dedup_clusters_wide_sharded" -> PlanMetrics(3, 0, pushedFilters = true, prunedSchema = true),
+    // the edge-list checkpoint job (q159's shape); at sf0.001 the graph
+    // is labelled on the driver, so the final plan is the output sort
+    // over that local result
+    "q167_dedup_clusters_wide_sharded" -> PlanMetrics(1, 0, pushedFilters = true, prunedSchema = true),
     // incremental clusters (r12): q167's output shape — the pass-joins
-    // and the standing-table build execute inside checkpoint leaves;
-    // the final plan is pair distinct + component agg + output sort
-    "q170_incremental_components" -> PlanMetrics(3, 0, pushedFilters = true, prunedSchema = true),
+    // and the standing-table build execute inside checkpoint leaves
+    "q170_incremental_components" -> PlanMetrics(1, 0, pushedFilters = true, prunedSchema = true),
     // the ladder queries (r13 collapse, r14 hygiene): ONE candidate
     // pass feeds each exact pair's first-qualifying step, the whole
     // ladder is one grouped aggregation (recallLadderAgg), and since

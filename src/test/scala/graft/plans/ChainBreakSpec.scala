@@ -17,7 +17,7 @@ import org.apache.spark.sql.graft.GraftBridge
   * over a 30k-row label table; 35 of the query's 53 s). These tests pin
   * the mechanism, not the timing: the captured stat compounds across
   * generations, and dropOriginStats resets the leaf to the session
-  * default so it CANNOT compound. connectedComponents' generation loop
+  * default so it CANNOT compound. connectedComponents' distributed loop
   * applies the break every round (Dedup.materializeGen). */
 class ChainBreakSpec extends SparkSpec {
   import org.apache.spark.sql.DataFrame
@@ -68,5 +68,22 @@ class ChainBreakSpec extends SparkSpec {
     // still a leaf over the SAME rdd — no recompute, no codec round-trip
     assert(broken.queryExecution.logical.isInstanceOf[
       org.apache.spark.sql.execution.LogicalRDD])
+  }
+
+  test("the distributed connectedComponents loop leaves default-stat generations") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.LogicalRDD
+    val pairs = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val out = graft.dedup.Dedup.connectedComponentsDistributed(pairs, "id_a", "id_b")
+    val default = BigInt(spark.conf.get("spark.sql.defaultSizeInBytes",
+      Long.MaxValue.toString))
+    // the output reads the last generation's leaf, once per side of the
+    // labels ⋈ sizes join; a leaf that kept its origin stats would report
+    // a product of its generations' sizes
+    val leaves = out.queryExecution.logical.collectLeaves()
+    assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[LogicalRDD]))
+    assert(leaves.forall(_.stats.sizeInBytes == default),
+      leaves.map(_.stats.sizeInBytes).mkString(", "))
+    assert(out.collect().forall(r => r.getLong(1) == 1L && r.getLong(2) == 40L))
   }
 }

@@ -285,8 +285,11 @@ class EventsStreamSpec extends SparkSpec {
     def standing() = spark.read.parquet(s"$state/clusters")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getBoolean(3))).sortBy(_._1).toSeq
+    // the reference runs the distributed loop; the sink's folds label on
+    // the driver at this size, so the two paths are checked against each
+    // other
     def batchCC(d: org.apache.spark.sql.DataFrame) =
-      graft.dedup.Dedup.connectedComponents(
+      graft.dedup.Dedup.connectedComponentsDistributed(
         graft.dedup.Dedup.simHashNearDups(d, "text", "doc_id", maxHamming = 2),
         "id_a", "id_b")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -329,7 +332,7 @@ class EventsStreamSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getBoolean(3))).sortBy(_._1).toSeq
     def batchWideCC(d: org.apache.spark.sql.DataFrame) =
-      graft.dedup.Dedup.connectedComponents(
+      graft.dedup.Dedup.connectedComponentsDistributed(
         graft.dedup.Dedup.simHashWideNearDups(d, "text", "doc_id",
           maxHamming = 2), "id_a", "id_b")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
