@@ -491,7 +491,7 @@ object Extended {
     // the join keys are the two ints, which the hash join packs into one
     // long; the group, of any type, is compared only on the rows of a
     // picked (column, bucket), null-safe but in a form the planner does
-    // not turn into a key (a string key cost the probe 1.5 CPU-s at sf1)
+    // not turn into a key (as a string key it cost the sf1 probe 2.3 CPU-s)
     val ranked = rows.join(broadcast(open), col("_vc") === col("_pvc") &&
         col("_b") === col("_pb") &&
         coalesce(col("_g") === col("_pg"), col("_g").isNull && col("_pg").isNull))
